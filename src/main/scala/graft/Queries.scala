@@ -10231,7 +10231,7 @@ object Queries {
   private def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
     val emb = t(s, dir, "embeddings")
     val path = "target/qidx/ivfpq_v2_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    if (Similarity.ivfCommittedBatches(s, path).isEmpty)
+    if (graft.store.CommitLog(s, path).read().committed.isEmpty)
       Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", path,
         nCells = 8, m = 16, ksub = 16, iters = 2)
     path

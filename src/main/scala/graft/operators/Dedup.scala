@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.store.CommitLog
+
 /** Deduplication operators for training-data pipelines (SURVEY §7 M9):
   * exact, MinHash+LSH, SimHash, and exact n-gram Jaccard.
   *
@@ -540,49 +542,9 @@ object Dedup {
   // docs against a standing index and append them to it.
   // ------------------------------------------------------------------
 
-  private def indexFs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** All commit markers: name → the batch ids this marker SUPERSEDES
-    * (empty for ordinary batches; a compaction's consolidated batch
-    * lists the batches it replaced — see [[compactMinhashIndex]]). */
-  private def indexMarkers(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Map[String, Seq[String]] = {
-    val fs = indexFs(spark, path)
-    val d = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    if (!fs.exists(d)) Map.empty
-    else fs.listStatus(d).filter(_.isFile).map { st =>
-      val name = st.getPath.getName
-      // only compactor markers (c*) carry bodies; skipping the open for
-      // ordinary appends keeps probes at one listing + #compactions reads
-      val body =
-        if (!name.startsWith("c")) ""
-        else {
-          val in = fs.open(st.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        }
-      name -> body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    }.toMap
-  }
-
-  /** Batch ids whose index writes are COMMITTED and not superseded by a
-    * later compaction (marker file present in `_commits/`, id absent
-    * from every marker's superseded list). Everything else under the
-    * index root is invisible to readers — a crash between table writes
-    * leaves no torn state, and a crash between a compaction's commit and
-    * its garbage collection leaves no double counting. */
-  def committedBatches(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Seq[String] = {
-    val markers = indexMarkers(spark, path)
-    val superseded = markers.values.flatten.toSet
-    markers.keys.filterNot(superseded).toSeq
-  }
-
   /** Read one index table (`bands`/`postings`/`sizes`), restricted to
     * committed batches. Pre-batch-layout indexes (no `batch` partition
-    * column, no `_commits/`) read as-is. The committed filter references
+    * column, no commit log) read as-is. The committed filter references
     * the `batch` partition column only → uncommitted batch directories
     * are pruned at the listing, never scanned. */
   private def readIndexTable(spark: org.apache.spark.sql.SparkSession,
@@ -590,7 +552,7 @@ object Dedup {
     val df = spark.read.parquet(s"$path/$table")
     if (!df.columns.contains("batch")) df // legacy flat layout
     else {
-      val committed = committedBatches(spark, path)
+      val committed = CommitLog(spark, path).read().committed
       df.filter(col("batch").cast("string").isin(committed: _*)).drop("batch")
     }
   }
@@ -606,72 +568,44 @@ object Dedup {
     *
     * GROWTH IS ATOMIC AND IDEMPOTENT per batch: each write lands under
     * `batch=<batchId>` subdirectories of all three tables and becomes
-    * visible only when the `_commits/<batchId>` marker is created (one
-    * atomic file-create = the commit point). Readers (see
+    * visible only when its [[CommitLog]] marker is created (one atomic
+    * file-create = the commit point). Readers (see
     * [[nearDupAgainstIndex]]) filter to committed batches, so a crash
     * between the three table writes exposes nothing, and a RETRIED batch
     * (at-least-once `foreachBatch` delivery) is a no-op skip instead of a
     * double-append — duplicated sizes/postings rows would otherwise
-    * inflate every overlap and jaccard the probe computes. Single writer
-    * assumed (a streaming query's batches are serialized); ids must be
+    * inflate every overlap and jaccard the probe computes. Ids must be
     * `[A-Za-z0-9_-]+`. `mode=overwrite` clears the index first;
     * `mode=append` adds one batch. An empty `batchId` auto-assigns
     * (max numeric committed id + 1) — fine for ad-hoc batch use, but an
     * at-least-once loop must pass its OWN stable batch id (e.g. the
     * foreachBatch batch id) or replays append as fresh batches.
     * Returns true if the batch was written, false if it was already
-    * committed (idempotent skip). */
+    * committed (idempotent skip, or another writer won the commit). */
   def writeMinhashIndex(df: DataFrame, textCol: String, idCol: String,
                         path: String, shingleN: Int = 3, k: Int = 64,
                         bands: Int = 16, mode: String = "overwrite",
                         batchId: String = ""): Boolean = {
-    val spark = df.sparkSession
-    val fs = indexFs(spark, path)
+    val log = CommitLog(df.sparkSession, path)
     if (mode == "overwrite")
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val markers = indexMarkers(spark, path)
-    val bid =
-      if (batchId.nonEmpty) batchId
-      // auto ids count over ALL marker names AND superseded ids — a
-      // compacted-away id must never be reused, its content already
-      // lives inside the consolidated batch (and reusing it would skip
-      // as a "replay")
-      else ((markers.keys ++ markers.values.flatten)
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .maxOption.getOrElse(-1L) + 1L).toString
-    require(bid.matches("[A-Za-z0-9_-]+"), s"unsafe index batch id: $bid")
-    // the c prefix is the compactor's namespace: its orphan sweep deletes
-    // any uncommitted c* directory, which must never be a live append
-    require(!bid.startsWith("c"),
-      s"batch ids starting with 'c' are reserved for the compactor: $bid")
-    if (markers.contains(bid) || markers.values.exists(_.contains(bid))) {
-      // committed, or committed-then-consolidated by a compaction —
-      // either way this batch's rows are in the index already
-      System.err.println(s"[dedup] index batch $bid already committed at $path — skipping (replay)")
-      return false
+      log.fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    log.append(batchId, Seq("bands", "postings", "sizes")) { bid =>
+      val arrs = shingleHashArrays(df, textCol, idCol, shingleN)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val sigs = minhashSignaturesFromHashRows(
+          arrs.select(col("id"), explode(col("hs")).as("h")), k)
+        sigs.select(col("id"),
+            posexplode(lshBandKeys(col("sig"), bands, k / bands)).as(Seq("band", "key")))
+          .repartition(col("band"))
+          .sortWithinPartitions("band", "key")
+          .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands/batch=$bid")
+        arrs.select(col("id"), explode(col("hs")).as("h"))
+          .write.mode("overwrite").parquet(s"$path/postings/batch=$bid")
+        arrs.select(col("id"), col("n"))
+          .write.mode("overwrite").parquet(s"$path/sizes/batch=$bid")
+      } finally arrs.unpersist()
     }
-    // clear partial leftovers of a crashed earlier attempt at this batch
-    Seq("bands", "postings", "sizes").foreach(t =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$bid"), true))
-    val arrs = shingleHashArrays(df, textCol, idCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sigs = minhashSignaturesFromHashRows(
-        arrs.select(col("id"), explode(col("hs")).as("h")), k)
-      sigs.select(col("id"),
-          posexplode(lshBandKeys(col("sig"), bands, k / bands)).as(Seq("band", "key")))
-        .repartition(col("band"))
-        .sortWithinPartitions("band", "key")
-        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands/batch=$bid")
-      arrs.select(col("id"), explode(col("hs")).as("h"))
-        .write.mode("overwrite").parquet(s"$path/postings/batch=$bid")
-      arrs.select(col("id"), col("n"))
-        .write.mode("overwrite").parquet(s"$path/sizes/batch=$bid")
-      val cd = new org.apache.hadoop.fs.Path(s"$path/_commits")
-      fs.mkdirs(cd)
-      fs.create(new org.apache.hadoop.fs.Path(cd, bid), false).close()
-      true
-    } finally arrs.unpersist()
   }
 
   /** Compact the batch-keyed MinHash index: consolidate every committed
@@ -682,79 +616,28 @@ object Dedup {
     * global row-group pruning. Cadence this like `LakeWriter.compact`
     * (the index is just another streamed-into table).
     *
-    * Atomicity via the superseded list: the consolidated data lands
-    * under a fresh `batch=c<n>` (invisible — no marker), then its marker
-    * is created with the replaced batch ids as its BODY. Readers treat
-    * ids named in any marker body as superseded, so visibility flips at
-    * that single file-create: before it, old batches; after it, only the
-    * consolidated one — never both. Markers and data of the replaced
-    * batches are then garbage-collected; a crash before GC double-counts
-    * nothing, and the next compaction clears leftovers. Probe results
-    * are row-identical before and after. Safe alongside a live appender
-    * (a batch committed mid-compaction is simply not consolidated this
-    * round); only one compactor at a time. Returns the number of batches
-    * consolidated (0 = nothing to do). */
+    * Atomic through [[CommitLog.compact]]: the consolidated batch
+    * `c<n>` becomes visible and the replaced ones invisible at one marker
+    * create, so probe results are row-identical before and after. Safe
+    * alongside a live appender; one compactor at a time. Returns the
+    * number of batches consolidated (0 = nothing to do). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Int = {
-    val fs = indexFs(spark, path)
-    val markers = indexMarkers(spark, path)
-    val superseded = markers.values.flatten.toSet
-    val committed = markers.keys.filterNot(superseded).toSeq.sorted
-    val tables = Seq("bands", "postings", "sizes")
-    // resume a crashed GC: superseded ids are invisible already — their
-    // stale markers and data dirs are safe to clear whenever noticed
-    superseded.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      tables.foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$id"), true))
+                          path: String): Int =
+    CommitLog(spark, path).compact(Seq("bands", "postings", "sizes")) { (cid, committed) =>
+      val inScope = col("batch").cast("string").isin(committed: _*)
+      // bands keep their layout contract: band-partitioned directories,
+      // (band, key) sort within files for row-group pruning at probe time
+      spark.read.parquet(s"$path/bands").filter(inScope).drop("batch")
+        .repartition(col("band"))
+        .sortWithinPartitions("band", "key")
+        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands/batch=$cid")
+      spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
+        .repartition(col("id"))
+        .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
+      spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
     }
-    if (committed.size <= 1) return 0
-    // GC any orphaned compactor output from a crashed earlier run (data
-    // written, marker never created). Only compactor-owned ids (c*) are
-    // eligible: an appender's in-flight batch dir must not be touched
-    // (the c prefix is rejected in writeMinhashIndex's id validation).
-    for (t <- tables; p = new org.apache.hadoop.fs.Path(s"$path/$t") if fs.exists(p);
-         st <- fs.listStatus(p) if st.isDirectory) {
-      val name = st.getPath.getName // batch=<id>
-      val id = name.stripPrefix("batch=")
-      if (id.startsWith("c") && !markers.contains(id)) fs.delete(st.getPath, true)
-    }
-    val cid = "c" + ((markers.keys ++ markers.values.flatten)
-      .filter(_.startsWith("c"))
-      .flatMap(s => scala.util.Try(s.stripPrefix("c").toLong).toOption)
-      .maxOption.getOrElse(-1L) + 1L)
-    val inScope = col("batch").cast("string").isin(committed: _*)
-    // bands keep their layout contract: band-partitioned directories,
-    // (band, key) sort within files for row-group pruning at probe time
-    spark.read.parquet(s"$path/bands").filter(inScope).drop("batch")
-      .repartition(col("band"))
-      .sortWithinPartitions("band", "key")
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands/batch=$cid")
-    spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
-      .repartition(col("id"))
-      .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
-    spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
-    // THE commit point: one atomic file-create flips visibility from the
-    // old batches to the consolidated one. The superseded list is
-    // TRANSITIVE — it carries forward every id the consolidated batches
-    // themselves superseded (marker bodies are transitive by induction),
-    // or a second compaction would erase the only record of the first's
-    // replaced ids and their append replays would re-ingest
-    val supersedes =
-      (committed ++ committed.flatMap(markers.getOrElse(_, Seq.empty))).distinct
-    val cd = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val out = fs.create(new org.apache.hadoop.fs.Path(cd, cid), false)
-    try out.write(supersedes.mkString("\n").getBytes("UTF-8")) finally out.close()
-    // garbage collection — everything below is invisible already
-    committed.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      tables.foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$id"), true))
-    }
-    committed.size
-  }
 
   /** Near-dup pairs of a NEW batch against a persisted index — the
     * incremental form of [[minhashNearDupPairs]]: band keys of the batch
@@ -838,7 +721,7 @@ object Dedup {
     * positional filter gets its `j` for free. `sizes/` — `(id, n)`.
     *
     * Batch/commit lifecycle is [[writeMinhashIndex]]'s, verbatim:
-    * `batch=<id>` directories under each table, `_commits/<id>` marker
+    * `batch=<id>` directories under each table, a [[CommitLog]] marker
     * as the atomic commit point, replayed batch ids skip (returns
     * false), crashed partial writes are cleared on retry, and the `c*`
     * id namespace belongs to [[compactContainmentIndex]]. */
@@ -846,98 +729,46 @@ object Dedup {
                             path: String, shingleN: Int = 3,
                             mode: String = "overwrite",
                             batchId: String = ""): Boolean = {
-    val spark = df.sparkSession
-    val fs = indexFs(spark, path)
+    val log = CommitLog(df.sparkSession, path)
     if (mode == "overwrite")
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val markers = indexMarkers(spark, path)
-    val bid =
-      if (batchId.nonEmpty) batchId
-      else ((markers.keys ++ markers.values.flatten)
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .maxOption.getOrElse(-1L) + 1L).toString
-    require(bid.matches("[A-Za-z0-9_-]+"), s"unsafe index batch id: $bid")
-    require(!bid.startsWith("c"),
-      s"batch ids starting with 'c' are reserved for the compactor: $bid")
-    if (markers.contains(bid) || markers.values.exists(_.contains(bid))) {
-      System.err.println(s"[dedup] containment index batch $bid already committed at $path — skipping (replay)")
-      return false
+      log.fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    log.append(batchId, Seq("postings", "sizes")) { bid =>
+      val arrs = shingleHashArrays(df, textCol, idCol, shingleN)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // h-clustered, h-sorted files: the probe's candidate join is an
+        // equi-join on h, so row groups prune to the probe's shingles
+        arrs.select(col("id"), col("n"),
+            posexplode(col("hs")).as(Seq("j0", "h"))) // hs pre-sorted at source
+          .select(col("id"), (col("j0") + 1).as("j"), col("h"), col("n"))
+          .repartition(col("h"))
+          .sortWithinPartitions("h")
+          .write.mode("overwrite").parquet(s"$path/postings/batch=$bid")
+        arrs.select(col("id"), col("n"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$path/sizes/batch=$bid")
+      } finally arrs.unpersist()
     }
-    Seq("postings", "sizes").foreach(t =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$bid"), true))
-    val arrs = shingleHashArrays(df, textCol, idCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // h-clustered, h-sorted files: the probe's candidate join is an
-      // equi-join on h, so row groups prune to the probe's shingles
-      arrs.select(col("id"), col("n"),
-          posexplode(col("hs")).as(Seq("j0", "h"))) // hs pre-sorted at source
-        .select(col("id"), (col("j0") + 1).as("j"), col("h"), col("n"))
-        .repartition(col("h"))
-        .sortWithinPartitions("h")
-        .write.mode("overwrite").parquet(s"$path/postings/batch=$bid")
-      arrs.select(col("id"), col("n"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/sizes/batch=$bid")
-      val cd = new org.apache.hadoop.fs.Path(s"$path/_commits")
-      fs.mkdirs(cd)
-      fs.create(new org.apache.hadoop.fs.Path(cd, bid), false).close()
-      true
-    } finally arrs.unpersist()
   }
 
   /** Compact the batch-keyed containment index: consolidate every
-    * committed batch into ONE new batch per table. Protocol is
-    * [[compactMinhashIndex]]'s, verbatim (consolidated data lands under
-    * an invisible `batch=c<n>`, the marker's BODY lists the replaced
-    * ids transitively, visibility flips at the single marker create,
-    * then GC; crash-safe at every step; safe beside a live appender) —
-    * only the tables and their layout differ: `postings` keeps the
-    * h-clustered/h-sorted probe layout, `sizes` stays one file. Probe
+    * committed batch into ONE new batch per table, through
+    * [[CommitLog.compact]] like [[compactMinhashIndex]]. `postings` keeps
+    * the h-clustered/h-sorted probe layout, `sizes` stays one file. Probe
     * results are row-identical before and after. Returns the number of
     * batches consolidated (0 = nothing to do). */
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Int = {
-    val fs = indexFs(spark, path)
-    val markers = indexMarkers(spark, path)
-    val superseded = markers.values.flatten.toSet
-    val committed = markers.keys.filterNot(superseded).toSeq.sorted
-    val tables = Seq("postings", "sizes")
-    superseded.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      tables.foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$id"), true))
+                              path: String): Int =
+    CommitLog(spark, path).compact(Seq("postings", "sizes")) { (cid, committed) =>
+      val inScope = col("batch").cast("string").isin(committed: _*)
+      spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
+        .repartition(col("h"))
+        .sortWithinPartitions("h")
+        .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
+      spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
     }
-    if (committed.size <= 1) return 0
-    for (t <- tables; p = new org.apache.hadoop.fs.Path(s"$path/$t") if fs.exists(p);
-         st <- fs.listStatus(p) if st.isDirectory) {
-      val id = st.getPath.getName.stripPrefix("batch=")
-      if (id.startsWith("c") && !markers.contains(id)) fs.delete(st.getPath, true)
-    }
-    val cid = "c" + ((markers.keys ++ markers.values.flatten)
-      .filter(_.startsWith("c"))
-      .flatMap(s => scala.util.Try(s.stripPrefix("c").toLong).toOption)
-      .maxOption.getOrElse(-1L) + 1L)
-    val inScope = col("batch").cast("string").isin(committed: _*)
-    spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
-      .repartition(col("h"))
-      .sortWithinPartitions("h")
-      .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
-    spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
-    val supersedes =
-      (committed ++ committed.flatMap(markers.getOrElse(_, Seq.empty))).distinct
-    val cd = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val out = fs.create(new org.apache.hadoop.fs.Path(cd, cid), false)
-    try out.write(supersedes.mkString("\n").getBytes("UTF-8")) finally out.close()
-    committed.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      tables.foreach(t =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$t/batch=$id"), true))
-    }
-    committed.size
-  }
 
   /** Directed containment pairs BETWEEN a new batch and the persisted
     * index — the probe half of the incremental [[containmentJoin]].

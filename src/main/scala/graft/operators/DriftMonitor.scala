@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.CommitLog
+
 /** Streaming feature-drift monitor — the [[Relational.psiDrift]] PSI
   * scorecard turned into an ingest-time loop (the reference's scheduled
   * monitoring jobs poll batch tables; a 100 TB pipeline wants the drift
   * score maintained INCREMENTALLY as micro-batches land, without
   * rescanning history).
   *
-  * Index layout at `path` (the [[Dedup.writeMinhashIndex]] atomic-commit
-  * protocol, single writer assumed):
+  * Index layout at `path` (the [[CommitLog]] atomic-commit protocol):
   *   - `bounds/`  — per-key reference `(keys…, _mn, _mx)` bin anchors
   *   - `ref/`     — per-key reference bin counts `(keys…, bin, c_ref)`
   *   - `cur/batch=<id>/` — one micro-batch's bin counts `(keys…, bin, c_cur)`
@@ -30,28 +31,6 @@ import org.apache.spark.sql.functions._
   * [[driftPsi]] reads only the skinny count tables, never raw history. */
 object DriftMonitor {
 
-  private val IdPattern = "[A-Za-z0-9_-]+"
-
-  private def indexFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Batch ids whose writes are committed (marker present). */
-  def committedBatches(spark: SparkSession, path: String): Seq[String] = {
-    val fs = indexFs(spark, path)
-    val d = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isFile).map(_.getPath.getName).toSeq
-  }
-
-  private def commit(spark: SparkSession, path: String, id: String): Unit = {
-    val fs = indexFs(spark, path)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_commits"))
-    // one atomic create = the commit point
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"),
-      false).close()
-  }
-
   /** Anchor the monitor: per-key bin bounds + reference bin counts from
     * the fit-time slice (the scorecard convention — drift is measured
     * against where the model was fit). OVERWRITES `path`. Fails loudly
@@ -65,6 +44,7 @@ object DriftMonitor {
     require(keys.nonEmpty, "writeDriftReference needs the feature key(s)")
     require(bins > 0, s"bins must be positive, got $bins")
     val spark = df.sparkSession
+    val log = CommitLog(spark, path)
     val v = col(valueCol).cast("double")
     // persisted: the degenerate-reference check and the bounds write
     // both consume this key-sized aggregate — without the persist each
@@ -79,7 +59,7 @@ object DriftMonitor {
         s"writeDriftReference: degenerate reference slice (min == max) for " +
           s"key(s) ${degenerate.mkString(", ")} — bins cannot resolve drift " +
           "there; widen the reference window or exclude these keys")
-      indexFs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+      log.fs.delete(new org.apache.hadoop.fs.Path(path), true)
       bounds.write.parquet(s"$path/bounds")
     } finally bounds.unpersist()
     val anchored = spark.read.parquet(s"$path/bounds")
@@ -89,7 +69,7 @@ object DriftMonitor {
       .groupBy(keys.map(col) :+ bucket.as("bin"): _*)
       .agg(count(lit(1)).as("c_ref"))
       .write.parquet(s"$path/ref")
-    commit(spark, path, "ref")
+    log.commit("ref")
   }
 
   /** Count one micro-batch into the reference bins and commit the batch
@@ -97,13 +77,15 @@ object DriftMonitor {
     * `batchId` (at-least-once delivery replays skip instead of
     * double-counting); keys absent from the reference drop (nothing to
     * measure against — surface them upstream, the [[Relational.psiDrift]]
-    * contract). Returns true if written, false on a replay skip. */
+    * contract). Returns true if written, false on a replay skip or when
+    * another writer committed the id first. */
   def driftBatch(batch: DataFrame, keys: Seq[String], valueCol: String,
                  path: String, batchId: String, bins: Int = 10): Boolean = {
-    require(batchId.matches(IdPattern) && batchId != "ref",
-      s"batchId must match $IdPattern and not be 'ref', got '$batchId'")
+    require(batchId.matches(CommitLog.IdPattern) && batchId != "ref",
+      s"batchId must match ${CommitLog.IdPattern} and not be 'ref', got '$batchId'")
     val spark = batch.sparkSession
-    val committed = committedBatches(spark, path)
+    val log = CommitLog(spark, path)
+    val committed = log.read().committed
     require(committed.contains("ref"),
       s"driftBatch: no committed reference at $path — " +
         "run writeDriftReference first")
@@ -118,8 +100,7 @@ object DriftMonitor {
       // overwrite: a torn earlier attempt of THIS batch (no marker yet)
       // is invisible to readers and safe to rewrite
       .write.mode("overwrite").parquet(s"$path/cur/batch=$batchId")
-    commit(spark, path, batchId)
-    true
+    log.commit(batchId)
   }
 
   /** PSI per key of everything streamed so far against the reference —
@@ -131,7 +112,7 @@ object DriftMonitor {
   def driftPsi(spark: SparkSession, path: String, keys: Seq[String],
                bins: Int = 10): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
-    val committed = committedBatches(spark, path)
+    val committed = CommitLog(spark, path).read().committed
     require(committed.contains("ref"),
       s"driftPsi: no committed reference at $path")
     val bounds = spark.read.parquet(s"$path/bounds")
@@ -276,58 +257,41 @@ object DriftMonitor {
     (scored, carry2)
   }
 
-  /** Committed CUSUM state versions (ascending batch ids) at
-    * `stateDir` — the [[MarketIncremental.committedVersions]] protocol
-    * on this module's own state layout. */
-  def committedCusumVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = indexFs(spark, stateDir)
-    val d = new org.apache.hadoop.fs.Path(s"$stateDir/_commits")
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isFile)
-      .map(_.getPath.getName.toLong).sorted.toSeq
-  }
-
   /** The `writeStream.foreachBatch` body for streaming CUSUM: fold the
     * micro-batch with [[cusumFold]] against the last committed carry,
     * append the batch's scores to the permanent `scores/batch=<id>` log,
-    * version the carry under `v=<id>/carry`, commit atomically.
-    * Idempotent per `batchId` (at-least-once replays return the standing
-    * view without refolding — the statistic would double-count
-    * otherwise); crash between writes exposes nothing (no marker). Old
-    * carry versions GC down to the committed predecessor.
+    * version the carry under `v=<id>/carry`, commit atomically through
+    * the state dir's [[CommitLog]]. Idempotent per `batchId`
+    * (at-least-once replays return the standing view without refolding —
+    * the statistic would double-count otherwise); crash between writes
+    * exposes nothing (no marker). Old carry versions GC down to the
+    * committed predecessor.
     *
     * Returns [[cusumScores]] — everything scored so far. */
   def cusumBatch(spark: SparkSession, stateDir: String, batchId: Long,
                  batch: DataFrame, keys: Seq[String], tsCol: String,
                  valueCol: String, tiebreakCol: String, target: Double,
                  slack: Double, threshold: Double,
-                 scale: Double = 1e6): DataFrame = {
-    val done = committedCusumVersions(spark, stateDir)
-    if (done.contains(batchId)) return cusumScores(spark, stateDir)
-    val carry = done.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-      case None => emptyCusumCarry(spark, keys)
-    }
-    val (scored, carry2) = cusumFold(carry, batch, keys, tsCol, valueCol,
-      tiebreakCol, target, slack, threshold, scale)
-    scored.write.mode("overwrite").parquet(s"$stateDir/scores/batch=$batchId")
-    carry2.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/carry")
-    val f = indexFs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
-    }
-    cusumScores(spark, stateDir)
-  }
+                 scale: Double = 1e6): DataFrame =
+    CommitLog(spark, stateDir).fold(batchId) { v =>
+      val empty = emptyCusumCarry(spark, keys)
+      val carry = v.fold(empty)(v =>
+        spark.read.schema(empty.schema).parquet(s"$stateDir/v=$v/carry"))
+      val (scored, carry2) = cusumFold(carry, batch, keys, tsCol, valueCol,
+        tiebreakCol, target, slack, threshold, scale)
+      scored.write.mode("overwrite").parquet(s"$stateDir/scores/batch=$batchId")
+      carry2.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/carry")
+    }(cusumScores(spark, stateDir, _))
 
   /** Every committed batch's CUSUM scores — the union of the
     * `scores/batch=<id>` logs (uncommitted/torn batch dirs prune at the
     * listing via the partition column). Row shape =
     * [[Relational.cusumDetect]]'s. */
-  def cusumScores(spark: SparkSession, stateDir: String): DataFrame = {
-    val done = committedCusumVersions(spark, stateDir)
+  def cusumScores(spark: SparkSession, stateDir: String): DataFrame =
+    cusumScores(spark, stateDir, CommitLog(spark, stateDir).read().versions)
+
+  private def cusumScores(spark: SparkSession, stateDir: String,
+                          done: Seq[Long]): DataFrame = {
     require(done.nonEmpty, s"cusumScores: nothing committed at $stateDir")
     spark.read.parquet(s"$stateDir/scores")
       .filter(col("batch").isin(done: _*))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.CommitLog
+
 /** Incremental market analytics — fold a new micro-batch of ticks into
   * standing volume-bar and triple-barrier state WITHOUT recomputing
   * history: the [[Relational.mergeSessions]] sufficient-statistics
@@ -326,65 +328,53 @@ object MarketIncremental {
   // ------------------------------------------------------------------
   // Persistent foreachBatch wiring: small versioned frontier state +
   // append-only closed-bar/final-label logs, both governed by the
-  // `_commits` markers (the incremental-dedup idempotency pattern — a
-  // replayed batch id is a no-op, a torn write without its marker is
-  // invisible to readers).
+  // state dir's [[graft.store.CommitLog]] (a replayed batch id is a
+  // no-op, a torn write without its marker is invisible to readers).
   // ------------------------------------------------------------------
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+  private def committed(spark: SparkSession, stateDir: String): Seq[Long] =
+    CommitLog(spark, stateDir).read().versions
 
-  /** Committed batch ids at `stateDir`, numerically ordered. */
-  def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val d = new org.apache.hadoop.fs.Path(s"$stateDir/_commits")
-    val f = fs(spark, stateDir)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.map(_.getPath.getName.toLong).sorted
-  }
-
-  private def readState(spark: SparkSession, stateDir: String, cfg: Cfg)
-      : (DataFrame, DataFrame, DataFrame) =
-    committedVersions(spark, stateDir).lastOption match {
-      case None =>
-        (emptyBars(spark, cfg), emptyCarry(spark, cfg), emptyEntries(spark, cfg))
-      case Some(v) =>
-        (spark.read.parquet(s"$stateDir/v=$v/open_bars"),
-          spark.read.parquet(s"$stateDir/v=$v/carry"),
-          spark.read.parquet(s"$stateDir/v=$v/open_entries"))
-    }
+  /** Frontier part `name` of committed version `v`, read with the
+    * schema its `empty` frame declares; `empty` before the first commit. */
+  private def state(spark: SparkSession, stateDir: String, v: Option[Long],
+                    name: String, empty: DataFrame): DataFrame =
+    v.fold(empty)(v => spark.read.schema(empty.schema).parquet(s"$stateDir/v=$v/$name"))
 
   /** Committed slices of an append-only log (`bars`/`labels`), empty
     * frame when nothing committed yet. One multi-path scan (not a
     * per-batch union — a long-running stream accumulates thousands of
     * batch dirs and a thousand-way union plan would dwarf the data). */
   private def readLog(spark: SparkSession, stateDir: String, log: String,
-                      empty: DataFrame): DataFrame = {
-    val committed = committedVersions(spark, stateDir)
-    val existing = committed.filter(v =>
-      fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/$log/batch=$v")))
-    if (existing.isEmpty) empty
-    else spark.read.parquet(
-      existing.map(v => s"$stateDir/$log/batch=$v"): _*)
+                      empty: DataFrame, done: Seq[Long]): DataFrame = {
+    val dirs = CommitLog(spark, stateDir).batchDirs(log, done.map(_.toString))
+    if (dirs.isEmpty) empty else spark.read.schema(empty.schema).parquet(dirs: _*)
   }
+
+  private def write(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").parquet(path)
 
   /** All bars so far: the closed log plus the open frontier —
     * column-identical to [[Resample.volumeBars]] over the history
     * (timestamps as epoch-µs). */
   def barsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame = {
-    val (open, _, _) = readState(spark, stateDir, cfg)
-    readLog(spark, stateDir, "bars", emptyBars(spark, cfg)).unionByName(open)
+    val done = committed(spark, stateDir)
+    readLog(spark, stateDir, "bars", emptyBars(spark, cfg), done)
+      .unionByName(state(spark, stateDir, done.lastOption, "open_bars", emptyBars(spark, cfg)))
       .drop("open_tb", "close_tb") // internal election state, not a bar column
   }
 
   /** All labels so far: finalized log plus the open entries projected
     * through the label rule — column-identical to
     * [[Labeling.tripleBarrier]] over the history. */
-  def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame = {
-    val (_, _, open) = readState(spark, stateDir, cfg)
-    labels(readLog(spark, stateDir, "labels", emptyEntries(spark, cfg))
-      .unionByName(open), cfg)
+  def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame =
+    labelsView(spark, stateDir, cfg, committed(spark, stateDir))
+
+  private def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg,
+                         done: Seq[Long]): DataFrame = {
+    val empty = emptyEntries(spark, cfg)
+    labels(readLog(spark, stateDir, "labels", empty, done)
+      .unionByName(state(spark, stateDir, done.lastOption, "open_entries", empty)), cfg)
   }
 
   /** The foreachBatch body: fold `batch` into the state at `stateDir`
@@ -399,32 +389,23 @@ object MarketIncremental {
     * `(side, price, amount)` and the trade feed `(price, volume)` are
     * distinct upstreams with independent watermarks — coupling them in
     * one commit cycle would stall snapshot finality on trade-batch
-    * cadence (and vice versa). Same `_commits` idempotency, same
-    * frontier discipline, separate stateDir. */
+    * cadence (and vice versa). Same commit log, same frontier
+    * discipline, separate stateDir. */
   def marketTickBatch(spark: SparkSession, stateDir: String, batchId: Long,
-                      batch: DataFrame, cfg: Cfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return labelsView(spark, stateDir, cfg)
-    val (open0, carry0, entries0) = readState(spark, stateDir, cfg)
-    val (closed, open1, carry1) = volumeBarsFold(open0, carry0, batch, cfg)
-    val (finals, entries1) = tripleBarrierFold(entries0, batch, carry1, cfg)
-    val v = s"$stateDir/v=$batchId"
-    closed.write.mode("overwrite").parquet(s"$stateDir/bars/batch=$batchId")
-    finals.write.mode("overwrite").parquet(s"$stateDir/labels/batch=$batchId")
-    open1.write.mode("overwrite").parquet(s"$v/open_bars")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    entries1.write.mode("overwrite").parquet(s"$v/open_entries")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    // GC: keep the committed predecessor frontier for rollback, drop
-    // older ones; the bars/labels logs are permanent
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
-    }
-    labelsView(spark, stateDir, cfg)
-  }
+                      batch: DataFrame, cfg: Cfg): DataFrame =
+    CommitLog(spark, stateDir).fold(batchId) { v =>
+      val (closed, open1, carry1) = volumeBarsFold(
+        state(spark, stateDir, v, "open_bars", emptyBars(spark, cfg)),
+        state(spark, stateDir, v, "carry", emptyCarry(spark, cfg)), batch, cfg)
+      val (finals, entries1) = tripleBarrierFold(
+        state(spark, stateDir, v, "open_entries", emptyEntries(spark, cfg)),
+        batch, carry1, cfg)
+      write(closed, s"$stateDir/bars/batch=$batchId")
+      write(finals, s"$stateDir/labels/batch=$batchId")
+      write(open1, s"$stateDir/v=$batchId/open_bars")
+      write(carry1, s"$stateDir/v=$batchId/carry")
+      write(entries1, s"$stateDir/v=$batchId/open_entries")
+    }(labelsView(spark, stateDir, cfg, _))
 
   // ------------------------------------------------------------------
   // Order-book snapshot fold: the chunked/streaming replacement for the
@@ -746,50 +727,36 @@ object MarketIncremental {
         col("level"), col("price"), col("amount")): _*)
   }
 
-  private def readBookState(spark: SparkSession, stateDir: String, cfg: BookCfg)
-      : (DataFrame, DataFrame) =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => (emptyBook(spark, cfg), emptyBookCursor(spark, cfg))
-      case Some(v) =>
-        (spark.read.parquet(s"$stateDir/v=$v/book"),
-          spark.read.parquet(s"$stateDir/v=$v/cursor"))
-    }
-
   /** All snapshots so far: the final log plus the provisional tail —
     * column-identical to the one-shot
     * [[graft.features.OrderbookFeatures.bookSnapshots]] over the full
     * delta history. */
-  def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg): DataFrame = {
-    val (book, cursor) = readBookState(spark, stateDir, cfg)
-    readLog(spark, stateDir, "snapshots", emptySnapshots(spark, cfg))
-      .unionByName(provisionalSnapshots(book, cursor, cfg))
-  }
+  def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg): DataFrame =
+    snapshotsView(spark, stateDir, cfg, committed(spark, stateDir))
+
+  private def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg,
+                            done: Seq[Long]): DataFrame =
+    readLog(spark, stateDir, "snapshots", emptySnapshots(spark, cfg), done)
+      .unionByName(provisionalSnapshots(
+        state(spark, stateDir, done.lastOption, "book", emptyBook(spark, cfg)),
+        state(spark, stateDir, done.lastOption, "cursor", emptyBookCursor(spark, cfg)), cfg))
 
   /** The foreachBatch body for a streamed L2 delta feed: fold `batch`
     * into the book state at `stateDir` under `batchId`
-    * (replay-idempotent via `_commits`), append newly-final snapshots
-    * to the log, persist the small frontier. Same lifecycle as
+    * (replay-idempotent via the commit log), append newly-final
+    * snapshots to the log, persist the small frontier. Same lifecycle as
     * [[marketTickBatch]]: two frontier versions survive for rollback,
     * the log only grows. Returns the post-fold snapshot view. */
   def bookSnapshotBatch(spark: SparkSession, stateDir: String, batchId: Long,
-                        batch: DataFrame, cfg: BookCfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return snapshotsView(spark, stateDir, cfg)
-    val (book0, cursor0) = readBookState(spark, stateDir, cfg)
-    val (snaps, book1, cursor1) = bookSnapshotFold(book0, cursor0, batch, cfg)
-    val v = s"$stateDir/v=$batchId"
-    snaps.write.mode("overwrite").parquet(s"$stateDir/snapshots/batch=$batchId")
-    book1.write.mode("overwrite").parquet(s"$v/book")
-    cursor1.write.mode("overwrite").parquet(s"$v/cursor")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
-    }
-    snapshotsView(spark, stateDir, cfg)
-  }
+                        batch: DataFrame, cfg: BookCfg): DataFrame =
+    CommitLog(spark, stateDir).fold(batchId) { v =>
+      val (snaps, book1, cursor1) = bookSnapshotFold(
+        state(spark, stateDir, v, "book", emptyBook(spark, cfg)),
+        state(spark, stateDir, v, "cursor", emptyBookCursor(spark, cfg)), batch, cfg)
+      write(snaps, s"$stateDir/snapshots/batch=$batchId")
+      write(book1, s"$stateDir/v=$batchId/book")
+      write(cursor1, s"$stateDir/v=$batchId/cursor")
+    }(snapshotsView(spark, stateDir, cfg, _))
 
   // ------------------------------------------------------------------
   // Market-feature fold: the chunked/streaming replacement for the
@@ -1091,44 +1058,27 @@ object MarketIncremental {
     (feat, carry2)
   }
 
-  private def readFeatCarry(spark: SparkSession, stateDir: String, cfg: FeatCfg)
-      : DataFrame =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => emptyFeatCarry(spark, cfg)
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-    }
-
   /** All features so far — column-identical to
     * [[graft.features.MarketFeatures.build]] over the full history
     * (modulo the key/column order; every emitted row is final). */
   def featuresView(spark: SparkSession, stateDir: String, cfg: FeatCfg): DataFrame =
-    readLog(spark, stateDir, "features", emptyFeatures(spark, cfg))
+    readLog(spark, stateDir, "features", emptyFeatures(spark, cfg), committed(spark, stateDir))
 
   /** The foreachBatch body for a streamed OHLCV feed: fold `batch` into
     * the feature state at `stateDir` under `batchId` (replay-idempotent
-    * via `_commits`), append the batch's final features to the log,
+    * via the commit log), append the batch's final features to the log,
     * persist the ≤19-row-per-series carry. Same lifecycle as
     * [[marketTickBatch]]: two carry versions survive for rollback, the
     * log only grows. Returns the post-fold feature view. */
   def marketFeaturesBatch(spark: SparkSession, stateDir: String, batchId: Long,
                           batch: DataFrame, cfg: FeatCfg,
-                          dropnaFinal: Boolean = true): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return featuresView(spark, stateDir, cfg)
-    val carry0 = readFeatCarry(spark, stateDir, cfg)
-    val (feat, carry1) = marketFeaturesFold(carry0, batch, cfg, dropnaFinal)
-    val v = s"$stateDir/v=$batchId"
-    feat.write.mode("overwrite").parquet(s"$stateDir/features/batch=$batchId")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
-    }
-    featuresView(spark, stateDir, cfg)
-  }
+                          dropnaFinal: Boolean = true): DataFrame =
+    CommitLog(spark, stateDir).fold(batchId) { v =>
+      val (feat, carry1) = marketFeaturesFold(
+        state(spark, stateDir, v, "carry", emptyFeatCarry(spark, cfg)), batch, cfg, dropnaFinal)
+      write(feat, s"$stateDir/features/batch=$batchId")
+      write(carry1, s"$stateDir/v=$batchId/carry")
+    }(readLog(spark, stateDir, "features", emptyFeatures(spark, cfg), _))
 
   // ------------------------------------------------------------------
   // Streaming bet sizing (AFML ch. 10 §10.4): the average-active-bet
@@ -1257,39 +1207,22 @@ object MarketIncremental {
     (sizes, carry2)
   }
 
-  private def readBetCarry(spark: SparkSession, stateDir: String, cfg: BetCfg)
-      : DataFrame =
-    committedVersions(spark, stateDir).lastOption match {
-      case None => emptyBetCarry(spark, cfg)
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v/carry")
-    }
-
   /** All bet-size rows so far — column-identical to
     * [[graft.operators.Backtest.betSizing]] over the full bet history. */
   def sizesView(spark: SparkSession, stateDir: String, cfg: BetCfg): DataFrame =
-    readLog(spark, stateDir, "sizes", emptySizes(spark, cfg))
+    readLog(spark, stateDir, "sizes", emptySizes(spark, cfg), committed(spark, stateDir))
 
   /** The foreachBatch body for a streamed bet feed: fold `batch` into
     * the sizing state at `stateDir` under `batchId` (replay-idempotent
-    * via `_commits`), append the final instants to the log, persist the
-    * open-frontier carry. Same lifecycle as [[marketFeaturesBatch]]:
+    * via the commit log), append the final instants to the log, persist
+    * the open-frontier carry. Same lifecycle as [[marketFeaturesBatch]]:
     * two carry versions survive for rollback, the log only grows. */
   def betSizingBatch(spark: SparkSession, stateDir: String, batchId: Long,
-                     batch: DataFrame, cfg: BetCfg): DataFrame = {
-    val done = committedVersions(spark, stateDir)
-    if (done.contains(batchId)) return sizesView(spark, stateDir, cfg)
-    val carry0 = readBetCarry(spark, stateDir, cfg)
-    val (sizes, carry1) = betSizingFold(carry0, batch, cfg)
-    val v = s"$stateDir/v=$batchId"
-    sizes.write.mode("overwrite").parquet(s"$stateDir/sizes/batch=$batchId")
-    carry1.write.mode("overwrite").parquet(s"$v/carry")
-    val f = fs(spark, stateDir)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$stateDir/_commits"))
-    f.create(new org.apache.hadoop.fs.Path(s"$stateDir/_commits/$batchId"),
-      true).close()
-    done.dropRight(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$old"), true)
-    }
-    sizesView(spark, stateDir, cfg)
-  }
+                     batch: DataFrame, cfg: BetCfg): DataFrame =
+    CommitLog(spark, stateDir).fold(batchId) { v =>
+      val (sizes, carry1) = betSizingFold(
+        state(spark, stateDir, v, "carry", emptyBetCarry(spark, cfg)), batch, cfg)
+      write(sizes, s"$stateDir/sizes/batch=$batchId")
+      write(carry1, s"$stateDir/v=$batchId/carry")
+    }(readLog(spark, stateDir, "sizes", emptySizes(spark, cfg), _))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
 
+import graft.store.CommitLog
+
 /** Similarity search over embedding columns (SURVEY §7 M9).
   *
   * Brute-force cosine top-k is the correctness baseline (one broadcast of
@@ -791,9 +793,9 @@ object Similarity {
       }
     // a rebuild replaces the whole index generation: stale batch dirs and
     // commit markers from a previous build must not leak into the new one
-    val fs = ivfFs(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits"), true)
+    val log = CommitLog(spark, path)
+    log.fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
+    log.clear()
     ivfEncode(df, vecCol, idCol, cents, book, m, ksub, residual)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
@@ -804,7 +806,7 @@ object Similarity {
     spark.createDataFrame(Seq((m, ksub, book.toSeq, residual)))
       .toDF("m", "ksub", "book", "residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    ivfCommit(spark, path, "0")
+    log.commit("0")
   }
 
   /** The shared index encode: one zero-shuffle codegen projection
@@ -830,55 +832,6 @@ object Similarity {
         element_at(centsLit, col("cell") + 1)))
   }
 
-  private def ivfFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** All commit markers: name → the batch ids this marker SUPERSEDES
-    * (empty for ordinary appends; a compaction's consolidated batch
-    * lists the batches it replaced — see [[compactIvfPqIndex]]). */
-  private def ivfMarkers(spark: SparkSession,
-                         path: String): Map[String, Seq[String]] = {
-    val d = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = ivfFs(spark, path)
-    if (!fs.exists(d)) Map.empty
-    else fs.listStatus(d).filter(_.isFile).map { st =>
-      val name = st.getPath.getName
-      // only compactor markers (c*) ever carry bodies — skipping the
-      // open for ordinary appends keeps the serving path at ONE listing
-      // plus #compactions reads, not one read per append ever made
-      val body =
-        if (!name.startsWith("c")) ""
-        else {
-          val in = fs.open(st.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        }
-      name -> body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    }.toMap
-  }
-
-  /** Batch ids whose appends are COMMITTED and not superseded by a
-    * later compaction (marker file in `_commits/`, id absent from every
-    * marker's superseded list). Data directories without a marker are
-    * invisible to probes — the single-file-create commit point, like
-    * the MinHash index ([[Dedup.committedBatches]]). */
-  def ivfCommittedBatches(spark: SparkSession, path: String): Seq[String] = {
-    val markers = ivfMarkers(spark, path)
-    val superseded = markers.values.flatten.toSet
-    markers.keys.filterNot(superseded).toSeq.sorted
-  }
-
-  private def ivfCommit(spark: SparkSession, path: String, bid: String,
-                        supersedes: Seq[String] = Seq.empty): Unit = {
-    val fs = ivfFs(spark, path)
-    val cd = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    fs.mkdirs(cd)
-    val out = fs.create(new org.apache.hadoop.fs.Path(cd, bid), false)
-    try { if (supersedes.nonEmpty) out.write(supersedes.mkString("\n").getBytes("UTF-8")) }
-    finally out.close()
-  }
-
   /** Compact the batch-keyed IVF-PQ index: consolidate every committed
     * batch's `vectors/batch=<id>` directory into ONE new batch — the
     * [[Dedup.compactMinhashIndex]] lifecycle applied to the ANN index.
@@ -887,77 +840,28 @@ object Similarity {
     * files per probed cell. Codes, cells and the codebook are untouched
     * (compaction moves bytes, never re-quantizes).
     *
-    * Atomicity via the superseded list: the consolidated data lands
-    * under a fresh `batch=c<n>` (invisible — no marker), then its
-    * marker is created with the replaced batch ids as its BODY. Readers
-    * treat ids named in any marker body as superseded, so visibility
-    * flips at that single file-create; markers and data of the replaced
-    * batches are then garbage-collected. A crash before GC
-    * double-counts nothing; a crashed compactor's orphan `c*`
-    * directory and any partially-GC'd superseded leftovers are cleared
-    * on the next run. Safe alongside a live appender (a batch committed
-    * mid-compaction is simply not consolidated this round — and the
-    * `c` id prefix is reserved for the compactor, so the orphan sweep
-    * can never touch an appender's in-flight directory); one compactor
-    * at a time. Probes that LISTED the old batches while a compaction's
-    * GC runs can hit deleted files — for a serving index, run
-    * compaction in a maintenance window or behind a read-path retry.
-    * Returns the number of batches consolidated (0 = nothing to do). */
-  def compactIvfPqIndex(spark: SparkSession, path: String): Int = {
-    val fs = ivfFs(spark, path)
-    val markers = ivfMarkers(spark, path)
-    val superseded = markers.values.flatten.toSet
-    val committed = markers.keys.filterNot(superseded).toSeq.sorted
-    // resume a crashed GC: superseded ids are invisible already — their
-    // stale markers and data dirs are safe to clear whenever noticed
-    superseded.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors/batch=$id"), true)
+    * Atomic through [[CommitLog.compact]]: visibility flips from the
+    * replaced batches to the consolidated `c<n>` at one marker create;
+    * a crash at any step double-counts nothing. Safe alongside a live
+    * appender; one compactor at a time. Probes that LISTED the old
+    * batches while a compaction's GC runs can hit deleted files — for a
+    * serving index, run compaction in a maintenance window or behind a
+    * read-path retry. Returns the number of batches consolidated (0 =
+    * nothing to do). */
+  def compactIvfPqIndex(spark: SparkSession, path: String): Int =
+    CommitLog(spark, path).compact(Seq("vectors")) { (cid, committed) =>
+      spark.read.parquet(s"$path/vectors")
+        .where(col("batch").cast("string").isin(committed: _*)).drop("batch")
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$path/vectors/batch=$cid")
     }
-    if (committed.size <= 1) return 0
-    // GC orphaned compactor output (data written, marker never created);
-    // only compactor-owned c* ids are eligible — never a live append dir
-    // (the c prefix is rejected in appendToIvfPqIndex's id validation)
-    val vecRoot = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    if (fs.exists(vecRoot))
-      fs.listStatus(vecRoot).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("batch=c"))
-        .map(_.stripPrefix("batch="))
-        .filterNot(markers.contains)
-        .foreach(id => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$path/vectors/batch=$id"), true))
-    val cid = "c" + ((markers.keys ++ superseded)
-      .filter(_.startsWith("c"))
-      .flatMap(s => scala.util.Try(s.stripPrefix("c").toLong).toOption)
-      .maxOption.getOrElse(-1L) + 1L)
-    val inScope = col("batch").cast("string").isin(committed.toIndexedSeq: _*)
-    spark.read.parquet(s"$path/vectors").where(inScope).drop("batch")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/vectors/batch=$cid")
-    // THE commit point: one atomic file-create flips visibility from the
-    // old batches to the consolidated one. The superseded list is
-    // TRANSITIVE — it carries forward every id the consolidated batches
-    // themselves superseded, or a second compaction would erase the
-    // only record of the first's replaced ids and their append replays
-    // would re-ingest (marker bodies are transitive by induction, so
-    // one level of flatMap closes the chain)
-    val supersedes =
-      (committed ++ committed.flatMap(markers.getOrElse(_, Seq.empty))).distinct
-    ivfCommit(spark, path, cid, supersedes = supersedes)
-    // GC — everything below is invisible already
-    committed.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commits/$id"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors/batch=$id"), true)
-    }
-    committed.size
-  }
 
   /** Append a batch of NEW vectors to a persisted IVF-PQ index without
     * retraining: the batch encodes against the index's frozen centroids
     * and codebook (the same zero-shuffle codegen projection as the
     * build) and lands under `vectors/batch=<id>/cell=*`, invisible to
-    * probes until the `_commits/<id>` marker exists — a crash mid-write
+    * probes until its [[CommitLog]] marker exists — a crash mid-write
     * leaves no torn state, and replaying a committed batch id is a
     * skipped no-op (at-least-once ingest loops are safe). Returns true
     * iff this call committed the batch.
@@ -971,47 +875,23 @@ object Similarity {
   def appendToIvfPqIndex(df: DataFrame, vecCol: String, idCol: String,
                          indexPath: String, batchId: String = ""): Boolean = {
     val spark = df.sparkSession
-    val markers = ivfMarkers(spark, indexPath)
-    require(markers.nonEmpty,
+    val log = CommitLog(spark, indexPath)
+    require(log.read().markers.nonEmpty,
       s"no committed IVF-PQ index at $indexPath — writeIvfPqIndex first")
-    // auto ids count over ALL marker names AND superseded ids — a
-    // compacted-away id must never be reused: its content already lives
-    // inside the consolidated batch, and reusing it would skip as a
-    // "replay"
-    val seen = markers.keys.toSet ++ markers.values.flatten
-    val bid =
-      if (batchId.nonEmpty) batchId
-      else (seen.flatMap(s => scala.util.Try(s.toLong).toOption)
-        .maxOption.getOrElse(-1L) + 1L).toString
-    require(bid.matches("[A-Za-z0-9_-]+"), s"unsafe index batch id: $bid")
-    // the c prefix is the compactor's namespace: its orphan sweep deletes
-    // any uncommitted c* directory, which must never be a live append
-    require(!bid.startsWith("c"),
-      s"batch ids starting with 'c' are reserved for the compactor: $bid")
-    if (seen.contains(bid)) {
-      // committed, or committed-then-consolidated by a compaction —
-      // either way this batch's rows are in the index already
-      System.err.println(
-        s"[ivfpq] batch $bid already committed at $indexPath — skipping (replay)")
-      return false
+    log.append(batchId, Seq("vectors")) { bid =>
+      val meta = spark.read.parquet(s"$indexPath/meta").head()
+      val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
+      val book = meta.getAs[scala.collection.Seq[Double]]("book").toArray
+      val residual = meta.getAs[Boolean]("residual")
+      val cents = spark.read.parquet(s"$indexPath/centroids")
+        .orderBy("cell").collect()
+        .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq.toSeq)
+        .toIndexedSeq
+      ivfEncode(df, vecCol, idCol, cents, book, m, ksub, residual)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$indexPath/vectors/batch=$bid")
     }
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
-    val book = meta.getAs[scala.collection.Seq[Double]]("book").toArray
-    val residual = meta.getAs[Boolean]("residual")
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq.toSeq)
-      .toIndexedSeq
-    // clear partial leftovers of a crashed earlier attempt at this batch
-    ivfFs(spark, indexPath).delete(
-      new org.apache.hadoop.fs.Path(s"$indexPath/vectors/batch=$bid"), true)
-    ivfEncode(df, vecCol, idCol, cents, book, m, ksub, residual)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/vectors/batch=$bid")
-    ivfCommit(spark, indexPath, bid)
-    true
   }
 
   /** Probe a persisted IVF-PQ index: rank the nCells centroids by cosine
@@ -1061,7 +941,7 @@ object Similarity {
     // `batch IN (committed)` and `cell IN (…)` reference only partition
     // columns → directory pruning: torn appends (no commit marker) and
     // unprobed cells are never opened
-    val committed = ivfCommittedBatches(spark, indexPath)
+    val committed = CommitLog(spark, indexPath).read().committed
     require(committed.nonEmpty, s"no committed batches at $indexPath")
     val committedPred =
       col("batch").cast("string").isin(committed.toIndexedSeq: _*)
@@ -1169,7 +1049,7 @@ object Similarity {
       .select("query_id", "cell")
     val probedCells = qcells.select("cell").distinct()
       .collect().map(_.getInt(0)).toIndexedSeq
-    val committed = ivfCommittedBatches(spark, indexPath)
+    val committed = CommitLog(spark, indexPath).read().committed
     require(committed.nonEmpty, s"no committed batches at $indexPath")
     val part = spark.read.parquet(s"$indexPath/vectors")
       .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*) &&
@@ -1226,7 +1106,7 @@ object Similarity {
                        k: Int = 10, nProbe: Int = 2,
                        rerank: Int = 100): Double = {
     require(nQueries > 0, s"need nQueries > 0, got $nQueries")
-    val committed = ivfCommittedBatches(spark, path)
+    val committed = CommitLog(spark, path).read().committed
     require(committed.nonEmpty, s"no committed batches at $path")
     val vecs = spark.read.parquet(s"$path/vectors")
       .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
@@ -1274,7 +1154,7 @@ object Similarity {
     if (r >= minRecall) return (r, false)
     val meta = spark.read.parquet(s"$path/meta").head()
     val cellsNow = spark.read.parquet(s"$path/centroids").count().toInt
-    val committed = ivfCommittedBatches(spark, path)
+    val committed = CommitLog(spark, path).read().committed
     val vecs = spark.read.parquet(s"$path/vectors")
       .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
       .select(col("vec_id"), col("v"))
@@ -1308,7 +1188,7 @@ object Similarity {
                                   rerank: Int = 50): DataFrame = {
     val knn = knnIvfPqBatch(spark, indexPath, batch, idCol, vecCol,
       k = k, nProbe = nProbe, rerank = rerank, excludeSelf = true)
-    val committed = ivfCommittedBatches(spark, indexPath)
+    val committed = CommitLog(spark, indexPath).read().committed
     val idxVecs = spark.read.parquet(s"$indexPath/vectors")
       .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
       .select(col("vec_id"), col("v"))
@@ -1359,12 +1239,9 @@ object Similarity {
                                     nProbe: Int = 4, rerank: Int = 50,
                                     nCells: Int = 8, m: Int = 8,
                                     ksub: Int = 16, iters: Int = 2): DataFrame = {
-    val markers = ivfMarkers(spark, indexPath)
-    val committed = markers.keys
-      .filterNot(markers.values.flatten.toSet).toSeq.sorted
-    // a batch consolidated by a later compaction is still "committed"
-    // for replay purposes — its rows live inside the consolidated batch
-    val everCommitted = markers.keys.toSet ++ markers.values.flatten
+    val log = CommitLog(spark, indexPath)
+    val snap = log.read()
+    val committed = snap.committed
     val novel =
       if (committed.isEmpty) batch
       else {
@@ -1375,7 +1252,7 @@ object Similarity {
         // near-dups that both survived the first run would now kill each
         // other; excluding them reproduces the first run's index view
         val hitsVsOld =
-          if (!everCommitted.contains(batchId)) hits
+          if (!snap.done(batchId)) hits
           else hits.join(broadcast(batch.select(col(idCol).as("old_id"))),
             Seq("old_id"), "left_anti")
         val dupOfIndex = hitsVsOld.select(col("new_id").as(idCol)).distinct()
@@ -1396,8 +1273,7 @@ object Similarity {
       // of THIS batch skips the append path above
       writeIvfPqIndex(survivors, vecCol, idCol, indexPath,
         nCells = nCells, m = m, ksub = ksub, iters = iters)
-      if (batchId.nonEmpty && batchId != "0")
-        ivfCommit(spark, indexPath, batchId)
+      if (batchId.nonEmpty && batchId != "0") log.commit(batchId)
     }
     survivors
   }

@@ -616,7 +616,7 @@ object StreamingPipelines {
     // "exists" = something COMMITTED, not "directories present": a torn
     // first write (crash before its commit marker) must read as an empty
     // index and be overwritten by the retry, not probed
-    val exists = Dedup.committedBatches(spark, indexPath).nonEmpty
+    val exists = graft.store.CommitLog(spark, indexPath).read().committed.nonEmpty
     // within-batch dedup first (batch ⊆ novel content invariant)
     val pairs = Dedup.minhashNearDupPairs(batch, textCol, idCol,
       threshold = threshold, cache = false)
@@ -660,7 +660,7 @@ object StreamingPipelines {
                                   idCol: String, threshold: Double = 0.9,
                                   batchId: String = ""): DataFrame = {
     import graft.operators.Dedup
-    val exists = Dedup.committedBatches(spark, indexPath).nonEmpty
+    val exists = graft.store.CommitLog(spark, indexPath).read().committed.nonEmpty
     val intra = Dedup.containmentJoin(batch, textCol, idCol,
         threshold = threshold, cache = false)
       .select(col("id_a"), col("id_b"))

@@ -659,7 +659,7 @@ class OpsSpec extends SparkSpec {
     assert(inc.contains((1000L, 3L)), "planted exact dup not found via index")
   }
 
-  test("incremental containment: index + probe ∪ intra ≡ one-shot directed pairs, replay no-op") {
+  test("incremental containment: index + probe ∪ intra ≡ one-shot directed pairs, replay no-op", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_ctidx").toString
     // token spaces are per-article-unique, so ONLY planted relationships
     // share shingles; excerpts are consecutive slices → containment 1.0
@@ -698,7 +698,7 @@ class OpsSpec extends SparkSpec {
     // replayed batch id is a committed no-op
     assert(!Dedup.writeContainmentIndex(old, "text", "doc_id", dir,
       mode = "append", batchId = "0"))
-    assert(Dedup.committedBatches(spark, dir) == Seq("0"))
+    assert(graft.store.CommitLog(spark, dir).read().committed == Seq("0"))
     // appending the batch then probing fresh content still works (the
     // nearDupAgainstIndex loop shape)
     assert(Dedup.writeContainmentIndex(batch2, "text", "doc_id", dir,
@@ -710,7 +710,7 @@ class OpsSpec extends SparkSpec {
     // compaction consolidates both batches atomically; probes are
     // row-identical and the replay ledger is carried transitively
     assert(Dedup.compactContainmentIndex(spark, dir) == 2)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c0"))
+    assert(graft.store.CommitLog(spark, dir).read().committed == Seq("c0"))
     val probe3 = pairsOf(Dedup.containmentAgainstIndex(spark, dir,
       batch2.union(Seq((2000L, excerpt(60))).toDF("doc_id", "text"))
         .where(col("doc_id") === 2000L),
@@ -803,7 +803,7 @@ class OpsSpec extends SparkSpec {
       s"deduped batch keeps full recall against the index: $hits2")
   }
 
-  test("minhash index growth is idempotent: a replayed batch changes nothing") {
+  test("minhash index growth is idempotent: a replayed batch changes nothing", Stateful) {
     // at-least-once foreachBatch delivery replays batches; round 3's
     // triple-append index double-counted sizes/postings rows on replay,
     // inflating every overlap/jaccard the probe computes
@@ -841,7 +841,7 @@ class OpsSpec extends SparkSpec {
       mode = "append", batchId = "1"))
   }
 
-  test("minhash index compaction: probe-identical, file count collapsed, appendable after") {
+  test("minhash index compaction: probe-identical, file count collapsed, appendable after", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_mhcompact").toString
     def doc(seed: Int) = (0 until 30).map(i => s"w${seed}c$i").mkString(" ")
     // five appended batches, one doc each
@@ -863,7 +863,7 @@ class OpsSpec extends SparkSpec {
       s"each batch's doc must be probeable pre-compaction: $hitsBefore")
     // consolidate
     assert(Dedup.compactMinhashIndex(spark, dir) == 5)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c0"))
+    assert(graft.store.CommitLog(spark, dir).read().committed == Seq("c0"))
     assert(postingsFiles() < filesBefore,
       s"compaction must collapse files: $filesBefore -> ${postingsFiles()}")
     assert((0 until 5).map(probe) == hitsBefore, "probe results must be row-identical")
@@ -877,7 +877,7 @@ class OpsSpec extends SparkSpec {
     assert(probe(9) == Set(9L) && probe(2) == Set(2L))
     // second compaction consolidates {c0, 5} and stays probe-identical
     assert(Dedup.compactMinhashIndex(spark, dir) == 2)
-    assert(Dedup.committedBatches(spark, dir) == Seq("c1"))
+    assert(graft.store.CommitLog(spark, dir).read().committed == Seq("c1"))
     assert(probe(9) == Set(9L) && probe(2) == Set(2L))
     // nothing left to consolidate
     assert(Dedup.compactMinhashIndex(spark, dir) == 0)
@@ -889,7 +889,7 @@ class OpsSpec extends SparkSpec {
       "a batch consolidated two compactions ago must still replay as a no-op")
   }
 
-  test("minhash index: uncommitted (torn) batch is invisible until its retry commits") {
+  test("minhash index: uncommitted (torn) batch is invisible until its retry commits", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_mhtorn").toString
     def doc(seed: Int) = (0 until 30).map(i => s"w${seed}z$i").mkString(" ")
     val b1 = Seq((1L, doc(1))).toDF("doc_id", "text")
@@ -2298,7 +2298,7 @@ class OpsSpec extends SparkSpec {
       s"rebuild must restore recall, got $restored (was $driftedRecall)")
     // post-rebuild: single consolidated generation, no rows lost, and a
     // healthy monitor pass leaves it alone
-    assert(Similarity.ivfCommittedBatches(spark, dir) == Seq("0"))
+    assert(graft.store.CommitLog(spark, dir).read().committed == Seq("0"))
     assert(spark.read.parquet(s"$dir/vectors").count() == 800)
     val (_, rebuilt2) = Similarity.rebuildIvfPqIndexIfDrifted(spark, dir,
       minRecall = 0.9, nQueries = 32, k = 5, nProbe = 2, rerank = 20)
@@ -2306,7 +2306,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("appendToIvfPqIndex: committed batches join the probe, torn appends stay " +
-    "invisible, replays skip") {
+    "invisible, replays skip", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_app").toString
     // base corpus: vectors far from the +x axis query direction
     val base = (0 until 128).map(i =>
@@ -2328,7 +2328,7 @@ class OpsSpec extends SparkSpec {
     // replay of the same batch id: no-op, no double rows
     assert(!Similarity.appendToIvfPqIndex(planted, "embedding", "vec_id",
       s"$dir/idx", batchId = "1"), "replay must skip")
-    val committed = Similarity.ivfCommittedBatches(spark, s"$dir/idx")
+    val committed = graft.store.CommitLog(spark, s"$dir/idx").read().committed
     assert(committed == Seq("0", "1"), s"unexpected commit set: $committed")
     // torn append: batch directory on disk but no commit marker → invisible
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -2344,7 +2344,7 @@ class OpsSpec extends SparkSpec {
     // a rebuild clears the old generation: no stale batches survive
     Similarity.writeIvfPqIndex(base, "embedding", "vec_id", s"$dir/idx",
       nCells = 4, m = 4, ksub = 8, iters = 1)
-    assert(Similarity.ivfCommittedBatches(spark, s"$dir/idx") == Seq("0"))
+    assert(graft.store.CommitLog(spark, s"$dir/idx").read().committed == Seq("0"))
     assert(top1 != 900L, "rebuilt index must not contain the old append")
   }
 
@@ -2394,7 +2394,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("incrementalSemanticDedupBatch: index dups dropped, in-batch dups collapsed, " +
-    "novel appended, replay identical") {
+    "novel appended, replay identical", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_semdedup_inc").toString
     def unit(xs: Double*): Array[Float] = {
       val n = math.sqrt(xs.map(x => x * x).sum)
@@ -2433,12 +2433,12 @@ class OpsSpec extends SparkSpec {
         batch, "embedding", "vec_id", batchId = "b1", tau = 0.95, kBatch = 1)
       .collect().map(_.getLong(0)).toSet
     assert(s2 == s1, s"replay must return the same survivors: $s2 vs $s1")
-    val committed = Similarity.ivfCommittedBatches(spark, s"$dir/idx")
+    val committed = graft.store.CommitLog(spark, s"$dir/idx").read().committed
     assert(committed == Seq("0", "b1"), s"unexpected commits: $committed")
   }
 
   test("incrementalSemanticDedupBatch: replay identical even when MUTUAL near-dups " +
-    "both survived in-batch dedup") {
+    "both survived in-batch dedup", Stateful) {
     // kBatch=2 on a 2-row remainder gives each row its own cluster, so
     // the mutual pair is never compared in-batch and BOTH commit — the
     // replay must not let their committed copies kill each other
@@ -2488,7 +2488,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("compactIvfPqIndex: probe-identical, batches collapse, appendable after, " +
-    "double-compact no-op, replayed consolidated batch still skips") {
+    "double-compact no-op, replayed consolidated batch still skips", Stateful) {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_cmp").toString
     def vecs(ids: Range) = ids.map(i =>
       (i.toLong, Array.tabulate(8)(j => math.sin(i * 3.0 + j).toFloat)))
@@ -2506,7 +2506,7 @@ class OpsSpec extends SparkSpec {
     val before = probe()
     assert(Similarity.compactIvfPqIndex(spark, s"$dir/idx") == 3)
     assert(probe() == before, "compaction must be probe-invisible")
-    assert(Similarity.ivfCommittedBatches(spark, s"$dir/idx") == Seq("c0"))
+    assert(graft.store.CommitLog(spark, s"$dir/idx").read().committed == Seq("c0"))
     // the consolidated dir is the only batch dir left on disk
     val dirs = new java.io.File(s"$dir/idx/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -3396,7 +3396,7 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("marketFeaturesBatch: _commits lifecycle — replayed batch is a no-op, view matches build") {
+  test("marketFeaturesBatch: _commits lifecycle — replayed batch is a no-op, view matches build", Stateful) {
     import graft.features.MarketFeatures
     import graft.operators.MarketIncremental
     val ohlcv = (for { sym <- Seq("S1", "S2"); t <- 1 to 60 } yield
@@ -3415,7 +3415,7 @@ class OpsSpec extends SparkSpec {
     val n1 = MarketIncremental.featuresView(spark, dir, cfg).count()
     MarketIncremental.marketFeaturesBatch(spark, dir, 1L,
       ohlcv.where(col("t") > 30), cfg)
-    assert(MarketIncremental.committedVersions(spark, dir) == Seq(0L, 1L))
+    assert(graft.store.CommitLog(spark, dir).read().versions == Seq(0L, 1L))
     assert(MarketIncremental.featuresView(spark, dir, cfg).count() == n1)
     def key(r: org.apache.spark.sql.Row) = r.toSeq.map(String.valueOf(_)).mkString("|")
     val want = MarketFeatures.build(ohlcv)
@@ -6014,7 +6014,7 @@ class OpsSpec extends SparkSpec {
     assert(TA.harRegression(tiny, Seq("k"), "ts", "p", "tb").count() == 0)
   }
 
-  test("betSizingFold: chunked fold is bit-identical to batch betSizing; frontier guard; _commits replay no-op") {
+  test("betSizingFold: chunked fold is bit-identical to batch betSizing; frontier guard; _commits replay no-op", Stateful) {
     import graft.operators.MarketIncremental
     import graft.operators.MarketIncremental.BetCfg
     // 3 series × 40 bets, horizons overlapping across chunk cuts (up to

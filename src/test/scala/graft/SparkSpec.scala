@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Tag}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Specs of the stateful paths: commit, replay, torn-write and
+  * compaction. `sbt testStateful` runs only these. */
+object Stateful extends Tag("graft.Stateful")
+
 /** Shared local session (one per suite, per §5 porting notes). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -16,6 +21,20 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** After each suite, what the shared session still holds: persisted
+    * RDDs (including localCheckpoint blocks) and storage memory in use
+    * across block managers — the evidence for order-dependent memory
+    * failures in the single test JVM. */
+  override def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach { s =>
+      val sc = s.sparkContext
+      val mem = sc.getExecutorMemoryStatus.values
+      val usedMb = mem.map { case (max, free) => max - free }.sum / (1 << 20)
+      val maxMb = mem.map(_._1).sum / (1 << 20)
+      println(s"[spark-mem] ${suiteName}: ${sc.getPersistentRDDs.size} persistent RDDs, " +
+        s"storage memory $usedMb of $maxMb MB used")
+    } finally super.afterAll()
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean = math.abs(a - b) <= tol
 

@@ -196,7 +196,7 @@ class SystemSpec extends SparkSpec {
       limit = Int.MaxValue).count() == 30) // no duplicates after overwrite
   }
 
-  test("feature store upsert: replaying a batch with its original writeSeq is a no-op") {
+  test("feature store upsert: replaying a batch with its original writeSeq is a no-op", Stateful) {
     val dir = tmp()
     val store = new FeatureStore(spark, dir)
     val feats = MarketFeatures.build(ohlcvRamp(20))
@@ -428,7 +428,7 @@ class SystemSpec extends SparkSpec {
     assert(back.count() == 1 && back.head().getAs[Double]("close") == 3.0)
   }
 
-  test("compact: collapses append-fragmented files, filtered partitions only, row-identical") {
+  test("compact: collapses append-fragmented files, filtered partitions only, row-identical", Stateful) {
     val dir = tmp()
     def day(d: Int, v: Double) = Seq((s"2024-03-0${d}T12:00:00Z", v))
       .map { case (t, c) => (java.sql.Timestamp.from(java.time.Instant.parse(t)), c) }
@@ -1075,7 +1075,7 @@ class SystemSpec extends SparkSpec {
     assert(batchIds.nonEmpty, "fixture must sample a non-empty set")
   }
 
-  test("scheduler compact tick defragments only CLOSED dt partitions") {
+  test("scheduler compact tick defragments only CLOSED dt partitions", Stateful) {
     val lake = tmp() + "/lake"
     val drops = tmp()
     // three ingest ticks = three appended files in one (exchange, symbol, dt)
@@ -1111,7 +1111,7 @@ class SystemSpec extends SparkSpec {
     assert(Scheduler.compactOnce(spark, lake, farFuture) == 0L)
   }
 
-  test("compaction races live ingest safely: concurrent appends to the open dt survive") {
+  test("compaction races live ingest safely: concurrent appends to the open dt survive", Stateful) {
     // the round-3 defect: compactOnce compacted TODAY's partition while
     // the 1-min ingest tick appended to it — rows landing between the
     // read-snapshot and the overwrite commit were silently destroyed.
@@ -1148,7 +1148,7 @@ class SystemSpec extends SparkSpec {
     assert(all == expected, s"rows lost or mutated across concurrent compact+ingest: $all")
   }
 
-  test("streaming incremental dedup end-to-end: foreachBatch wiring, stable batch ids, checkpoint resume") {
+  test("streaming incremental dedup end-to-end: foreachBatch wiring, stable batch ids, checkpoint resume", Stateful) {
     // the OpsSpec tests drive incrementalDedupBatch directly; this one
     // proves the documented WIRING — a real writeStream.foreachBatch
     // passing the streaming batch id, with checkpoint-based resume
@@ -1182,17 +1182,17 @@ class SystemSpec extends SparkSpec {
     // batch 0: three docs, one an in-batch dup
     drop("b0.json", Seq((1L, 1), (2L, 2), (3L, 1)))
     assert(runOnce() == Seq(1L, 2L), "in-batch dup must drop")
-    assert(graft.operators.Dedup.committedBatches(spark, idx) == Seq("0"))
+    assert(graft.store.CommitLog(spark, idx).read().committed == Seq("0"))
     // batch 1 arrives; the SAME checkpoint resumes and assigns id 1
     drop("b1.json", Seq((10L, 2), (11L, 9)))
     assert(runOnce() == Seq(11L), "cross-batch dup must drop on resume")
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted == Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted == Seq("0", "1"))
   }
 
-  test("streaming containment dedup end-to-end: excerpts drop, twins keep lower id, checkpoint resume, compaction-stable") {
+  test("streaming containment dedup end-to-end: excerpts drop, twins keep lower id, checkpoint resume, compaction-stable", Stateful) {
     // OpsSpec pins the index/probe algebra; this proves the WIRING — a
     // real writeStream.foreachBatch driving incrementalContainmentBatch
     // with the streaming batch id, cross-batch excerpt dropping after
@@ -1227,22 +1227,22 @@ class SystemSpec extends SparkSpec {
     // independent article 3
     drop("b0.json", Seq((1L, article(1)), (2L, excerpt(1)), (3L, article(3))))
     assert(runOnce() == Seq(1L, 3L), "in-batch excerpt must drop")
-    assert(graft.operators.Dedup.committedBatches(spark, idx) == Seq("0"))
+    assert(graft.store.CommitLog(spark, idx).read().committed == Seq("0"))
     // batch 1 on the SAME checkpoint: an excerpt of the INDEXED article
     // drops via the probe; near-equal twins keep the lower id
     drop("b1.json", Seq((10L, excerpt(3)), (11L, article(7)), (12L, article(7))))
     assert(runOnce() == Seq(11L), "indexed-article excerpt + twin must drop on resume")
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted == Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Dedup.committedBatches(spark, idx).sorted == Seq("0", "1"))
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted == Seq("0", "1"))
     // compaction keeps the loop behavior identical
     assert(graft.operators.Dedup.compactContainmentIndex(spark, idx) == 2)
     drop("b2.json", Seq((20L, excerpt(7)), (21L, article(9))))
     assert(runOnce() == Seq(21L), "post-compaction probe must still drop excerpts")
   }
 
-  test("streaming drift monitor end-to-end: incremental PSI = batch psiDrift, checkpoint resume, replay no-op") {
+  test("streaming drift monitor end-to-end: incremental PSI = batch psiDrift, checkpoint resume, replay no-op", Stateful) {
     import graft.operators.{DriftMonitor, Relational}
     val in = tmp()
     val idx = tmp() + "/drift"
@@ -1285,7 +1285,7 @@ class SystemSpec extends SparkSpec {
       (0 until 40).map(i => ("B", (i * 13 % 100).toDouble))
     drop("b1.json", b1)
     runOnce()
-    assert(DriftMonitor.committedBatches(spark, idx).sorted ==
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted ==
       Seq("0", "1", "ref"))
     // EQUIVALENCE: incremental PSI == one-shot batch psiDrift over the
     // union, column for column (shared bucket + smoothing trees)
@@ -1318,7 +1318,7 @@ class SystemSpec extends SparkSpec {
     assert(thrown.getMessage.contains("degenerate"))
   }
 
-  test("streaming CUSUM end-to-end: foreachBatch wiring, streamed = one-shot, checkpoint resume, replay no-op") {
+  test("streaming CUSUM end-to-end: foreachBatch wiring, streamed = one-shot, checkpoint resume, replay no-op", Stateful) {
     import graft.operators.{DriftMonitor, Relational}
     val in = tmp()
     val st = tmp() + "/cusum"
@@ -1352,14 +1352,14 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 0 until 25)
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st) == Seq(0L))
+    assert(graft.store.CommitLog(spark, st).read().versions == Seq(0L))
     // resume from checkpoint in a "new run": only the new file folds
     drop("b1.json", 25 until 70)
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // empty trigger → no batch, no version
     runOnce()
-    assert(DriftMonitor.committedCusumVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // streamed scores ≡ one-shot detector over everything
     val all = (for (k <- Seq("A", "B"); t <- 0 until 70) yield
       (k, t.toLong, value(k, t))).toDF("k", "t", "v")
@@ -1387,7 +1387,7 @@ class SystemSpec extends SparkSpec {
     assert(DriftMonitor.cusumScores(spark, st).count() == before)
   }
 
-  test("streaming market tick end-to-end: foreachBatch wiring, incremental = batch, replay no-op") {
+  test("streaming market tick end-to-end: foreachBatch wiring, incremental = batch, replay no-op", Stateful) {
     // the OpsSpec test drives the pure merges; this one proves the
     // WIRING: a real writeStream.foreachBatch feeding marketTickBatch
     // with the streaming batch id, versioned state with commit markers,
@@ -1426,13 +1426,13 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 30)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.store.CommitLog(spark, st).read().versions == Seq(0L))
     drop("b1.json", 31 to 60)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // nothing new → no batch fires, no state version appears
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // the standing view now equals a from-scratch batch computation
     val all = (for (k <- Seq("A", "B"); t <- 1 to 60) yield
       (k, t.toLong, price(k, t), 1.0 + t % 3))
@@ -1448,12 +1448,12 @@ class SystemSpec extends SparkSpec {
     assert(MarketIncremental.barsView(spark, st, cfg).count() == wantBars)
     // the frontier stays small: open bars <= one per series, and the
     // label log holds the finalized entries permanently
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.store.CommitLog(spark, st).read().versions.last
     assert(spark.read.parquet(s"$st/v=$v/open_bars").count() <= 2)
     assert(spark.read.parquet(s"$st/labels").count() > 0)
   }
 
-  test("streaming market features end-to-end: foreachBatch wiring, streamed = build bit-for-bit, replay no-op") {
+  test("streaming market features end-to-end: foreachBatch wiring, streamed = build bit-for-bit, replay no-op", Stateful) {
     // OpsSpec pins the pure fold; this proves the WIRING: a real
     // writeStream.foreachBatch feeding marketFeaturesBatch with the
     // streaming batch id, versioned carry with commit markers,
@@ -1497,14 +1497,14 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 40)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.store.CommitLog(spark, st).read().versions == Seq(0L))
     // the SAME checkpoint resumes; only the new file folds as batch 1
     drop("b1.json", 41 to 100)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // empty trigger → no batch, no version
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // streamed view ≡ one-shot build, BIT-identical doubles
     val all = ohlcv((for (s <- Seq("S1", "S2"); t <- 1 to 100) yield
       (s, t.toLong, close(s, t))).toDF("s", "t", "c"))
@@ -1525,11 +1525,11 @@ class SystemSpec extends SparkSpec {
       ohlcv(Seq(("S1", 1L, 50.0)).toDF("s", "t", "c")), cfg)
     assert(MarketIncremental.featuresView(spark, st, cfg).count() == got.size)
     // the carry is O(1)/series
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.store.CommitLog(spark, st).read().versions.last
     assert(spark.read.parquet(s"$st/v=$v/carry").count() == 2)
   }
 
-  test("streaming book snapshots end-to-end: foreachBatch wiring, streamed = one-shot, replay no-op") {
+  test("streaming book snapshots end-to-end: foreachBatch wiring, streamed = one-shot, replay no-op", Stateful) {
     // OpsSpec drives bookSnapshotFold directly; this proves the WIRING:
     // a real writeStream.foreachBatch feeding bookSnapshotBatch with
     // the streaming batch id, _commits idempotency, checkpoint resume,
@@ -1571,13 +1571,13 @@ class SystemSpec extends SparkSpec {
     }
     drop("b0.json", 1 to 35)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st) == Seq(0L))
+    assert(graft.store.CommitLog(spark, st).read().versions == Seq(0L))
     drop("b1.json", 36 to 70)
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     // nothing new → no batch fires, no state version appears
     runOnce()
-    assert(MarketIncremental.committedVersions(spark, st).last == 1L)
+    assert(graft.store.CommitLog(spark, st).read().versions.last == 1L)
     val all = (for (k <- Seq("A", "B"); t <- 1 to 70) yield delta(k, t))
       .toDF("k", "t", "side", "price", "amount")
       .withColumn("ts", expr("timestamp_micros(t)"))
@@ -1590,11 +1590,11 @@ class SystemSpec extends SparkSpec {
       s"streamed snapshots diverged from one-shot (${got.size} vs ${want.size}):\n" +
         s" got ${got.take(3)}\nwant ${want.take(3)}")
     // frontier bounded by standing levels (<= 8 prices x 2 sides x 2 series)
-    val v = MarketIncremental.committedVersions(spark, st).last
+    val v = graft.store.CommitLog(spark, st).read().versions.last
     assert(spark.read.parquet(s"$st/v=$v/book").count() <= 32)
   }
 
-  test("streaming semantic dedup end-to-end: bootstrap, foreachBatch wiring, checkpoint resume") {
+  test("streaming semantic dedup end-to-end: bootstrap, foreachBatch wiring, checkpoint resume", Stateful) {
     // the OpsSpec test drives incrementalSemanticDedupBatch directly;
     // this one proves the streaming WIRING: a real writeStream
     // .foreachBatch passing the streaming batch id, index bootstrap on
@@ -1634,18 +1634,18 @@ class SystemSpec extends SparkSpec {
       (2L, Seq(0.999, 0.01, 0.0, 0.0)),
       (3L, Seq(0.0, 1.0, 0.0, 0.0))))
     assert(runOnce() == Seq(1L, 3L), "in-batch semantic dup must drop at bootstrap")
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx) == Seq("0"))
+    assert(graft.store.CommitLog(spark, idx).read().committed == Seq("0"))
     // batch 1 resumes from the SAME checkpoint (id 1): a cross-batch dup
     // of indexed 3 drops, a novel direction survives and is appended
     drop("b1.json", Seq(
       (10L, Seq(0.01, 0.999, 0.0, 0.0)),
       (11L, Seq(0.0, 0.0, 1.0, 0.0))))
     assert(runOnce() == Seq(11L), "cross-batch semantic dup must drop on resume")
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx).sorted ==
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted ==
       Seq("0", "1"))
     // nothing new → no batch, no index growth
     assert(runOnce() == Seq.empty)
-    assert(graft.operators.Similarity.ivfCommittedBatches(spark, idx).sorted ==
+    assert(graft.store.CommitLog(spark, idx).read().committed.sorted ==
       Seq("0", "1"))
   }
 
