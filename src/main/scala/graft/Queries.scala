@@ -1507,7 +1507,7 @@ object Queries {
         Seq("event_type"), "ts", "value", "event_id", 35.0, 5.0, 500.0)
       operators.DriftMonitor.cusumBatch(s, st, 1L, e.filter(col("ts") >= cut),
         Seq("event_type"), "ts", "value", "event_id", 35.0, 5.0, 500.0)
-      operators.DriftMonitor.cusumScores(s, st)
+      operators.DriftMonitor.cusumScores(s, st, Seq("event_type"), "ts", "event_id")
         .select(col("event_type"), micros(col("ts")).as("ts_us"),
           col("event_id"), col("value"), col("s_pos"), col("s_neg"),
           col("alarm_pos"), col("alarm_neg"))
@@ -4675,7 +4675,7 @@ object Queries {
   // SAME rounds as MATERIALIZED CTEs, so both engines fold identically
   // regardless of convergence; the exact driver-side Gauss-Jordan stays
   // as the OpsSpec cross-check (agreement ≤ 1e−4 pinned; measured 1e−6
-  // to 256 keys in MatrixRehearsal).
+  // to 256 keys, BASELINE.md "Matrix-family key-count rehearsal").
   private val CgRounds = 6
   private val ErcRounds = 12
   private val ErcDamping = 0.8

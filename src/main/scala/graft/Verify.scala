@@ -1,22 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: `Verify <sfDir> <outDir> [q1,q2,...]` writes each
+  * SparkEntry.queries result (or the named ones) → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/selfcheck.py`). Runs on
+  * [[LocalSession]], the session Bench times. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only): comma-separated query names
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

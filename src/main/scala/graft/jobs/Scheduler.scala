@@ -227,11 +227,7 @@ object Scheduler {
     val ttlDays = if (args.length > 5) args(5).toInt else 30
     val exchange = if (args.length > 6) args(6) else "binance"
     val dropPath = if (args.length > 7) args(7) else s"${lakePath}_drops"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.LocalSession()
     val store = new FeatureStore(spark, storePath)
     val fetch: (Long, Long) => DataFrame = lakeFetch(spark, lakePath, exchange, symbol)
     val queries = Seq(

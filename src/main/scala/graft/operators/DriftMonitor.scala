@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.store.CommitLog
 
@@ -154,12 +155,18 @@ object DriftMonitor {
   def emptyCusumCarry(spark: SparkSession, keys: Seq[String]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++
-          Seq("p_pos", "min_pos", "p_neg", "min_neg", "w_ts_us", "w_tb")
-            .map(n => org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.LongType))))
+      StructType(keys.map(StructField(_, StringType)) ++
+        Seq("p_pos", "min_pos", "p_neg", "min_neg", "w_ts_us", "w_tb")
+          .map(StructField(_, LongType))))
+
+  /** The CUSUM scores log's schema — [[cusumFold]]'s `scored` row shape:
+    * `(keys…, ts, tiebreak, value, s_pos, s_neg, alarm_pos, alarm_neg)`. */
+  def cusumScoresSchema(keys: Seq[String], tsCol: String, tiebreakCol: String)
+      : StructType =
+    StructType(keys.map(StructField(_, StringType)) ++ Seq(
+      StructField(tsCol, TimestampType), StructField(tiebreakCol, LongType)) ++
+      Seq("value", "s_pos", "s_neg").map(StructField(_, DoubleType)) ++
+      Seq("alarm_pos", "alarm_neg").map(StructField(_, BooleanType)))
 
   /** Fold one micro-batch into the CUSUM state. Returns
     * `(scored, carry2)`: `scored` is exactly the
@@ -281,20 +288,21 @@ object DriftMonitor {
         tiebreakCol, target, slack, threshold, scale)
       scored.write.mode("overwrite").parquet(s"$stateDir/scores/batch=$batchId")
       carry2.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/carry")
-    }(cusumScores(spark, stateDir, _))
+    }(cusumScores(spark, stateDir, cusumScoresSchema(keys, tsCol, tiebreakCol), _))
 
-  /** Every committed batch's CUSUM scores — the union of the
-    * `scores/batch=<id>` logs (uncommitted/torn batch dirs prune at the
-    * listing via the partition column). Row shape =
-    * [[Relational.cusumDetect]]'s. */
-  def cusumScores(spark: SparkSession, stateDir: String): DataFrame =
-    cusumScores(spark, stateDir, CommitLog(spark, stateDir).read().versions)
+  /** Every committed batch's CUSUM scores — the union of the committed
+    * `scores/batch=<id>` logs, read with [[cusumScoresSchema]] (the
+    * `keys`, `tsCol` and `tiebreakCol` the batches were folded with).
+    * Row shape = [[Relational.cusumDetect]]'s. */
+  def cusumScores(spark: SparkSession, stateDir: String, keys: Seq[String],
+                  tsCol: String, tiebreakCol: String): DataFrame =
+    cusumScores(spark, stateDir, cusumScoresSchema(keys, tsCol, tiebreakCol),
+      CommitLog(spark, stateDir).read().versions)
 
   private def cusumScores(spark: SparkSession, stateDir: String,
-                          done: Seq[Long]): DataFrame = {
+                          schema: StructType, done: Seq[Long]): DataFrame = {
     require(done.nonEmpty, s"cusumScores: nothing committed at $stateDir")
-    spark.read.parquet(s"$stateDir/scores")
-      .filter(col("batch").isin(done: _*))
-      .drop("batch")
+    spark.read.schema(schema).parquet(
+      CommitLog(spark, stateDir).batchDirs("scores", done.map(_.toString)): _*)
   }
 }

@@ -272,13 +272,7 @@ object FeatureServer {
   def main(args: Array[String]): Unit = {
     val basePath = args(0)
     val port = if (args.length > 1) args(1).toInt else 8080
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val srv = new FeatureServer(new FeatureStore(spark, basePath),
       sys.env.get("GRAFT_ADMIN_TOKEN"), port = port)
     val bound = srv.start()

@@ -14,15 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     for an id stays invisible until its marker exists, so a crash
   *     between writes exposes nothing. A compaction's marker (`c<n>`,
   *     the compactor's reserved id namespace) lists in its body the ids
-  *     it supersedes, transitively; ordinary markers are empty.
+  *     it supersedes, transitively; ordinary markers are empty. A marker
+  *     with a body is written as `.<id>.tmp`, which [[read]] ignores,
+  *     and renamed into place, so no marker is ever seen without it.
   *   - `<table>/batch=<id>/` — a batch's data in each table it writes.
   *   - `v=<id>/` — versioned fold state ([[fold]]).
   *
-  * The commit is an exclusive create: of two writers of one id exactly
-  * one commits. Within a JVM that holds on any file system (writers of
-  * one root serialize on a lock); across processes it holds where the
-  * file system's exclusive create is atomic (HDFS), and the local file
-  * system checks then creates. */
+  * The commit is an exclusive create (or, for a marker with a body, a
+  * rename onto a free name): of two writers of one id exactly one
+  * commits. Within a JVM that holds on any file system (writers of one
+  * root serialize on a lock); across processes it holds where the file
+  * system's exclusive create and rename are atomic (HDFS, whose rename
+  * refuses an existing target), and the local file system checks then
+  * creates. */
 final class CommitLog(val fs: FileSystem, val root: String) {
   private val dir = new Path(s"$root/_commits")
   private val lock = CommitLog.lockFor(fs.makeQualified(dir).toString)
@@ -31,7 +35,8 @@ final class CommitLog(val fs: FileSystem, val root: String) {
     * (`c*`) are opened for their bodies. */
   def read(): CommitLog.Snapshot =
     if (!fs.exists(dir)) CommitLog.Snapshot(Map.empty)
-    else CommitLog.Snapshot(fs.listStatus(dir).filter(_.isFile).map { st =>
+    else CommitLog.Snapshot(fs.listStatus(dir)
+      .filter(st => st.isFile && !CommitLog.isTemp(st.getPath)).map { st =>
       val name = st.getPath.getName
       val body =
         if (!name.startsWith("c")) ""
@@ -47,11 +52,16 @@ final class CommitLog(val fs: FileSystem, val root: String) {
     * Returns false when `id` was already committed (another writer won). */
   def commit(id: String, supersedes: Seq[String] = Seq.empty): Boolean =
     lock.synchronized {
-      try {
-        val out = fs.create(new Path(dir, id), false)
+      val marker = new Path(dir, id)
+      if (supersedes.isEmpty)
+        try { fs.create(marker, false).close(); true }
+        catch { case _: FileAlreadyExistsException => false }
+      else !fs.exists(marker) && {
+        val tmp = new Path(dir, s".$id.tmp")
+        val out = fs.create(tmp, true)
         try out.write(supersedes.mkString("\n").getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: FileAlreadyExistsException => false }
+        fs.rename(tmp, marker) || { fs.delete(tmp, false); false }
+      }
     }
 
   /** Drop every marker, e.g. before an index is rebuilt from scratch. */
@@ -107,7 +117,10 @@ final class CommitLog(val fs: FileSystem, val root: String) {
     }
     val committed = log.committed
     if (committed.size <= 1) return 0
-    // a crashed compactor's output (data written, marker never created)
+    // a crashed compactor's leftovers: a marker body never renamed into
+    // place, data written without a marker
+    fs.listStatus(dir).filter(st => CommitLog.isTemp(st.getPath))
+      .foreach(st => fs.delete(st.getPath, false))
     for (t <- tables; p = new Path(s"$root/$t") if fs.exists(p);
          st <- fs.listStatus(p) if st.isDirectory;
          id = st.getPath.getName.stripPrefix("batch=")
@@ -148,6 +161,8 @@ final class CommitLog(val fs: FileSystem, val root: String) {
 
 object CommitLog {
   val IdPattern = "[A-Za-z0-9_-]+"
+
+  private def isTemp(p: Path): Boolean = p.getName.startsWith(".")
 
   def apply(spark: SparkSession, root: String): CommitLog =
     new CommitLog(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), root)

@@ -15,6 +15,7 @@ import graft.functions.{windows => W, TaIndicators => TA}
   *    imbalance+spread (`test_orderbook_benchmark.py:8-43`)
   * Data is generated in-Spark (deterministic hash walk), single series —
   * the reference's single-process shape. Prints one JSON line per op.
+  * Usage: `runMain graft.tools.MicroBench [rows]` (default 100,000).
   */
 object MicroBench {
 
@@ -40,12 +41,8 @@ object MicroBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 100000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
 
     val series = syntheticSeries(spark, n).cache()
     series.count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -18,23 +18,24 @@ import graft.operators.Dedup
   * Replicas are materialized to parquet under target/ first so every
   * measured run starts from a real scan, like the bench queries.
   *
-  * Usage: `SPARK_GRAFT_SF_DIR=... runMain graft.tools.ScaleRehearsal`
-  * (env `SPARK_GRAFT_REHEARSAL_MULTS` overrides the default 1,3,10).
+  * Usage: `SPARK_GRAFT_SF_DIR=... runMain graft.tools.ScaleRehearsal
+  * [section ...]` runs the named [[Sections]] (all of them by default);
+  * env `SPARK_GRAFT_REHEARSAL_MULTS` overrides the default 1,3,10.
   * Prints one stderr line per (multiplier, stage) and a final JSON line
   * on stdout for BASELINE.md. */
 object ScaleRehearsal {
+  private val Sections = Seq("dedup", "semantic", "skew", "newops", "r4ops", "sampled",
+    "market", "r7ops", "winsor", "book", "r8ops")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_MULTS", "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
+    args.filterNot(Sections.contains).foreach(a =>
+      sys.error(s"unknown section $a; sections: ${Sections.mkString(" ")}"))
+    val selected: String => Boolean = if (args.isEmpty) _ => true else args.toSet
     val outBase = "target/rehearsal"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
 
@@ -61,10 +62,10 @@ object ScaleRehearsal {
       def mat(): Long = df.queryExecution.toRdd.count()
     }
 
-    // The dedup loop is the expensive core; `SPARK_GRAFT_REHEARSAL_DEDUP=0`
+    // The dedup loop is the expensive core; leaving out section `dedup`
     // skips it (replica parquets from a prior run are reused) so the
     // op-specific sections below can be re-measured in isolation.
-    val runDedup = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_DEDUP", "1") != "0"
+    val runDedup = selected("dedup")
     mults.foreach { m =>
       (0 until m).map(replicate).reduce(_ unionByName _)
         .repartition(32)
@@ -136,7 +137,7 @@ object ScaleRehearsal {
     // sizes, k grown with n (cluster size ≈ repCap, the operator's scale
     // contract) — the fused graft_nearest_centroid assignment must stay
     // compiled at k in the hundreds (k sibling DotProducts would not).
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_SEMANTIC", "1") != "0") {
+    if (selected("semantic")) {
       import graft.operators.Similarity
       for (n <- Seq(2000, 20000, 60000)) {
         val k = math.max(8, n / 250)
@@ -161,7 +162,7 @@ object ScaleRehearsal {
     // task — timed at two sizes to show the quadratic; capped (default
     // 1000), the hot buckets are dropped and the run stays at corpus
     // cost whatever N is.
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_SKEW", "1") != "0") {
+    if (selected("skew")) {
       val boiler = (0 until 12).map(i => s"boilerplate$i").mkString(" ")
       def withMass(n: Int): DataFrame = {
         import spark.implicits._
@@ -191,7 +192,7 @@ object ScaleRehearsal {
     // corpus-side cost is tokenize+explode+filter (linear scan work) —
     // the scoring frames stay query-vocabulary-sized at ANY corpus size.
     // Sessionize: one keyed shuffle over the event stream.
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_NEWOPS", "1") != "0") {
+    if (selected("newops")) {
       import graft.operators.{Relational, Similarity, TextAnalysis}
       for (n <- Seq(2000, 20000, 60000)) {
         val k = math.max(8, n / 1000)
@@ -235,7 +236,7 @@ object ScaleRehearsal {
     // constant-size grid — the sketch pass must stay a linear scan.
     // DSIR: two token scans + broadcast λ table. PQ: encode is a pure
     // projection (linear), ADC search a scan + heap (flat overhead).
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_R4OPS", "1") != "0") {
+    if (selected("r4ops")) {
       import graft.operators.{Relational, Similarity, Sketches, TextAnalysis}
       val ev4 = spark.read.parquet(s"$sfDir/events.parquet")
         .select(col("user_id"), col("event_type"), col("value"),
@@ -295,7 +296,7 @@ object ScaleRehearsal {
     // per-round training wall drops ~with the fraction, and the sampled
     // model's outputs stay at full-train quality (assignment agreement
     // for k-means; re-rank top-10 overlap for PQ).
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_SAMPLED", "1") != "0") {
+    if (selected("sampled")) {
       import graft.operators.Similarity
       // DISPERSED pseudo-random vectors (fract(sin·const)·2−1, the classic
       // shader hash) — the sin-wave fixture used elsewhere is deliberately
@@ -453,7 +454,7 @@ object ScaleRehearsal {
     // volumeBars: one keyed exchange (prefix sum + OHLCV agg share it).
     // tripleBarrier: series-keyed join with bounded horizon fan-out —
     // linear in rows at constant tick rate.
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_MARKET", "1") != "0") {
+    if (selected("market")) {
       import graft.operators.{Labeling, Relational, Resample}
       val ev6 = spark.read.parquet(s"$sfDir/events.parquet")
         .select(col("event_id"), col("event_type"), col("value"),
@@ -504,7 +505,7 @@ object ScaleRehearsal {
     // exchange, sort-only on top — linear in snapshots. MarketIncremental:
     // folding the LAST batch of a long history must price like the BATCH
     // (plus open state), not like the history — the incremental claim.
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_R7OPS", "1") != "0") {
+    if (selected("r7ops")) {
       import graft.operators.{Labeling, MarketIncremental, Resample, TextAnalysis}
       for (m <- Seq(1, mults.max)) {
         val docs = spark.read.parquet(s"$outBase/docs_x$m")
@@ -621,7 +622,7 @@ object ScaleRehearsal {
     // stays ~linear in rows; (b) at accuracy 10⁴ the sketch's winsor
     // band edges and clip/flag decisions diverge from exact by a
     // bounded, recorded margin (the divergence contract for BASELINE).
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_WINSOR", "1") != "0") {
+    if (selected("winsor")) {
       import graft.operators.Relational
       val ev8 = spark.read.parquet(s"$sfDir/events.parquet")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -679,7 +680,7 @@ object ScaleRehearsal {
     // fold's probe is (standing ∪ touched) × chunk boundaries — LINEAR
     // at fixed chunkUs; (c) per-fold walls stay ~flat from the first
     // chunk to the last (the frontier, not the history, is the state).
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_BOOK", "1") != "0") {
+    if (selected("book")) {
       import graft.operators.MarketIncremental
       def bookFeed(n: Long): DataFrame = spark.range(n)
         .select(col("id"),
@@ -751,7 +752,7 @@ object ScaleRehearsal {
     // so the wall is a single-threaded O(n log n) sort; the recorded
     // numbers price the "shard long histories by time-chunking with the
     // cusumFold carry" advice rather than leaving it as prose.
-    if (sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_R8OPS", "1") != "0") {
+    if (selected("r8ops")) {
       import graft.operators.{Backtest, Relational}
       val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
         .select(col("event_type"), col("ts").cast("timestamp").as("ts"),

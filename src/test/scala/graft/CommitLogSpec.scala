@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,9 +17,28 @@ import graft.store.CommitLog
 class Crash extends RuntimeException("injected crash")
 
 /** Local file system that crashes once at the armed delete, before it
-  * (`before`) or after it. */
+  * (`before`) or after it, or at the first write into a file created at
+  * a `tornWrite` path (the file exists, its body does not). */
 class FaultyFs extends LocalFileSystem {
   @volatile var armed: Option[(Path => Boolean, Boolean)] = None
+  @volatile var tornWrite: Option[Path => Boolean] = None
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+    tornWrite match {
+      case Some(hit) if hit(f) =>
+        tornWrite = None
+        new FSDataOutputStream(new java.io.OutputStream {
+          def write(b: Int): Unit = throw new Crash
+          override def write(b: Array[Byte], off: Int, len: Int): Unit =
+            if (len > 0) throw new Crash
+          override def close(): Unit = out.close()
+        }, null)
+      case _ => out
+    }
+  }
   override def delete(f: Path, recursive: Boolean): Boolean = armed match {
     case Some((hit, before)) if hit(f) =>
       armed = None
@@ -78,6 +99,25 @@ class CommitLogSpec extends SparkSpec {
     fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
     fs
   }
+
+  /** An index-shaped log: one row per batch in table `t`. */
+  private def append(log: CommitLog, id: String): Boolean =
+    log.append(id, Seq("t")) { bid =>
+      Seq((bid, 1)).toDF("id", "n").write.mode("overwrite")
+        .parquet(s"${log.root}/t/batch=$bid")
+    }
+  private def compact(log: CommitLog, crashData: Boolean = false): Int =
+    log.compact(Seq("t")) { (cid, committed) =>
+      spark.read.parquet(s"${log.root}/t")
+        .where(col("batch").cast("string").isin(committed: _*)).drop("batch")
+        .write.mode("overwrite").parquet(s"${log.root}/t/batch=$cid")
+      if (crashData) throw new Crash
+    }
+  private def indexView(log: CommitLog): (Seq[String], Seq[String]) = {
+    val committed = log.read().committed
+    (committed, rows(spark.read.parquet(log.batchDirs("t", committed): _*)))
+  }
+  private def isMarker(p: Path) = p.getParent.getName == "_commits"
 
   test("commit is exclusive: of two writers of one id exactly one commits", Stateful) {
     val log = CommitLog(spark, tmp())
@@ -147,23 +187,6 @@ class CommitLogSpec extends SparkSpec {
     }
 
     // compaction: consolidated data, marker, GC
-    def append(log: CommitLog, id: String): Boolean =
-      log.append(id, Seq("t")) { bid =>
-        Seq((bid, 1)).toDF("id", "n").write.mode("overwrite")
-          .parquet(s"${log.root}/t/batch=$bid")
-      }
-    def compact(log: CommitLog, crashData: Boolean = false): Int =
-      log.compact(Seq("t")) { (cid, committed) =>
-        spark.read.parquet(s"${log.root}/t")
-          .where(col("batch").cast("string").isin(committed: _*)).drop("batch")
-          .write.mode("overwrite").parquet(s"${log.root}/t/batch=$cid")
-        if (crashData) throw new Crash
-      }
-    def indexView(log: CommitLog): (Seq[String], Seq[String]) = {
-      val committed = log.read().committed
-      (committed, rows(spark.read.parquet(log.batchDirs("t", committed): _*)))
-    }
-    def isMarker(p: Path) = p.getParent.getName == "_commits"
     val cleanIdx = new CommitLog(faultyFs(), tmp())
     Seq("0", "1", "2").foreach(append(cleanIdx, _))
     assert(compact(cleanIdx) == 3)
@@ -185,6 +208,21 @@ class CommitLogSpec extends SparkSpec {
       assert(append(log, "3"))
       assert(indexView(log) == wantIdx, s"crash after compaction $crashAt")
     }
+  }
+
+  test("a crash writing a compaction marker's body commits nothing; the rerun compacts",
+    Stateful) {
+    val fs = faultyFs()
+    val log = new CommitLog(fs, tmp())
+    Seq("0", "1", "2").foreach(append(log, _))
+    val before = indexView(log)
+    fs.tornWrite = Some(isMarker)
+    intercept[Crash](compact(log))
+    assert(indexView(log) == before, "a torn marker must not change the committed view")
+    assert(compact(log) == 3)
+    assert(indexView(log) == (Seq("c0"), before._2))
+    assert(new java.io.File(s"${log.root}/_commits").list().toSeq.filterNot(_.endsWith(".crc")) ==
+      Seq("c0"), "the torn marker's temp file is swept")
   }
 
   test("labelsView lists the log once: the same FS calls with 2 committed batches as with 50",
@@ -264,6 +302,14 @@ class CommitLogSpec extends SparkSpec {
     marketFeaturesBatch(spark, feat, 0L, ohlcv, featCfg)
     check(s"$feat/features/batch=0", emptyFeatures(spark, featCfg))
     check(s"$feat/v=0/carry", emptyFeatCarry(spark, featCfg))
+
+    val cusum = tmp()
+    graft.operators.DriftMonitor.cusumBatch(spark, cusum, 0L, ticks(1 to 60), Seq("k"),
+      "ts", "p", "t", target = 110.0, slack = 1.0, threshold = 50.0)
+    check(s"$cusum/scores/batch=0", spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](),
+      graft.operators.DriftMonitor.cusumScoresSchema(Seq("k"), "ts", "t")))
+    check(s"$cusum/v=0/carry", graft.operators.DriftMonitor.emptyCusumCarry(spark, Seq("k")))
 
     val betCfg = BetCfg(Seq("k"), stepSize = 0.05)
     val bets = (for { s <- Seq("A", "B"); i <- 1 to 20 } yield

@@ -15,6 +15,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // Not the engine's semantics: the mains run Spark's default, ANSI
+      // on. Under ANSI, OpsSpec's arHalfLife, leadingEigen and
+      // probabilisticSharpe specs raise DIVIDE_BY_ZERO on their
+      // degenerate (constant-series / zero) inputs.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

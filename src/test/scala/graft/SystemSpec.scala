@@ -1369,7 +1369,7 @@ class SystemSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(2)) ->
         ((r.getDouble(4), r.getDouble(5), r.getBoolean(6), r.getBoolean(7))))
       .toMap
-    val got = DriftMonitor.cusumScores(spark, st)
+    val got = DriftMonitor.cusumScores(spark, st, Seq("k"), "ts", "t")
       .collect().map(r => (r.getString(0), r.getLong(2)) ->
         ((r.getDouble(4), r.getDouble(5), r.getBoolean(6), r.getBoolean(7))))
       .toMap
@@ -1381,10 +1381,10 @@ class SystemSpec extends SparkSpec {
     assert(!got.exists { case ((k, _), g) => k == "B" && (g._3 || g._4) },
       "B sits at target and must stay silent")
     // explicit replay of an old batch id returns the view, no refold
-    val before = DriftMonitor.cusumScores(spark, st).count()
+    val before = DriftMonitor.cusumScores(spark, st, Seq("k"), "ts", "t").count()
     DriftMonitor.cusumBatch(spark, st, 0L,
       all.limit(3), Seq("k"), "ts", "v", "t", tgt, slk, thr)
-    assert(DriftMonitor.cusumScores(spark, st).count() == before)
+    assert(DriftMonitor.cusumScores(spark, st, Seq("k"), "ts", "t").count() == before)
   }
 
   test("streaming market tick end-to-end: foreachBatch wiring, incremental = batch, replay no-op", Stateful) {

@@ -8,8 +8,9 @@ Usage: python3 tools/tally.py <verifyOutDir> [sbtTestLog]
  - query count      = parquet result dirs graft.Verify wrote
  - oracled count    = entries in its oracle_sql.json
  - rows-only names  = the queries with results but no oracle
- - test count       = "Total number of tests run: N" from the sbt log
-                      (kept as-is when no log is given)
+ - test counts      = "Tests: succeeded N, failed M, canceled C" from the
+                      sbt log (kept as-is when no log is given); the
+                      block says "green" only when M and C are 0
 
 Rewrites the block between the `tally:begin` / `tally:end` markers in
 README.md in place and prints the new line.
@@ -33,10 +34,11 @@ def main():
     tests = None
     if test_log:
         with open(test_log) as f:
-            runs = re.findall(r"Total number of tests run: (\d+)", f.read())
+            runs = re.findall(
+                r"Tests: succeeded (\d+), failed (\d+), canceled (\d+)", f.read())
         if not runs:
-            sys.exit(f"no 'Total number of tests run' line in {test_log}")
-        tests = sum(int(n) for n in runs)
+            sys.exit(f"no 'Tests: succeeded N, failed M, canceled C' line in {test_log}")
+        tests = [sum(int(r[i]) for r in runs) for i in range(3)]
 
     readme = os.path.join(repo, "README.md")
     with open(readme) as f:
@@ -46,10 +48,13 @@ def main():
     end = text.index("<!-- tally:end -->")
 
     if tests is None:
-        m = re.search(r"\*\*(\d+) ScalaTests green\*\*", text[begin:end])
-        tests_str = f"**{m.group(1)} ScalaTests green**" if m else "ScalaTests green"
+        m = re.search(r"\*\*\d+ ScalaTests [^*]*\*\*[^.]*", text[begin:end])
+        tests_str = m.group(0) if m else "ScalaTests green"
+    elif tests[1] == tests[2] == 0:
+        tests_str = f"**{tests[0]} ScalaTests green**"
     else:
-        tests_str = f"**{tests} ScalaTests green**"
+        tests_str = (f"**{tests[0]} ScalaTests passed** ({tests[1]} failed, "
+                     f"{tests[2]} canceled)")
     # rationale is keyed PER QUERY from this table — an unexplained
     # rows-only query renders with no prose rather than inheriting
     # another query's justification (round-12 advice)
