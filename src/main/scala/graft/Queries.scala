@@ -33,10 +33,10 @@ object Queries {
   /** Table loader. Normalizes the testdata's TIMESTAMP_NTZ (µs) columns
     * to plain UTC `TimestampType`: the session timezone is UTC, so the
     * reinterpretation is the identity on the underlying micros — matching
-    * DuckDB, which reads the same parquet columns natively. */
+    * DuckDB, which reads the same parquet columns natively. The oracle's
+    * arithmetic (div-by-zero → null, silent overflow) is the session's
+    * ANSI-off default, set once in [[graft.LocalSession]]. */
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // pandas/DuckDB-matching arithmetic: div-by-zero → null, silent overflow
-    s.conf.set("spark.sql.ansi.enabled", "false")
     val raw = s.read.parquet(s"$dir/$name.parquet")
     val cols = raw.schema.fields.map { f =>
       f.dataType match {

@@ -83,19 +83,10 @@ object MarketFeatures {
     * be order-nondeterministic on one). */
   def buildChunked(ohlcv: DataFrame, chunkUs: Long,
                    dropnaFinal: Boolean = true, maxChunks: Int = 4096): DataFrame = {
-    import graft.operators.MarketIncremental
-    require(chunkUs > 0L, s"chunkUs must be positive, got $chunkUs")
+    import graft.operators.{DriverLoop, MarketIncremental}
     val cfg = MarketIncremental.FeatCfg(seriesKeys, "timestamp", FeatureVersion)
     val spark = ohlcv.sparkSession
-    val base = ohlcv.withColumn("_chunk",
-      expr("(unix_micros(cast(timestamp as timestamp)) - " +
-        s"pmod(unix_micros(cast(timestamp as timestamp)), ${chunkUs}L)) div ${chunkUs}L"))
-      .localCheckpoint(true)
-    val chunkIds = base.select(col("_chunk")).distinct()
-      .orderBy(col("_chunk")).collect().map(_.getLong(0)).toSeq
-    require(chunkIds.size <= maxChunks,
-      s"buildChunked: ${chunkIds.size} chunks exceeds maxChunks=$maxChunks " +
-        "— raise chunkUs (each chunk is a driver-loop fold)")
+    val chunks = DriverLoop.chunks(ohlcv, "timestamp", chunkUs, maxChunks, "buildChunked")
     var carry = MarketIncremental.emptyFeatCarry(spark, cfg)
     // union ONCE at the end (the bookSnapshotsChunked rationale): each
     // `feat` is a filter+project over the fold's checkpointed window
@@ -104,9 +95,8 @@ object MarketFeatures {
     // job per chunk removed, and the final action computes all chunk
     // branches in one parallel job. (r13)
     val parts = Seq.newBuilder[DataFrame]
-    chunkIds.foreach { c =>
-      val (feat, carry2) = MarketIncremental.marketFeaturesFold(
-        carry, base.where(col("_chunk") === c).drop("_chunk"), cfg, dropnaFinal)
+    chunks.foreach { chunk =>
+      val (feat, carry2) = MarketIncremental.marketFeaturesFold(carry, chunk, cfg, dropnaFinal)
       parts += feat
       carry = carry2
     }

@@ -354,26 +354,19 @@ object OrderbookFeatures {
     * from the frontier ranked top-N.
     *
     * Driver loop over chunks (sequential by construction — each fold
-    * consumes the previous frontier), per-chunk frames eagerly
-    * localCheckpointed: the pagerank/kmeans loop precedent. `maxChunks`
-    * guards the loop LOUDLY — size `chunkUs` to the span, not below it. */
+    * consumes the previous frontier) cut by [[graft.operators.DriverLoop.chunks]];
+    * each fold collects only its series-sized cursor and leaves its
+    * shared frames lazily checkpointed, and ONE final assembly consumes
+    * them all. `maxChunks` guards the loop LOUDLY — size `chunkUs` to
+    * the span, not below it. */
   def bookSnapshotsChunked(deltas: DataFrame, keys: Seq[String], tsCol: String,
                            tiebreakCol: String, stepUs: Long, nLevels: Int,
                            chunkUs: Long, maxChunks: Int = 4096): DataFrame = {
-    import graft.operators.MarketIncremental
-    require(chunkUs > 0L, s"chunkUs must be positive, got $chunkUs")
+    import graft.operators.{DriverLoop, MarketIncremental}
     val cfg = MarketIncremental.BookCfg(keys, tsCol, "side", "price",
       "amount", tiebreakCol, stepUs, nLevels)
     val spark = deltas.sparkSession
-    val base = deltas.withColumn("_chunk",
-      expr(s"(unix_micros(cast(`$tsCol` as timestamp)) - " +
-        s"pmod(unix_micros(cast(`$tsCol` as timestamp)), ${chunkUs}L)) div ${chunkUs}L"))
-      .localCheckpoint(true)
-    val chunkIds = base.select(col("_chunk")).distinct()
-      .orderBy(col("_chunk")).collect().map(_.getLong(0)).toSeq
-    require(chunkIds.size <= maxChunks,
-      s"bookSnapshotsChunked: ${chunkIds.size} chunks exceeds maxChunks=$maxChunks " +
-        "— raise chunkUs (each chunk is a driver-loop fold)")
+    val chunks = DriverLoop.chunks(deltas, tsCol, chunkUs, maxChunks, "bookSnapshotsChunked")
     var book = MarketIncremental.emptyBook(spark, cfg)
     var cursor = MarketIncremental.emptyBookCursor(spark, cfg)
     // Accumulate the per-chunk PROBE and AS-OF-RIGHT frames and assemble
@@ -396,9 +389,9 @@ object OrderbookFeatures {
     // cached blocks, not recomputed lineage.
     val probes = Seq.newBuilder[DataFrame]
     val rights = Seq.newBuilder[DataFrame]
-    chunkIds.foreach { c =>
-      val (probe, right, b2, c2) = MarketIncremental.bookSnapshotFoldParts(
-        book, cursor, base.where(col("_chunk") === c).drop("_chunk"), cfg)
+    chunks.foreach { chunk =>
+      val (probe, right, b2, c2) =
+        MarketIncremental.bookSnapshotFoldParts(book, cursor, chunk, cfg)
       probes += probe
       rights += right.drop("_b")
       book = b2
@@ -406,7 +399,7 @@ object OrderbookFeatures {
     }
     val lvlKeys = keys ++ Seq("side", "price")
     val snapsAll =
-      if (chunkIds.isEmpty) MarketIncremental.emptySnapshots(spark, cfg)
+      if (chunks.isEmpty) MarketIncremental.emptySnapshots(spark, cfg)
       else {
         val rightDedup = rights.result().reduce(_ unionByName _)
           .groupBy((lvlKeys :+ "ts_us").map(col): _*)

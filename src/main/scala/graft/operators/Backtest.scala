@@ -629,11 +629,11 @@ object Backtest {
     val spark = cov.sparkSession
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     // coalesce(1): see cgRoundLoop — single-task exchange-free rounds
-    val pairs = localize(cov.select(col("key_a").cast("string").as("a"),
+    val pairs = DriverLoop.localize(cov.select(col("key_a").cast("string").as("a"),
       col("key_b").cast("string").as("b"),
-      round(col(covCol) * 1e6).cast("long").as("covq")))
-    val sym = localize(pairs.unionByName(pairs.where(col("a") =!= col("b"))
-      .select(col("b").as("a"), col("a").as("b"), col("covq")))).coalesce(1)
+      round(col(covCol) * 1e6).cast("long").as("covq")), "leadingEigen")
+    val sym = DriverLoop.localize(pairs.unionByName(pairs.where(col("a") =!= col("b"))
+      .select(col("b").as("a"), col("a").as("b"), col("covq"))), "leadingEigen").coalesce(1)
     val vSchema = StructType(Seq(StructField("k", StringType),
       StructField("vq", LongType)))
     def vFrame(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
@@ -761,32 +761,6 @@ object Backtest {
 
   private val D38q = org.apache.spark.sql.types.DecimalType(38, 0)
 
-  /** Materialize a key-sized (or key²-sized) frame as a driver-local
-    * relation (r13 optimization round): `collect` replaces an eager
-    * `localCheckpoint` job 1:1, and every later use costs NO job —
-    * broadcasts of a LocalRelation build driver-side (a checkpointed
-    * RDD pays a collect job per broadcast build), and deterministic
-    * Projects over a LocalRelation are folded at optimization time by
-    * `ConvertToLocalRelation`, so per-key update trees between solver
-    * rounds evaluate through Spark's own expression evaluator without
-    * touching the scheduler. Values pass through untouched — this is
-    * re-injection (the existing scalar-literal pattern, vectorized),
-    * not driver arithmetic. Key-sized frames ONLY (the k / k² solver
-    * contract; the corpus never flows through here). */
-  private def localize(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    // fail fast instead of OOMing the driver if a caller ever feeds a
-    // corpus-scale frame: the solver contract is ≤256 keys ⇒ ≤65 536
-    // rows for a key² image; 2²⁰ is comfortably above any legitimate
-    // key universe and far below driver-memory danger
-    require(rows.length <= (1 << 20),
-      s"localize: ${rows.length} rows exceed the key²-sized solver " +
-        "contract (≤ 2^20) — this driver re-injection path is for " +
-        "key-sized state only, never corpus-scale frames")
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
   /** Exact Σ rowᵢ.colA · rowᵢ.colB over collected long columns — the
     * driver twin of `sum(colA.cast(D38q) * colB)`: integer products
     * summed in unbounded BigInt arithmetic are exact and order-free,
@@ -804,10 +778,10 @@ object Backtest {
     * iterative solvers ([[minVarianceCG]], [[ercIterative]], the
     * [[leadingEigen]] shape). */
   private def symPairs(cov: DataFrame, covCol: String): DataFrame = {
-    // localized (r13): key²-sized by contract — see [[localize]]
-    val pairs = localize(cov.select(col("key_a").cast("string").as("a"),
+    // localized (r13): key²-sized by contract — see [[DriverLoop]]
+    val pairs = DriverLoop.localize(cov.select(col("key_a").cast("string").as("a"),
         col("key_b").cast("string").as("b"),
-        round(col(covCol) * 1e6).cast("long").as("covq")))
+        round(col(covCol) * 1e6).cast("long").as("covq")), "symPairs")
     pairs.unionByName(pairs.where(col("a") =!= col("b"))
       .select(col("b").as("a"), col("a").as("b"), col("covq")))
   }
@@ -870,19 +844,19 @@ object Backtest {
     // localized (r13): key-/key²-sized by contract — the collect IS the
     // materialization the old localCheckpoint paid, and every later
     // broadcast of either frame builds driver-side with no job
-    val diag = localize(sym.where(col("a") === col("b"))
+    val diag = DriverLoop.localize(sym.where(col("a") === col("b"))
       .select(col("a").as("k"),
         when(col("covq") <= 0L,
           raise_error(concat(lit(s"$who: non-positive variance for key "),
             col("a"), lit(" — the estimator frame must carry a positive diagonal"))))
-        .otherwise(col("covq")).as("dq")))
-    val corr = localize(sym
+        .otherwise(col("covq")).as("dq")), who)
+    val corr = DriverLoop.localize(sym
       .join(broadcast(diag.select(col("k").as("a"), col("dq").as("da"))), Seq("a"))
       .join(broadcast(diag.select(col("k").as("b"), col("dq").as("db"))), Seq("b"))
       .select(col("a"), col("b"),
         round(col("covq").cast("double") /
           (sqrt(col("da").cast("double") / 1e6) *
-           sqrt(col("db").cast("double") / 1e6))).cast("long").as("cq")))
+           sqrt(col("db").cast("double") / 1e6))).cast("long").as("cq")), who)
     (diag, corr)
   }
 
@@ -921,7 +895,7 @@ object Backtest {
     // hundred rows over many slices and the groupBy pays a full
     // exchange + AQE stage per round; SinglePartition satisfies the
     // agg's distribution, so each round is ONE single-task stage
-    val corrL = localize(corr).coalesce(1)
+    val corrL = DriverLoop.localize(corr, "cgRoundLoop").coalesce(1)
     // (k, dq, xq, rq, pq) — collect once; the caller's plan runs here
     var st: Seq[org.apache.spark.sql.Row] =
       st0.select("k", "dq", "xq", "rq", "pq").collect().toSeq
@@ -1164,9 +1138,9 @@ object Backtest {
     // image rounds to zero on large-variance frames (caught at the
     // sf0.001 gate: hourly-mean variances there are ~10⁷)
     val dminV = dminRow.getLong(0)
-    val iv = localize(diag.select(col("k"),
+    val iv = DriverLoop.localize(diag.select(col("k"),
         round(lit(1e6) * lit(dminV.toDouble) / col("dq").cast("double"))
-          .cast("long").as("ivq")))
+          .cast("long").as("ivq")), "blackLitterman")
     val sw = scalarOf(iv.agg(sum(col("ivq").cast(D38q)))).doubleValue
     require(sw > 0.0, "blackLitterman: degenerate prior (zero inverse-variance mass)")
     val mvw = sym
@@ -1177,8 +1151,8 @@ object Backtest {
         (lit(delta) * col("mvwq").cast("double") / (lit(1e6) * lit(sw)))
           .as("pi"))
       .withColumn("piq", round(col("pi") * lit(1e6)).cast("long"))
-    val v = localize(views.select(col("view_id").cast("int").as("vid"),
-        col("key").cast("string").as("k"), col("pq").cast("long").as("pq")))
+    val v = DriverLoop.localize(views.select(col("view_id").cast("int").as("vid"),
+        col("key").cast("string").as("k"), col("pq").cast("long").as("pq")), "blackLitterman")
     val vids = v.select("vid").distinct().collect().map(_.getInt(0)).sorted
     require(vids.nonEmpty && vids.length <= 2,
       s"blackLitterman supports 1-2 views (closed-form posterior inverse), got ${vids.length}")
@@ -1217,13 +1191,13 @@ object Backtest {
       max(when(col("vid") === vids(0), col("tq"))).as("t1q"),
       max(when(col("vid") === lit(if (vids.length > 1) vids(1) else -1),
         col("tq"))).as("t2q"))
-    val mu = localize(pi.join(tpiv, Seq("k"))
+    val mu = DriverLoop.localize(pi.join(tpiv, Seq("k"))
       .select(col("k"), col("pi"),
         (col("pi") + lit(tau) *
           (coalesce(col("t1q"), lit(0L)).cast("double") / lit(1e12) * lit(z1) +
            coalesce(col("t2q"), lit(0L)).cast("double") / lit(1e12) * lit(z2)))
           .as("mu"))
-      .withColumn("muq", round(col("mu") * lit(1e6)).cast("long")))
+      .withColumn("muq", round(col("mu") * lit(1e6)).cast("long")), "blackLitterman")
     val st0 = diag.join(broadcast(mu.select(col("k"), col("muq"))), Seq("k"))
       .select(col("k"), col("dq"), lit(0L).as("xq"),
         round(col("muq").cast("double") /
@@ -1270,10 +1244,10 @@ object Backtest {
         count(lit(1)).cast("double").as("kd"))
     // coalesce(1): see cgRoundLoop — keeps each round's matvec agg a
     // single-task exchange-free stage over the key²-sized image
-    val covn = localize(sym.crossJoin(broadcast(trk))
+    val covn = DriverLoop.localize(sym.crossJoin(broadcast(trk))
       .select(col("a"), col("b"), col("kd"),
         round(col("covq").cast("double") * col("kd") * lit(1e6) / col("trd"))
-          .cast("long").as("cq"))).coalesce(1)
+          .cast("long").as("cq")), "ercIterative").coalesce(1)
     // non-ANSI sessions would fold sqrt(≤0) into silent NaN→0 images —
     // raise at the diagonal probe instead (the minVarianceCG guard)
     val diag = covn.where(col("a") === col("b"))

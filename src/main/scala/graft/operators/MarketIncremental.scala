@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.store.CommitLog
 
@@ -72,40 +73,37 @@ object MarketIncremental {
     * the ordering contract allows that (same ts, higher tiebreak), and
     * electing on the timestamp alone would be a coin flip there. */
   def emptyBars(spark: SparkSession, cfg: Cfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("bar_id", "long"), field("open", "double"),
-          field("high", "double"), field("low", "double"),
-          field("close", "double"), field("volume", "double"),
-          field("n_ticks", "long"), field("open_ts_us", "long"),
-          field("close_ts_us", "long"), field("open_tb", "long"),
-          field("close_tb", "long"))))
+    keyed(spark, cfg.keys, "bar_id long, open double, high double, low double, " +
+      "close double, volume double, n_ticks long, open_ts_us long, close_ts_us long, " +
+      "open_tb long, close_tb long")
 
   def emptyCarry(spark: SparkSession, cfg: Cfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("cum_cents", "long"), field("w_ts_us", "long"),
-          field("w_tb", "long"))))
+    keyed(spark, cfg.keys, "cum_cents long, w_ts_us long, w_tb long")
 
   def emptyEntries(spark: SparkSession, cfg: Cfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("ts_us", "long"), field("price", "double"),
-          field("_eid", "long"), field("t_up_us", "long"),
-          field("t_dn_us", "long"))))
+    keyed(spark, cfg.keys, "ts_us long, price double, _eid long, t_up_us long, t_dn_us long")
 
-  private def field(n: String, t: String) =
-    org.apache.spark.sql.types.StructField(n,
-      org.apache.spark.sql.types.DataType.fromDDL(t))
+  /** Empty frame of the series `keys` (as strings) followed by the DDL
+    * columns `tail` — the schema of every state frame here. */
+  private def keyed(spark: SparkSession, keys: Seq[String], tail: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType.fromDDL((keys.map(k => s"`$k` string") :+ tail).mkString(", ")))
 
-  /** Normalized batch ticks: `(keys…, ts_us, _tb, price, _vol, _cents)`,
-    * with the per-series ordering + non-negative-volume guards baked
+  /** The carry after a fold: `fresh` rows for the batch's series plus
+    * the `stored` rows of every series the batch did not touch — row
+    * plumbing on the series keys, no value computed on the driver. */
+  private def nextCarry(spark: SparkSession, schema: StructType, keys: Seq[String],
+                        stored: Array[Row], fresh: Array[Row]): DataFrame = {
+    val ki = keys.map(schema.fieldIndex)
+    val touched = fresh.map(r => ki.map(r.get)).toSet
+    DriverLoop.frame(spark,
+      (fresh ++ stored.filterNot(r => touched.contains(ki.map(r.get)))).toSeq, schema)
+  }
+
+  /** Normalized batch ticks: `(keys…, ts_us, _tb, price, _vol, _cents,
+    * _base)`, `_base` being the series' stored `cum_cents` (one carry
+    * join serves it and the watermark), with the per-series ordering +
+    * non-negative-volume guards baked
     * into `_cents` (a violating tick fails the job loudly — silently
     * accepting it would corrupt bar boundaries or reopen closed bars).
     * Guards two distinct order violations: a tick at-or-before the
@@ -127,8 +125,8 @@ object MarketIncremental {
     // (and Catalyst reuses the exchange+sort with the cum-sum window)
     val wOrd = Window.partitionBy(cfg.keys.map(col): _*)
       .orderBy(col("ts_us"), col("_tb"))
-    raw.join(carry.select(cfg.keys.map(col) :+ col("w_ts_us") :+ col("w_tb"): _*),
-        cfg.keys, "left")
+    raw.join(carry.select(cfg.keys.map(col) ++ Seq(col("w_ts_us"), col("w_tb"),
+        col("cum_cents").as("_base")): _*), cfg.keys, "left")
       .withColumn("_dup",
         lag(struct(col("ts_us"), col("_tb")), 1).over(wOrd) ===
           struct(col("ts_us"), col("_tb")))
@@ -155,15 +153,14 @@ object MarketIncremental {
     * `(newlyClosedBars, openBars', carry')` — closed bars are final and
     * never re-emitted; the open frame holds ≤ 1 bar per series.
     *
-    * EAGER: the shared internal frames (cum-annotated batch, merged
-    * bars, post-fold carry) are localCheckpointed once, so a caller
-    * materializing all three returned frames (the normal
-    * write-closed + write-open + write-carry batch body) pays the
-    * window/agg/join lineage exactly ONCE — without this, each write
-    * recomputed the whole chain and a fold cost ~3× its own work
-    * (caught by the round-7 honest-timing rehearsal). The ordering /
-    * volume guards therefore also fire at fold-call time, not first
-    * materialization. */
+    * Shape (every carry fold here): the series-sized `carry'` is
+    * collected and re-injected as driver rows ([[DriverLoop]]) — the
+    * fold call's one action. Every tick's guarded `_cents` feeds the carry sum, so
+    * the ordering / volume guards fire inside the fold call. The frames
+    * several outputs share — the cum-annotated batch (bars and carry)
+    * and the frontier-tagged bars (closed and open) — are checkpointed
+    * lazily: the carry collect materializes the first, the caller's
+    * first write the second, and no lineage runs twice. */
   def volumeBarsFold(openBars: DataFrame, carry: DataFrame,
                      batch: DataFrame, cfg: Cfg)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -172,20 +169,17 @@ object MarketIncremental {
     val w = Window.partitionBy(K.map(col): _*).orderBy(col("ts_us"), col("_tb"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val withCum = ticks
-      .join(carry.select(K.map(col) :+ col("cum_cents").as("_base"): _*),
-        K, "left")
       .withColumn("_cumb",
         coalesce(sum(col("_cents")).over(w), lit(0L)) + coalesce(col("_base"), lit(0L)))
       .withColumn("bar_id",
         expr(s"(_cumb - pmod(_cumb, ${cfg.thrFp}L)) div ${cfg.thrFp}L"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val ord = struct(col("ts_us"), col("_tb"))
     val partials = withCum.groupBy((K :+ "bar_id").map(col): _*)
       .agg(min_by(col("price"), ord).as("open"),
         max(col("price")).as("high"), min(col("price")).as("low"),
         max_by(col("price"), ord).as("close"),
-        sum(col("_vol").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("volume"),
+        sum(col("_vol").cast(DecimalType(18, 2))).cast("double").as("volume"),
         count(lit(1)).as("n_ticks"),
         min(ord).as("_o"), max(ord).as("_c"))
       .select((K :+ "bar_id").map(col) ++ Seq(
@@ -208,8 +202,7 @@ object MarketIncremental {
       .agg(min_by(col("open"), oOrd).as("open"),
         max(col("high")).as("high"), min(col("low")).as("low"),
         max_by(col("close"), cOrd).as("close"),
-        sum(col("volume").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-          .cast("double").as("volume"),
+        sum(col("volume").cast(DecimalType(18, 2))).cast("double").as("volume"),
         sum(col("n_ticks")).as("n_ticks"),
         min(oOrd).as("_o"), max(cOrd).as("_c"))
       .select((K :+ "bar_id").map(col) ++ Seq(
@@ -222,20 +215,19 @@ object MarketIncremental {
     val bAgg = withCum.groupBy(K.map(col): _*)
       .agg(sum(col("_cents")).as("_add"),
         max(struct(col("ts_us"), col("_tb"))).as("_w"))
-    val carry2 = carry.join(bAgg, K, "full")
+    val carry2 = DriverLoop.localize(carry.join(bAgg, K, "full")
       .select(K.map(col) ++ Seq(
         (coalesce(col("cum_cents"), lit(0L)) + coalesce(col("_add"), lit(0L)))
           .as("cum_cents"),
         coalesce(col("_w").getField("ts_us"), col("w_ts_us")).as("w_ts_us"),
-        coalesce(col("_w").getField("_tb"), col("w_tb")).as("w_tb")): _*)
-      .localCheckpoint(true)
+        coalesce(col("_w").getField("_tb"), col("w_tb")).as("w_tb")): _*), "volumeBarsFold")
     // with non-negative volumes the cumulative is monotone: the series'
     // open bar is exactly floor(cum_total / thr); every merged bar below
     // it is closed forever and leaves the fold
     val frontier = carry2.select(K.map(col) :+
       expr(s"(cum_cents - pmod(cum_cents, ${cfg.thrFp}L)) div ${cfg.thrFp}L")
         .as("_open_bar"): _*)
-    val tagged = merged.join(frontier, K).localCheckpoint(true)
+    val tagged = merged.join(frontier, K).localCheckpoint(false)
     (tagged.where(col("bar_id") < col("_open_bar")).drop("_open_bar"),
       tagged.where(col("bar_id") >= col("_open_bar")).drop("_open_bar"),
       carry2)
@@ -249,7 +241,11 @@ object MarketIncremental {
     * Returns `(newlyFinalEntries, openEntries')`: an entry is final
     * once BOTH barriers are resolved or the watermark passes its
     * horizon (both, so the late second-touch time matches the batch
-    * operator's output column for column). */
+    * operator's output column for column).
+    *
+    * Lazy throughout: the fold call schedules no job. Its ordering
+    * guard is [[volumeBarsFold]]'s, which ran over the same batch to
+    * produce `carryAfter`. */
   def tripleBarrierFold(openEntries: DataFrame, batch: DataFrame,
                         carryAfter: DataFrame, cfg: Cfg)
       : (DataFrame, DataFrame) = {
@@ -262,9 +258,10 @@ object MarketIncremental {
     val newEntries = ticks
       .withColumn("t_up_us", lit(null).cast("long"))
       .withColumn("t_dn_us", lit(null).cast("long"))
-    val batchKeys = ticks.select(K.map(col): _*).distinct()
-    val cand = openEntries.join(batchKeys, K, "left_semi").unionByName(newEntries)
-    val eSide = cand.select(
+    // every open entry rides the band join: one of a series this batch
+    // does not touch meets no tick and keeps its watermark, so it leaves
+    // exactly as it came — no batch-key semi/anti join splits the frontier
+    val eSide = openEntries.unionByName(newEntries).select(
       K.map(k => col(k).as(s"_e_$k")) ++ Seq(col("ts_us").as("_e_ts"),
         col("price").as("_e_p"), col("_eid").as("_e_id"),
         col("t_up_us"), col("t_dn_us")): _*)
@@ -286,30 +283,26 @@ object MarketIncremental {
       col("ts_us") <= col("_e_ts") + lit(cfg.horizonUs)
     val up = col("price") >= col("_e_p") * lit(1.0 + cfg.upPct)
     val dn = col("price") <= col("_e_p") * lit(1.0 - cfg.dnPct)
-    val hits = probes.join(bTicks, joinCond)
+    // the left join keeps untouched entries; one group per entry, whose
+    // rows all carry the entry's own price and stored touches
+    val touched = probes.join(bTicks, joinCond, "left")
       .groupBy((K.map(k => col(s"_e_$k")) :+ col("_e_ts") :+ col("_e_id")): _*)
-      .agg(min(when(up, col("ts_us"))).as("_nu"),
-        min(when(dn, col("ts_us"))).as("_nd"))
-    val touched = eSide.join(hits,
-        K.map(k => s"_e_$k") :+ "_e_ts" :+ "_e_id", "left")
+      .agg(max(col("_e_p")).as("_e_p"), max(col("t_up_us")).as("t_up_us"),
+        max(col("t_dn_us")).as("t_dn_us"),
+        min(when(up, col("ts_us"))).as("_nu"), min(when(dn, col("ts_us"))).as("_nd"))
       .select(K.map(k => col(s"_e_$k").as(k)) ++ Seq(
         col("_e_ts").as("ts_us"), col("_e_p").as("price"),
         col("_e_id").as("_eid"),
         coalesce(col("t_up_us"), col("_nu")).as("t_up_us"),
         coalesce(col("t_dn_us"), col("_nd")).as("t_dn_us")): _*)
-    // eager checkpoint: the hits band join above runs exactly once even
-    // though the caller materializes finals and the open frame as two
-    // separate jobs (see [[volumeBarsFold]]'s note)
     val merged = touched
       .join(carryAfter.select(K.map(col) :+ col("w_ts_us"): _*), K, "left")
       .withColumn("_final",
         (col("t_up_us").isNotNull && col("t_dn_us").isNotNull) ||
           coalesce(col("w_ts_us"), lit(Long.MinValue)) > col("ts_us") + cfg.horizonUs)
       .drop("w_ts_us")
-      .localCheckpoint(true)
     (merged.where(col("_final")).drop("_final"),
-      merged.where(!col("_final")).drop("_final")
-        .unionByName(openEntries.join(batchKeys, K, "left_anti")))
+      merged.where(!col("_final")).drop("_final"))
   }
 
   /** The [[Labeling.tripleBarrier]]-equivalent projection of an entry
@@ -438,32 +431,16 @@ object MarketIncremental {
     * watermark's exact µs still resolves last-write-wins
     * deterministically. */
   def emptyBook(spark: SparkSession, cfg: BookCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("side", "string"), field("price", "double"),
-          field("amount", "double"), field("ts_us", "long"),
-          field("_tb", "long"))))
+    keyed(spark, cfg.keys, "side string, price double, amount double, ts_us long, _tb long")
 
   /** Per-series cursor: `k_emitted` (last FINAL grid boundary index)
     * plus the (ts, tiebreak) watermark. */
   def emptyBookCursor(spark: SparkSession, cfg: BookCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("k_emitted", "long"), field("w_ts_us", "long"),
-          field("w_tb", "long"))))
+    keyed(spark, cfg.keys, "k_emitted long, w_ts_us long, w_tb long")
 
   def emptySnapshots(spark: SparkSession, cfg: BookCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("snap_ts_us", "long"), field("side", "string"),
-          field("level", "long"), field("price", "double"),
-          field("amount", "double"))))
+    keyed(spark, cfg.keys,
+      "snap_ts_us long, side string, level long, price double, amount double")
 
   /** Fold one delta batch into the standing book. Returns
     * `(finalSnapshots, book', cursor')`.
@@ -485,9 +462,8 @@ object MarketIncremental {
     * × newly-final boundaries only. Every heavy stage reuses the one
     * guard-window exchange (the dedup agg, the frontier rebuild, the
     * active-level distinct are all (series, side, price)-clustered).
-    * The series-sized cursor rides as driver rows (the
-    * [[graft.operators.Backtest]] localize re-injection pattern, loud
-    * ≤2^20 guard): the fold's single scheduled action is the
+    * The series-sized cursor rides as driver rows ([[DriverLoop]]):
+    * the fold's single action is the
     * cursor-image collect, which also materializes the lazily
     * checkpointed dedup frame; the frontier checkpoint stays lazy and
     * materializes inside the NEXT fold (or the final action), so a
@@ -525,13 +501,8 @@ object MarketIncremental {
     val lvl = K ++ Seq("side", "price")
     val spark = book.sparkSession
     val curSchema = emptyBookCursor(spark, cfg).schema
-    val cursorRows = cursor.select(curSchema.fieldNames.map(col).toSeq: _*)
-      .collect()
-    require(cursorRows.length <= (1 << 20),
-      s"bookSnapshotFold: ${cursorRows.length} cursor rows exceed the " +
-        "series-sized contract (<= 2^20 rows, one per series)")
-    val cursorLocal = spark.createDataFrame(
-      java.util.Arrays.asList(cursorRows: _*), curSchema)
+    val cursorLocal = DriverLoop.localize(
+      cursor.select(curSchema.fieldNames.map(col).toSeq: _*), "bookSnapshotFold")
     val raw = batch.select(
       K.map(c => col(c).cast("string").as(c)) ++ Seq(
         col(cfg.sideCol).cast("string").as("side"),
@@ -603,14 +574,10 @@ object MarketIncremental {
     // two, every value computed by Spark expressions. The series-sized
     // result is the fold's ONE collected action and re-injects as the
     // next fold's LocalRelation.
-    val wT = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ts_us",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_tb",
-        org.apache.spark.sql.types.LongType)))
     val cur = cursorLocal
       .select(K.map(col) ++ Seq(col("k_emitted"), col("w_ts_us"),
-        col("w_tb"), lit(null).cast(wT).as("_bts"), nL.as("_bts_lo")): _*)
+        col("w_tb"), lit(null).cast("struct<ts_us: bigint, _tb: bigint>").as("_bts"),
+        nL.as("_bts_lo")): _*)
       .unionByName(rightAll.where(col("_b"))
         .select(K.map(col) ++ Seq(nL.as("k_emitted"),
           nL.as("w_ts_us"), nL.as("w_tb"),
@@ -628,21 +595,14 @@ object MarketIncremental {
         expr(s"(_lo - pmod(_lo, ${S}L)) div ${S}L")))
       .withColumn("_knew", greatest(col("_kbase"),
         expr(s"((_w2 - 1) - pmod(_w2 - 1, ${S}L)) div ${S}L")))
-    val curRows = cur.select(K.map(col) ++ Seq(
+    val curFull = DriverLoop.localize(cur.select(K.map(col) ++ Seq(
       col("_knew").as("k_emitted"), col("_w2").as("w_ts_us"),
-      col("_tb2").as("w_tb"), col("_kbase").as("_k_prev")): _*).collect()
-    val cursor2 = spark.createDataFrame(java.util.Arrays.asList(
-      curRows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-        .toSeq: _*), curSchema)
+      col("_tb2").as("w_tb"), col("_kbase").as("_k_prev")): _*), "bookSnapshotFold")
+    val cursor2 = curFull.drop("_k_prev")
     // newly-final boundaries: (kbase, knew] — explode(null) when none
     // (NEVER sequence(a, b) with a > b: it DESCENDS). The sequence
     // still evaluates in Spark, over the collected cursor image's
     // LocalRelation — tiny, broadcastable, exchange-free.
-    val curFull = spark.createDataFrame(
-      java.util.Arrays.asList(curRows.toSeq: _*),
-      org.apache.spark.sql.types.StructType(
-        curSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "_k_prev", org.apache.spark.sql.types.LongType)))
     val grid = curFull.select(K.map(col) :+
       explode(when(col("k_emitted") >= col("_k_prev") + 1,
         sequence(col("_k_prev") + 1, col("k_emitted")))).as("_k"): _*)
@@ -814,23 +774,12 @@ object MarketIncremental {
     * rows-based and the warm-up guards count non-nulls, so a null
     * history row must still occupy its frame position). */
   def emptyFeatCarry(spark: SparkSession, cfg: FeatCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("w_ts_us", "long"), field("prev_close", "double"),
-          field("ema_12", "double"), field("ema_26", "double"),
-          field("sig_9", "double"), field("obv", "double"),
-          field("logrets", "array<double>"), field("deltas", "array<double>"))))
+    keyed(spark, cfg.keys, "w_ts_us long, prev_close double, ema_12 double, " +
+      "ema_26 double, sig_9 double, obv double, logrets array<double>, deltas array<double>")
 
   def emptyFeatures(spark: SparkSession, cfg: FeatCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("timestamp", "timestamp"), field("dt", "string"),
-          field("feature_version", "string")) ++
-          FeatureCols.map(field(_, "double"))))
+    keyed(spark, cfg.keys, "timestamp timestamp, dt string, feature_version string, " +
+      FeatureCols.map(c => s"$c double").mkString(", "))
 
   /** Fold one OHLCV batch into the feature state. Returns
     * `(features, carry')` — features for the batch rows are FINAL at
@@ -841,11 +790,11 @@ object MarketIncremental {
     * final mask (row-local, so applying it per fold ≡ applying it at
     * the end). Guards mirror [[guardedTicks]]: a bar at-or-before the
     * stored watermark raises, a duplicate timestamp within one batch
-    * raises. The window frame localCheckpoints once (features and the
-    * carry rebuild share its lineage); the series-sized carry itself
-    * rides as driver rows re-injected per fold (r14 — loud ≤2^20
-    * guard), so one fold schedules exactly two jobs: the checkpoint
-    * and the carry collect. */
+    * raises. The window frame, which the features and the carry
+    * rebuild share, is checkpointed lazily; the series-sized carry
+    * rides as driver rows ([[DriverLoop]]), and the new carry's
+    * collect is the fold's one action — it materializes the window
+    * frame, so the caller's feature write reads that frame's blocks. */
   def marketFeaturesFold(carry: DataFrame, batch: DataFrame, cfg: FeatCfg,
                          dropnaFinal: Boolean = true)
       : (DataFrame, DataFrame) = {
@@ -861,25 +810,19 @@ object MarketIncremental {
     org.apache.spark.sql.graft.GraftFunctions.register(carry.sparkSession)
     val spark = carry.sparkSession
     val K = cfg.keys
-    // r14: the carry rides the fold as DRIVER ROWS (the
-    // Backtest.localize re-injection pattern). It is series-sized by
-    // contract — ONE row with ≤19 logrets / ≤13 deltas per series,
-    // never history-sized — and the chunk loop threads back the
+    // r14: the carry rides the fold as DRIVER ROWS ([[DriverLoop]]). It
+    // is series-sized by contract — ONE row with ≤19 logrets / ≤13
+    // deltas per series, never history-sized — and the chunk loop threads back the
     // LocalRelation this fold returns, so the collect below is jobless
     // there (LocalTableScan short-circuits); the streaming path's
     // parquet carry is one small scan. A LocalRelation carry broadcasts
     // into the guard join with known-tiny stats (no checkpoint job, no
     // stats gamble) and lets the next fold's key filters run as driver
-    // row plumbing. Loud guard so a corpus-scale misuse fails fast
-    // instead of OOMing the driver.
+    // row plumbing.
     val carrySchema = emptyFeatCarry(spark, cfg).schema
-    val carryRows = carry.select(carrySchema.fieldNames.map(col).toSeq: _*)
-      .collect()
-    require(carryRows.length <= (1 << 20),
-      s"marketFeaturesFold: ${carryRows.length} carry rows exceed the " +
-        "series-sized contract (<= 2^20 rows, one per series)")
-    val carryLocal = spark.createDataFrame(
-      java.util.Arrays.asList(carryRows: _*), carrySchema)
+    val carryRows = DriverLoop.collect(
+      carry.select(carrySchema.fieldNames.map(col).toSeq: _*), "marketFeaturesFold")
+    val carryLocal = DriverLoop.frame(spark, carryRows.toSeq, carrySchema)
       .select(K.map(col) ++ Seq(col("w_ts_us"),
         col("prev_close").as("_c_prev"),
         col("ema_12").as("_c_s12"), col("ema_26").as("_c_s26"),
@@ -1029,7 +972,7 @@ object MarketIncremental {
     val tail = p2.withColumn("_ord", ordCol)
       .withColumn("_rn", row_number().over(rnW))
       .where(col("_rn") <= 19)
-    val carryNewRows = tail.groupBy(K.map(col): _*).agg(
+    val carryNew = tail.groupBy(K.map(col): _*).agg(
       max_by(struct(col("ts_us"), col("close"), col("_ema12c"),
         col("_ema26c"), col("_sigc"), col("_obvc")), col("_ord")).as("_l"),
       sort_array(collect_list(struct(col("_ord"),
@@ -1045,16 +988,10 @@ object MarketIncremental {
         col("_l").getField("_obvc").as("obv"),
         transform(col("_lr"), x => x.getField("s").getField("v")).as("logrets"),
         transform(col("_dl"), x => x.getField("s").getField("v")).as("deltas")): _*)
-      .collect()
     // every series in this batch appears in carryNew (each contributes
     // ≥1 row to p2's tail), so carryNew's key set IS the batch key set
-    val ki = K.map(k => carrySchema.fieldIndex(k))
-    def keyOf(r: org.apache.spark.sql.Row): Seq[String] =
-      ki.map(i => String.valueOf(r.get(i)))
-    val newKeys = carryNewRows.map(keyOf).toSet
-    val keptRows = carryRows.filterNot(r => newKeys.contains(keyOf(r)))
-    val carry2 = spark.createDataFrame(
-      java.util.Arrays.asList((carryNewRows ++ keptRows).toSeq: _*), carrySchema)
+    val carry2 = nextCarry(spark, carrySchema, K, carryRows,
+      DriverLoop.collect(carryNew, "marketFeaturesFold"))
     (feat, carry2)
   }
 
@@ -1108,21 +1045,11 @@ object MarketIncremental {
     * (`acc_ssz`, `acc_cnt`) at that frontier, and the still-pending
     * close deltas (`ts > w_ts_us`) as parallel arrays (ts-sorted). */
   def emptyBetCarry(spark: SparkSession, cfg: BetCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("w_ts_us", "long"), field("acc_ssz", "long"),
-          field("acc_cnt", "long"), field("pend_ts", "array<long>"),
-          field("pend_dsz", "array<long>"), field("pend_dn", "array<long>"))))
+    keyed(spark, cfg.keys, "w_ts_us long, acc_ssz long, acc_cnt long, " +
+      "pend_ts array<long>, pend_dsz array<long>, pend_dn array<long>")
 
   def emptySizes(spark: SparkSession, cfg: BetCfg): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        cfg.keys.map(k => org.apache.spark.sql.types.StructField(k,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          field("ts_us", "long"), field("n_active", "long"),
-          field("avg_size", "double"), field("bet_size", "double"))))
+    keyed(spark, cfg.keys, "ts_us long, n_active long, avg_size double, bet_size double")
 
   /** Fold one batch of bets into the sizing state. Returns
     * `(sizes, carry')` — `sizes` rows are final at emit and
@@ -1135,17 +1062,30 @@ object MarketIncremental {
     * `t0` must land strictly after its series' stored frontier —
     * violations raise rather than silently mis-average. Bets may close
     * arbitrarily far in the future; their close deltas wait in the
-    * carry. */
+    * carry.
+    *
+    * Shape ([[marketFeaturesFold]]'s): the carry rides as driver rows
+    * ([[DriverLoop]]), the event stream that sizes and carry share is
+    * checkpointed lazily, and the new carry's collect is the fold's one
+    * action — every bet's guarded `_t0` feeds the new frontier, so the
+    * ordering guard raises inside the fold call. */
   def betSizingFold(carry: DataFrame, batch: DataFrame, cfg: BetCfg)
       : (DataFrame, DataFrame) = {
     import graft.operators.{Backtest => B}
     val K = cfg.keys
     val kCols = K.map(col)
+    val spark = carry.sparkSession
+    val carrySchema = emptyBetCarry(spark, cfg).schema
+    val carryRows = DriverLoop.collect(
+      carry.select(carrySchema.fieldNames.map(col).toSeq: _*), "betSizingFold")
+    val carryLocal = DriverLoop.frame(spark, carryRows.toSeq, carrySchema)
+    // no checkpoint: projections of the batch only, whose one carry
+    // broadcast the event-stream plan below reuses across its branches
     val b0 = B.betDeltasPrepped(
         batch.select(K.map(c => col(c).cast("string").as(c)) ++ Seq(
           col(cfg.t0Col), col(cfg.t1Col), col(cfg.probCol), col(cfg.sideCol)): _*),
         K, cfg.t0Col, cfg.t1Col, cfg.probCol, cfg.sideCol)
-      .join(carry.select(kCols :+ col("w_ts_us"): _*), K, "left")
+      .join(broadcast(carryLocal.select(kCols :+ col("w_ts_us"): _*)), K, "left")
       .withColumn("_t0",
         when(col("w_ts_us").isNotNull && col("_t0") <= col("w_ts_us"),
           raise_error(concat(lit("betSizing ordering contract violated: bet enters at "),
@@ -1153,19 +1093,17 @@ object MarketIncremental {
             col("w_ts_us").cast("string"), lit("us"))))
         .otherwise(col("_t0")))
       .drop("w_ts_us")
-      .localCheckpoint(true)
-    val batchKeys = b0.select(kCols: _*).distinct()
     // per-series new frontier = the batch's last entry instant
     val frontier = b0.groupBy(kCols: _*).agg(max(col("_t0")).as("_fr"))
-    val carried = carry.join(batchKeys, K, "left_semi")
     // event stream per series: the frontier prefix row (_f = −1, sorts
     // before everything new), pending + new deltas (_f = 0), and the
     // new evaluation instants (_f = 1) — exactly the batch sweep's
-    // (ts, f) total order restricted to this fold's window
-    val accRow = carried.select(kCols ++ Seq(
+    // (ts, f) total order restricted to this fold's window. The inner
+    // frontier join keeps the batch's series only.
+    val accRow = carryLocal.select(kCols ++ Seq(
       coalesce(col("w_ts_us"), lit(Long.MinValue)).as("_ts"),
       lit(-1).as("_f"), col("acc_ssz").as("_dsz"), col("acc_cnt").as("_dn")): _*)
-    val pendRows = carried.select(kCols ++ Seq(
+    val pendRows = carryLocal.select(kCols ++ Seq(
         arrays_zip(col("pend_ts"), col("pend_dsz"), col("pend_dn")).as("_z")): _*)
       .select(kCols :+ explode(col("_z")).as("_e"): _*)
       .select(kCols ++ Seq(col("_e.pend_ts").as("_ts"), lit(0).as("_f"),
@@ -1180,30 +1118,24 @@ object MarketIncremental {
     val events = accRow.unionByName(pendRows).unionByName(newDeltas)
       .unionByName(grid)
       .join(frontier, K)
-      .localCheckpoint(true)
-    val consumable = events.where(col("_ts") <= col("_fr"))
+      .localCheckpoint(false)
+    val consumed = col("_ts") <= col("_fr")
     // the SAME emission tree as the batch operator — one definition
-    val sizes = B.betSweep(consumable, K, cfg.stepSize)
-    val accNew = consumable.where(col("_f") <= 0)
-      .groupBy(kCols: _*).agg(sum(col("_dsz")).as("acc_ssz"),
-        sum(col("_dn")).as("acc_cnt"))
-    val pendNew = events.where(col("_f") === 0 && col("_ts") > col("_fr"))
-      .groupBy(kCols: _*).agg(
-        sort_array(collect_list(struct(col("_ts"), col("_dsz"), col("_dn"))))
-          .as("_p"))
-    val carryNew = accNew
-      .join(frontier, K)
-      .join(pendNew, K, "left")
-      .select(kCols ++ Seq(col("_fr").as("w_ts_us"), col("acc_ssz"),
-        col("acc_cnt"),
-        coalesce(transform(col("_p"), x => x.getField("_ts")),
-          array().cast("array<long>")).as("pend_ts"),
-        coalesce(transform(col("_p"), x => x.getField("_dsz")),
-          array().cast("array<long>")).as("pend_dsz"),
-        coalesce(transform(col("_p"), x => x.getField("_dn")),
-          array().cast("array<long>")).as("pend_dn")): _*)
-    val carry2 = carry.join(batchKeys, K, "left_anti")
-      .unionByName(carryNew).localCheckpoint(true)
+    val sizes = B.betSweep(events.where(consumed), K, cfg.stepSize)
+    // the batch's series' new carry in ONE aggregate over the deltas
+    // (events' hash(K) clustering, no exchange): the exact prefix
+    // through the new frontier, the deltas past it still pending
+    val pend = sort_array(collect_list(
+      when(!consumed, struct(col("_ts"), col("_dsz"), col("_dn")))))
+    val carryNew = DriverLoop.collect(events.where(col("_f") <= 0)
+      .groupBy(kCols: _*).agg(max(col("_fr")).as("w_ts_us"),
+        sum(when(consumed, col("_dsz"))).as("acc_ssz"),
+        sum(when(consumed, col("_dn"))).as("acc_cnt"), pend.as("_p"))
+      .select(kCols ++ Seq(col("w_ts_us"), col("acc_ssz"), col("acc_cnt"),
+        transform(col("_p"), x => x.getField("_ts")).as("pend_ts"),
+        transform(col("_p"), x => x.getField("_dsz")).as("pend_dsz"),
+        transform(col("_p"), x => x.getField("_dn")).as("pend_dn")): _*), "betSizingFold")
+    val carry2 = nextCarry(spark, carrySchema, K, carryRows, carryNew)
     (sizes, carry2)
   }
 

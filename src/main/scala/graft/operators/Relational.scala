@@ -2290,15 +2290,11 @@ object Relational {
     // are untouched — collect-and-reinject only; every min/least/
     // row_number stays a Spark expression over the same rows.
     val spark = dist.sparkSession
-    def localize(df: DataFrame): DataFrame = {
-      val rows = df.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    }
-    val edges = localize(dist
+    val edges = DriverLoop.localize(dist
       .select(col("key_a").cast("string").as("a"),
         col("key_b").cast("string").as("b"),
         round(col(distCol) * 1e6).cast("long").as("dq"))
-      .where(col("dq").isNotNull && col("a") < col("b"))).coalesce(1)
+      .where(col("dq").isNotNull && col("a") < col("b")), "minSpanningTree").coalesce(1)
     // component map rides the rounds as driver rows + a LocalRelation
     // twin (r14 — the cgRoundLoop "pure row plumbing" pattern: the
     // prologue frames each round derives from ALREADY-COLLECTED rows
@@ -2313,9 +2309,9 @@ object Relational {
       org.apache.spark.sql.types.StructField("comp",
         org.apache.spark.sql.types.StringType)))
     var compRows: Seq[org.apache.spark.sql.Row] =
-      localize(edges.select(col("a").as("node"))
+      DriverLoop.collect(edges.select(col("a").as("node"))
         .unionByName(edges.select(col("b").as("node"))).distinct()
-        .withColumn("comp", col("node"))).collect().toSeq
+        .withColumn("comp", col("node")), "minSpanningTree").toSeq
     def compFrame: DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(compRows: _*), compSchema)
     val n: Long =

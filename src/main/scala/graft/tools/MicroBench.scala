@@ -42,7 +42,6 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 100000
     val spark = graft.LocalSession()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
 
     val series = syntheticSeries(spark, n).cache()
     series.count()

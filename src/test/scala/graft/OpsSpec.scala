@@ -3329,6 +3329,80 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  /** `body`'s result and the number of jobs the scheduler started while
+    * it ran, counted as [[graft.Bench]] counts them. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.ListenerBus.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("fold shape: a fold call schedules no more than its carry collect") {
+    import graft.operators.MarketIncremental._
+    val ticks = (for { k <- Seq("A", "B"); t <- 1 to 40 } yield
+      (k, t.toLong, 100.0 + 10.0 * math.sin(t / 3.0), 1.0 + t % 3))
+      .toDF("k", "t", "p", "v").withColumn("ts", expr("timestamp_micros(t)"))
+    val cfg = Cfg(Seq("k"), "ts", "p", "v", "t",
+      volThreshold = 7.0, horizonUs = 10L, upPct = 0.05, dnPct = 0.05)
+    val (b1, b2) = (ticks.where(col("t") <= 20), ticks.where(col("t") > 20))
+    val (_, o1, c1) = volumeBarsFold(emptyBars(spark, cfg), emptyCarry(spark, cfg), b1, cfg)
+    val (_, e1) = tripleBarrierFold(emptyEntries(spark, cfg), b1, c1, cfg)
+    val ((_, _, c2), vbJobs) = jobsOf(volumeBarsFold(o1, c1, b2, cfg))
+    val (_, tbJobs) = jobsOf(tripleBarrierFold(e1, b2, c2, cfg))
+
+    val bets = (for { s <- Seq("A", "B"); i <- 1 to 20 } yield
+      (s, i * 10L, i * 10L + 35L, 0.3 + (i % 7) * 0.1, if (i % 3 == 0) -1L else 1L))
+      .toDF("k", "t0_us", "t1_us", "prob", "side")
+    val betCfg = BetCfg(Seq("k"), stepSize = 0.05)
+    val (_, bc1) = betSizingFold(emptyBetCarry(spark, betCfg),
+      bets.where(col("t0_us") <= 100L), betCfg)
+    val (_, betJobs) = jobsOf(betSizingFold(bc1, bets.where(col("t0_us") > 100L), betCfg))
+
+    val ohlcv = ohlcvRamp(60)
+    val featCfg = FeatCfg(graft.features.MarketFeatures.seriesKeys, "timestamp")
+    val cut = col("timestamp") < lit("2025-08-01 00:30:00").cast("timestamp")
+    val (_, fc1) = marketFeaturesFold(emptyFeatCarry(spark, featCfg), ohlcv.where(cut), featCfg)
+    val (_, featJobs) = jobsOf(marketFeaturesFold(fc1, ohlcv.where(!cut), featCfg))
+
+    val bookCfg = BookCfg(Seq("k"), "ts", "side", "price", "amount", "tb",
+      stepUs = 10L, nLevels = 3)
+    val deltas = churnDeltas()
+    val (_, bk1, cu1) = bookSnapshotFold(emptyBook(spark, bookCfg),
+      emptyBookCursor(spark, bookCfg), deltas.where(col("t") <= 60), bookCfg)
+    val (_, bookJobs) = jobsOf(
+      bookSnapshotFold(bk1, cu1, deltas.where(col("t") > 60), bookCfg))
+
+    // the eager shape scheduled 14, 9 and 21 jobs here (7 eager checkpoints)
+    assert(tbJobs == 0, s"tripleBarrierFold must stay lazy, scheduled $tbJobs jobs")
+    assert(vbJobs <= 8, s"volumeBarsFold scheduled $vbJobs jobs")
+    assert(betJobs <= 7, s"betSizingFold scheduled $betJobs jobs")
+    assert(featJobs <= 4, s"marketFeaturesFold scheduled $featJobs jobs")
+    assert(bookJobs <= 6, s"bookSnapshotFold scheduled $bookJobs jobs")
+  }
+
+  test("DriverLoop: a frame above 2^20 rows fails the collect, naming the caller") {
+    val err = intercept[IllegalArgumentException](
+      DriverLoop.localize(spark.range(DriverLoop.MaxRows + 1L).toDF("id"), "sizeProbeFold"))
+    assert(err.getMessage.contains("sizeProbeFold") &&
+      err.getMessage.contains((DriverLoop.MaxRows + 1).toString), err.getMessage)
+    // below the bound the rows come back as a LocalRelation: later reads run no job
+    val local = DriverLoop.localize(spark.range(5).toDF("id"), "sizeProbeFold")
+    assert(local.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val (n, jobs) = jobsOf(local.collect().length)
+    assert(n == 5 && jobs == 0, s"$n rows, $jobs jobs")
+  }
+
   test("marketFeaturesFold: chunked fold is bit-identical to MarketFeatures.build") {
     import graft.features.MarketFeatures
     import graft.operators.MarketIncremental

@@ -15,10 +15,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      // Not the engine's semantics: the mains run Spark's default, ANSI
-      // on. Under ANSI, OpsSpec's arHalfLife, leadingEigen and
-      // probabilisticSharpe specs raise DIVIDE_BY_ZERO on their
-      // degenerate (constant-series / zero) inputs.
+      // mirrors graft.LocalSession, the session every main runs on:
+      // ANSI off, so division by zero gives null as the oracle expects
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
