@@ -36,7 +36,6 @@ object TaIndicators {
     ema(close, fast, w) - ema(close, slow, w)
 
   /** Bollinger bands (`ta_indicators.py:91-100`). */
-  def bollingerMiddle(close: Column, n: Int, w: WindowSpec): Column = rollingMean(close, n, w)
   def bollingerUpper(close: Column, n: Int, k: Double, w: WindowSpec): Column =
     rollingMean(close, n, w) + lit(k) * rollingStd(close, n, w)
   def bollingerLower(close: Column, n: Int, k: Double, w: WindowSpec): Column =
@@ -141,21 +140,6 @@ object TaIndicators {
 
   // ---------- multi-pass DataFrame transformers ----------
 
-  /** MACD line + signal + histogram (`ta_indicators.py:79-89`): the signal
-    * is an EWM *of the macd series*, hence a second pass. */
-  def withMacd(df: DataFrame, close: String, w: WindowSpec,
-               fast: Int = 12, slow: Int = 26, signal: Int = 9): DataFrame =
-    df.withColumn("macd", macdLine(col(close), w, fast, slow))
-      .withColumn(s"macd_signal_$signal", ema(col("macd"), signal, w))
-      .withColumn("macd_hist", col("macd") - col(s"macd_signal_$signal"))
-
-  /** ATR (two passes: TR, then SMA). */
-  def withAtr(df: DataFrame, high: String, low: String, close: String,
-              n: Int, w: WindowSpec, out: String = "atr"): DataFrame =
-    df.withColumn("_tr", trueRange(col(high), col(low), col(close), w))
-      .withColumn(out, atrFromTr(col("_tr"), n, w))
-      .drop("_tr")
-
   /** ADX (`ta_indicators.py:176-193`) — three passes:
     * (1) ±DM conditionals + TR, (2) ±DI and DX, (3) SMA(DX). Zero-ATR /
     * zero-DI-sum rows → null (pandas inf). */
@@ -211,12 +195,6 @@ object TaIndicators {
   /** |x| > threshold as 0/1 (`onchain_features.py:46-51`). */
   def whaleFlow(x: Column, threshold: Double): Column =
     (abs(x) > threshold).cast("int")
-
-  /** Annualized rolling volatility of pct-change returns over a
-    * materialized returns column (`onchain_features.py:62-70`; the
-    * reference assumes 1-second bars). */
-  def annualizedVolFromReturns(returns: Column, n: Int, w: WindowSpec): Column =
-    rollingStd(returns, n, w) * sqrt(lit(365.0 * 86400.0 / n))
 
   /** Whole-series z-score (`onchain_features.py:73-78`): entire-partition
     * window — distributed, no driver collect. */

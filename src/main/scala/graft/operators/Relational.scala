@@ -3,11 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{windows => W}
 
 /** Relational building blocks the reference implements imperatively:
   * per-group top-N (A4/O3), side pivots (A1/A2), gap anti-joins (J3),
-  * as-of/ffill alignment (J4), last-write-wins dedup (§2.7).
+  * last-write-wins dedup (§2.7).
   */
 object Relational {
 
@@ -80,13 +79,6 @@ object Relational {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(_.desc): _*)
     df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
-
-  /** As-of forward-fill alignment of a sparse column onto a dense axis
-    * (J4, `orderbook_features.py:133-137`): full outer on the axis then
-    * ffill — here generalized as "ffill this column over this window". */
-  def ffillColumn(df: DataFrame, colName: String, partitionKeys: Seq[String],
-                  orderBy: Seq[String]): DataFrame =
-    df.withColumn(colName, W.ffill(col(colName), W.series(partitionKeys, orderBy)))
 
   // ------------------------------------------------------------------
   // Skew tools. AQE splits skewed SORT-MERGE join partitions at runtime,

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import org.apache.spark.sql.graft.LzComplexity
 
@@ -24,7 +24,7 @@ object StreamingPipelines {
     * Note the per-batch build computes features within the batch only
     * (parity with the reference's per-poll feature write,
     * `routes.py:858-892`); cross-batch window continuity is the job of
-    * [[statefulTaStream]]. */
+    * [[statefulTa]]. */
   def marketFeaturesStream(spark: SparkSession, inputDir: String,
                            sink: DataFrame => Unit,
                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -151,13 +151,38 @@ object StreamingPipelines {
   }
 
   // ------------------------------------------------------------------
-  // ST3: stateful chunk-carry TA — flatMapGroupsWithState port of
+  // ST3: stateful chunk-carry — the streaming port of
   // StatefulTAProcessor (`adi/app/features/processors/stateful_processor
-  // .py:11-41`): carry the last (window) rows per series so rolling
-  // windows are continuous across micro-batches.
+  // .py:11-41`): carry each series' state across micro-batches so a
+  // sequential computation is continuous across batch cuts. Every fold
+  // below runs through [[carryScan]] with its own step; the state lives
+  // in Spark's default state store, so no session needs configuring.
   // ------------------------------------------------------------------
 
+  /** A row of one series: the scan keys on `symbol` and orders a
+    * micro-batch by `epochSec`. */
+  sealed trait SeriesTick {
+    def symbol: String
+    def epochSec: Long
+  }
+
+  /** The one per-series scan of the chunk-carry protocol: per symbol,
+    * sort the micro-batch by `epochSec`, run `step` from the carried
+    * state (`init` on the series' first batch), keep the returned carry
+    * and emit the returned rows. */
+  private def carryScan[T <: SeriesTick, C: Encoder, O: Encoder](
+      ds: Dataset[T], init: C)(step: (C, IndexedSeq[T]) => (Seq[O], C)): Dataset[O] =
+    ds.groupByKey(_.symbol)(Encoders.STRING)
+      .flatMapGroupsWithState[C, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, rows: Iterator[T], state: GroupState[C]) =>
+          val (out, carry) =
+            step(state.getOption.getOrElse(init), rows.toIndexedSeq.sortBy(_.epochSec))
+          state.update(carry)
+          out.iterator
+      }
+
   case class Bar(symbol: String, epochSec: Long, high: Double, low: Double, close: Double)
+      extends SeriesTick
   case class TaOut(symbol: String, epochSec: Long, cci: Option[Double], roc: Option[Double])
   case class Carry(rows: List[Bar])
 
@@ -190,49 +215,11 @@ object StreamingPipelines {
   def statefulTa(ds: Dataset[Bar], window: Int = 20, constant: Double = 0.015)
                 (implicit spark: SparkSession): Dataset[TaOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[Carry, TaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Bar], state: GroupState[Carry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          val carry = state.getOption.map(_.rows.toIndexedSeq).getOrElse(IndexedSeq.empty)
-          val all = carry ++ batch
-          val out = batchIndicators(all, window, constant).drop(carry.length)
-          state.update(Carry(all.takeRight(window).toList))
-          out.iterator
-      }
-  }
-
-  /** The same chunk-carry protocol on Spark 4's `transformWithState` —
-    * the current stateful API (typed per-key state handles, timers, state
-    * TTL, RocksDB-backed with changelog checkpointing). The carry is a
-    * `ValueState[Carry]`; semantics are identical to [[statefulTa]] and
-    * the equivalence spec drives both implementations through the same
-    * chunked-vs-whole gate. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
-  class TaCarryProcessor(window: Int, constant: Double)
-      extends StatefulProcessor[String, Bar, TaOut] {
-    @transient private var carry: ValueState[Carry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[Carry]("carry",
-        org.apache.spark.sql.Encoders.product[Carry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[Bar],
-                                 timerValues: TimerValues): Iterator[TaOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      val prev = Option(carry.get()).map(_.rows.toIndexedSeq).getOrElse(IndexedSeq.empty)
-      val all = prev ++ batch
-      val out = batchIndicators(all, window, constant).drop(prev.length)
-      carry.update(Carry(all.takeRight(window).toList))
-      out.iterator
+    carryScan(ds, Carry(Nil)) { (carry, batch) =>
+      val all = carry.rows.toIndexedSeq ++ batch
+      (batchIndicators(all, window, constant).drop(carry.rows.length),
+        Carry(all.takeRight(window).toList))
     }
-  }
-
-  def statefulTaTws(ds: Dataset[Bar], window: Int = 20, constant: Double = 0.015)
-                   (implicit spark: SparkSession): Dataset[TaOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new TaCarryProcessor(window, constant),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -243,6 +230,7 @@ object StreamingPipelines {
   // ------------------------------------------------------------------
 
   case class SignTick(symbol: String, epochSec: Long, sign: Option[Double])
+      extends SeriesTick
   case class RegimeOut(symbol: String, epochSec: Long, p: Option[Double])
   case class RegimeCarry(p: Option[Double])
 
@@ -269,50 +257,14 @@ object StreamingPipelines {
                      u0: Double, u1: Double)
                     (implicit spark: SparkSession): Dataset[RegimeOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[RegimeCarry, RegimeOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[SignTick], state: GroupState[RegimeCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var p = state.getOption.flatMap(_.p)
-          val out = batch.map { t =>
-            p = regimeStep(p, t.sign, a01, a10, u0, u1)
-            RegimeOut(t.symbol, t.epochSec, p)
-          }
-          state.update(RegimeCarry(p))
-          out.iterator
-      }
-  }
-
-  /** [[statefulRegime]] on Spark 4's `transformWithState` (the
-    * [[TaCarryProcessor]] convention: RocksDB-backed ValueState, same
-    * fold, same equivalence gate). */
-  class RegimeCarryProcessor(a01: Double, a10: Double, u0: Double, u1: Double)
-      extends StatefulProcessor[String, SignTick, RegimeOut] {
-    @transient private var carry: ValueState[RegimeCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[RegimeCarry]("regimeCarry",
-        org.apache.spark.sql.Encoders.product[RegimeCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[SignTick],
-                                 timerValues: TimerValues): Iterator[RegimeOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var p = Option(carry.get()).flatMap(_.p)
+    carryScan(ds, RegimeCarry(None)) { (carry, batch) =>
+      var p = carry.p
       val out = batch.map { t =>
         p = regimeStep(p, t.sign, a01, a10, u0, u1)
         RegimeOut(t.symbol, t.epochSec, p)
       }
-      carry.update(RegimeCarry(p))
-      out.iterator
+      (out, RegimeCarry(p))
     }
-  }
-
-  def statefulRegimeTws(ds: Dataset[SignTick], a01: Double, a10: Double,
-                        u0: Double, u1: Double)
-                       (implicit spark: SparkSession): Dataset[RegimeOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new RegimeCarryProcessor(a01, a10, u0, u1),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -360,64 +312,28 @@ object StreamingPipelines {
                  maxTape: Int = LzComplexity.DefaultMaxTape)
                 (implicit spark: SparkSession): Dataset[LzOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[LzCarry, LzOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[SignTick], state: GroupState[LzCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(LzCarry("", 0, 0))
-          val out = batch.map { t =>
-            st = lzStep(st, t.sign, maxTape)
-            LzOut(t.symbol, t.epochSec, lzEval(st))
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulLz]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate, same tape budget). */
-  class LzCarryProcessor(maxTape: Int)
-      extends StatefulProcessor[String, SignTick, LzOut] {
-    @transient private var carry: ValueState[LzCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[LzCarry]("lzCarry",
-        org.apache.spark.sql.Encoders.product[LzCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[SignTick],
-                                 timerValues: TimerValues): Iterator[LzOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(LzCarry("", 0, 0))
+    carryScan(ds, LzCarry("", 0, 0)) { (carry, batch) =>
+      var st = carry
       val out = batch.map { t =>
         st = lzStep(st, t.sign, maxTape)
         LzOut(t.symbol, t.epochSec, lzEval(st))
       }
-      carry.update(st)
-      out.iterator
+      (out, st)
     }
-  }
-
-  def statefulLzTws(ds: Dataset[SignTick],
-                    maxTape: Int = LzComplexity.DefaultMaxTape)
-                   (implicit spark: SparkSession): Dataset[LzOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new LzCarryProcessor(maxTape),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
   // Streaming GARCH(1,1) variance filter: the chunk-carry twin of
-  // [[org.apache.spark.sql.graft.GarchVariance]] (every sequential
-  // window function in the engine has a bounded-state streaming twin —
-  // the EWM/Regime/Kalman/LZ76 convention). State is the single double
+  // [[org.apache.spark.sql.graft.GarchVariance]] (the regime, LZ76,
+  // GARCH and VaR-violation folds each have a batch window-function or
+  // operator twin they are gated against). State is the single double
   // of the window-function buffer; ω travels WITH each tick, constant
   // per symbol by contract — variance targeting is a batch estimate a
   // stream consumes, not something a stream can recompute.
   // ------------------------------------------------------------------
 
   case class VarTick(symbol: String, epochSec: Long, x2: Option[Double],
-                     omega: Double)
+                     omega: Double) extends SeriesTick
   case class GarchCarry(h: Option[Double])
   case class GarchOut(symbol: String, epochSec: Long, h: Option[Double])
 
@@ -442,67 +358,31 @@ object StreamingPipelines {
   def statefulGarch(ds: Dataset[VarTick], alpha: Double, beta: Double)
                    (implicit spark: SparkSession): Dataset[GarchOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[GarchCarry, GarchOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[VarTick], state: GroupState[GarchCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(GarchCarry(None))
-          val out = batch.map { t =>
-            st = garchStep(st, t.x2, t.omega, alpha, beta)
-            GarchOut(t.symbol, t.epochSec, st.h)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulGarch]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate). */
-  class GarchCarryProcessor(alpha: Double, beta: Double)
-      extends StatefulProcessor[String, VarTick, GarchOut] {
-    @transient private var carry: ValueState[GarchCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[GarchCarry]("garchCarry",
-        org.apache.spark.sql.Encoders.product[GarchCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[VarTick],
-                                 timerValues: TimerValues): Iterator[GarchOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(GarchCarry(None))
+    carryScan(ds, GarchCarry(None)) { (carry, batch) =>
+      var st = carry
       val out = batch.map { t =>
         st = garchStep(st, t.x2, t.omega, alpha, beta)
         GarchOut(t.symbol, t.epochSec, st.h)
       }
-      carry.update(st)
-      out.iterator
+      (out, st)
     }
-  }
-
-  def statefulGarchTws(ds: Dataset[VarTick], alpha: Double, beta: Double)
-                      (implicit spark: SparkSession): Dataset[GarchOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new GarchCarryProcessor(alpha, beta),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
   // Streaming VaR-violation transition counter: the chunk-carry twin
   // of [[graft.operators.Backtest.christoffersenTest]]'s sequential
-  // piece (the EWM/Regime/Kalman/LZ76/GARCH convention — every
-  // order-sensitive fold gets a bounded-state streaming twin). State
-  // is seven integers: the previous indicator and the running
-  // (n, n_viol, n₀₀…n₁₁); `varAlpha` travels WITH each tick — the VaR
-  // threshold is a batch estimate a stream consumes (the GARCH ω
-  // contract), re-fit on a reference window, never recomputed
-  // mid-stream. The LR statistics are pure functions of the emitted
-  // counts, so count-equivalence across micro-batch cuts IS
-  // statistic-equivalence.
+  // piece (like the regime, LZ76 and GARCH folds, gated bit-for-bit
+  // against its batch counterpart). State is seven integers: the
+  // previous indicator and the running (n, n_viol, n₀₀…n₁₁); `varAlpha`
+  // travels WITH each tick — the VaR threshold is a batch estimate a
+  // stream consumes (the GARCH ω contract), re-fit on a reference
+  // window, never recomputed mid-stream. The LR statistics are pure
+  // functions of the emitted counts, so count-equivalence across
+  // micro-batch cuts IS statistic-equivalence.
   // ------------------------------------------------------------------
 
   case class ViolTick(symbol: String, epochSec: Long, v: Option[Double],
-                      varAlpha: Double)
+                      varAlpha: Double) extends SeriesTick
   /** `prev = -1` before the first valid observation. */
   case class ViolCarry(prev: Int, n: Long, nViol: Long,
                        n00: Long, n01: Long, n10: Long, n11: Long)
@@ -535,51 +415,15 @@ object StreamingPipelines {
   def statefulViolations(ds: Dataset[ViolTick])
                         (implicit spark: SparkSession): Dataset[ViolOut] = {
     import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .flatMapGroupsWithState[ViolCarry, ViolOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[ViolTick], state: GroupState[ViolCarry]) =>
-          val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-          var st = state.getOption.getOrElse(ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L))
-          val out = batch.map { t =>
-            st = violStep(st, t.v, t.varAlpha)
-            ViolOut(t.symbol, t.epochSec, st.n, st.nViol,
-              st.n00, st.n01, st.n10, st.n11)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** [[statefulViolations]] on Spark 4's `transformWithState` (the
-    * [[RegimeCarryProcessor]] convention: RocksDB-backed ValueState,
-    * same fold, same equivalence gate). */
-  class ViolCarryProcessor
-      extends StatefulProcessor[String, ViolTick, ViolOut] {
-    @transient private var carry: ValueState[ViolCarry] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      carry = getHandle.getValueState[ViolCarry]("violCarry",
-        org.apache.spark.sql.Encoders.product[ViolCarry], TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[ViolTick],
-                                 timerValues: TimerValues): Iterator[ViolOut] = {
-      val batch = rows.toIndexedSeq.sortBy(_.epochSec)
-      var st = Option(carry.get()).getOrElse(ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L))
+    carryScan(ds, ViolCarry(-1, 0L, 0L, 0L, 0L, 0L, 0L)) { (carry, batch) =>
+      var st = carry
       val out = batch.map { t =>
         st = violStep(st, t.v, t.varAlpha)
         ViolOut(t.symbol, t.epochSec, st.n, st.nViol,
           st.n00, st.n01, st.n10, st.n11)
       }
-      carry.update(st)
-      out.iterator
+      (out, st)
     }
-  }
-
-  def statefulViolationsTws(ds: Dataset[ViolTick])
-                           (implicit spark: SparkSession): Dataset[ViolOut] = {
-    import spark.implicits._
-    ds.groupByKey(_.symbol)
-      .transformWithState(new ViolCarryProcessor,
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------------------------------

@@ -25,9 +25,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** After each suite, what the shared session still holds: persisted
-    * RDDs (including localCheckpoint blocks) and storage memory in use
-    * across block managers — the evidence for order-dependent memory
-    * failures in the single test JVM. */
+    * RDDs (including localCheckpoint blocks), storage memory in use
+    * across block managers, and streaming queries still running (a spec
+    * that throws before `q.stop()` leaves its query behind) — the
+    * evidence for order-dependent memory failures in the single test
+    * JVM. */
   override def afterAll(): Unit =
     try SparkSession.getDefaultSession.foreach { s =>
       val sc = s.sparkContext
@@ -35,7 +37,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val usedMb = mem.map { case (max, free) => max - free }.sum / (1 << 20)
       val maxMb = mem.map(_._1).sum / (1 << 20)
       println(s"[spark-mem] ${suiteName}: ${sc.getPersistentRDDs.size} persistent RDDs, " +
-        s"storage memory $usedMb of $maxMb MB used")
+        s"storage memory $usedMb of $maxMb MB used, " +
+        s"${s.streams.active.length} active streaming queries")
     } finally super.afterAll()
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean = math.abs(a - b) <= tol

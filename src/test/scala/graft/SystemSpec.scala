@@ -617,9 +617,14 @@ class SystemSpec extends SparkSpec {
   test("streaming: stateful TA chunk-carry ≡ whole-series (ST3 equivalence gate)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val bars = (1 to 30).map(i =>
-      Bar("S", 1000L + i, i.toDouble + 1, i.toDouble - 1, i.toDouble)).toIndexedSeq
-    val whole = batchIndicators(bars, 5, 0.015)
+    // two interleaved series with different prices: each keeps its own carry
+    val bars = (1 to 30).flatMap { i =>
+      val c = 50.0 + (i * 37 % 11)
+      Seq(Bar("S", 1000L + 2 * i, i.toDouble + 1, i.toDouble - 1, i.toDouble),
+        Bar("T", 1001L + 2 * i, c + 2.0, c - 1.5, c))
+    }
+    val whole = bars.groupBy(_.symbol).values
+      .flatMap(series => batchIndicators(series, 5, 0.015)).toSeq.sortBy(_.epochSec)
     // chunked through the streaming state machine: two micro-batches split at 20
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Bar]
@@ -666,45 +671,6 @@ class SystemSpec extends SparkSpec {
       .sortBy(t => (t.symbol, t.epochSec)).toSeq
     q.stop()
     assert(got == whole, "streaming fold must be bit-identical to the batch window")
-  }
-
-  test("streaming: regime-filter transformWithState ≡ batch window function (ST3, Spark-4 API)") {
-    import StreamingPipelines._
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val (a01, a10, u0, u1) = (0.04, 0.04, 0.35, 0.65)
-      val signs: Seq[Option[Double]] =
-        Seq(None, Some(1.0), Some(0.0)) ++
-          (1 to 27).map(i => Some(if (i % 4 == 0) -1.0 else 1.0))
-      val ticks = signs.zipWithIndex.map { case (sg, i) => SignTick("A", 1000L + i, sg) }
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("symbol")).orderBy(col("epochSec"))
-      val whole = ticks.toDF("symbol", "epochSec", "sign")
-        .select(col("symbol"), col("epochSec"),
-          graft.functions.windows.regimeProb(col("sign"), a01, a10, u0, u1, w).as("p"))
-        .as[RegimeOut].collect().sortBy(_.epochSec).toSeq
-      implicit val sqlCtx = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignTick]
-      val q = statefulRegimeTws(mem.toDS(), a01, a10, u0, u1)
-        .writeStream.format("memory").queryName("regime_tws_out")
-        .outputMode("append").start()
-      mem.addData(ticks.take(12): _*)
-      q.processAllAvailable()
-      mem.addData(ticks.drop(12): _*)
-      q.processAllAvailable()
-      val got = spark.table("regime_tws_out").as[RegimeOut].collect()
-        .sortBy(_.epochSec).toSeq
-      q.stop()
-      assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("streaming: LZ76 chunk-carry ≡ batch window function (ST3, bounded tape state)") {
@@ -755,44 +721,6 @@ class SystemSpec extends SparkSpec {
     assert(e.getMessage.contains("exceeded maxTape=6"), e.getMessage)
   }
 
-  test("streaming: LZ76 transformWithState ≡ batch window function (ST3, Spark-4 API)") {
-    import StreamingPipelines._
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val signs: Seq[Option[Double]] =
-        Seq(None, Some(1.0), Some(0.0)) ++
-          (1 to 27).map(i => Some(if (i % 3 == 0) -1.0 else 1.0))
-      val ticks = signs.zipWithIndex.map { case (sg, i) => SignTick("A", 1000L + i, sg) }
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("symbol")).orderBy(col("epochSec"))
-      val whole = ticks.toDF("symbol", "epochSec", "sign")
-        .select(col("symbol"), col("epochSec"),
-          graft.functions.windows.lzComplexity(col("sign"), w).as("c"))
-        .as[LzOut].collect().sortBy(_.epochSec).toSeq
-      implicit val sqlCtx = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SignTick]
-      val q = statefulLzTws(mem.toDS())
-        .writeStream.format("memory").queryName("lz_tws_out")
-        .outputMode("append").start()
-      mem.addData(ticks.take(13): _*)
-      q.processAllAvailable()
-      mem.addData(ticks.drop(13): _*)
-      q.processAllAvailable()
-      val got = spark.table("lz_tws_out").as[LzOut].collect()
-        .sortBy(_.epochSec).toSeq
-      q.stop()
-      assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("streaming: GARCH chunk-carry ≡ batch window function (ST3, one-double state)") {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
@@ -836,46 +764,6 @@ class SystemSpec extends SparkSpec {
     q.stop()
     assert(got == whole,
       "streaming GARCH fold must be bit-identical to the batch window")
-  }
-
-  test("streaming: GARCH transformWithState ≡ batch window function (ST3, Spark-4 API)") {
-    import StreamingPipelines._
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val xs: Seq[Option[Double]] =
-        Seq(None, Some(0.002), None) ++
-          (1 to 25).map(i => Some((i % 7).toDouble / 1e3))
-      val ticks = xs.zipWithIndex.map { case (x, i) =>
-        VarTick("A", 1000L + i, x, 1.5e-3) }
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("symbol")).orderBy(col("epochSec"))
-      val whole = ticks.toDF("symbol", "epochSec", "x2", "omega")
-        .select(col("symbol"), col("epochSec"),
-          graft.functions.windows.garchVariance(col("x2"), col("omega"),
-            0.08, 0.90, w).as("h"))
-        .as[GarchOut].collect().sortBy(_.epochSec).toSeq
-      implicit val sqlCtx = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[VarTick]
-      val q = statefulGarchTws(mem.toDS(), 0.08, 0.90)
-        .writeStream.format("memory").queryName("garch_tws_out")
-        .outputMode("append").start()
-      mem.addData(ticks.take(11): _*)
-      q.processAllAvailable()
-      mem.addData(ticks.drop(11): _*)
-      q.processAllAvailable()
-      val got = spark.table("garch_tws_out").as[GarchOut].collect()
-        .sortBy(_.epochSec).toSeq
-      q.stop()
-      assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("streaming: violation-transition fold ≡ batch christoffersen counts (ST3)") {
@@ -932,63 +820,52 @@ class SystemSpec extends SparkSpec {
       assert((f.n, f.nViol, f.n00, f.n01, f.n10, f.n11) == batchCounts(k),
         s"$k: $f vs ${batchCounts(k)}")
     }
-    // the Spark-4 transformWithState variant folds identically
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ViolTick]
-      val q2 = statefulViolationsTws(mem2.toDS())
-        .writeStream.format("memory").queryName("viol_tws_out")
-        .outputMode("append").start()
-      mem2.addData(byTime.take(71): _*)
-      q2.processAllAvailable()
-      mem2.addData(byTime.drop(71): _*)
-      q2.processAllAvailable()
-      val fin2 = spark.table("viol_tws_out").as[ViolOut].collect()
-        .groupBy(_.symbol).map { case (k, rows) => k -> rows.maxBy(_.epochSec) }
-      q2.stop()
-      Seq("A", "B").foreach { k =>
-        val f = fin2(k)
-        assert((f.n, f.nViol, f.n00, f.n01, f.n10, f.n11) == batchCounts(k),
-          s"tws $k: $f vs ${batchCounts(k)}")
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
-  test("streaming: transformWithState chunk-carry ≡ whole-series (ST3, Spark-4 API)") {
+  test("streaming: LZ76 fold restarted on its checkpoint resumes each series' carry (ST3)", Stateful) {
     import StreamingPipelines._
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val bars = (1 to 30).map(i =>
-        Bar("S", 1000L + i, i.toDouble + 1, i.toDouble - 1, i.toDouble)).toIndexedSeq
-      val whole = batchIndicators(bars, 5, 0.015)
-      implicit val sqlCtx = spark.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Bar]
-      val q = statefulTaTws(mem.toDS(), window = 5)
-        .writeStream.format("memory").queryName("ta_tws_out")
-        .outputMode("append").start()
-      mem.addData(bars.take(20): _*)
-      q.processAllAvailable()
-      mem.addData(bars.drop(20): _*)
-      q.processAllAvailable()
-      val got = spark.table("ta_tws_out").as[TaOut].collect().sortBy(_.epochSec).toSeq
-      q.stop()
-      assert(got == whole)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    val in = tmp()
+    val ckpt = tmp() + "/ckpt"
+    var seed = 5L
+    val ticks = (0 until 36).flatMap { i =>
+      seed = seed * 6364136223846793005L + 1442695040888963407L
+      val sg = if (i % 10 == 0) None else Some(if ((seed >>> 62) % 2 == 0) 1.0 else -1.0)
+      Seq(SignTick("A", 1000L + i, sg), SignTick("B", 1000L + i, sg.map(-_)))
     }
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("symbol")).orderBy(col("epochSec"))
+    val whole = ticks.toDF("symbol", "epochSec", "sign")
+      .select(col("symbol"), col("epochSec"),
+        graft.functions.windows.lzComplexity(col("sign"), w).as("c"))
+      .as[LzOut].collect().sortBy(t => (t.symbol, t.epochSec)).toSeq
+    // a foreachBatch sink: the memory sink does not recover from a checkpoint
+    def runOnce(): Seq[LzOut] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[LzOut]()
+      val q = statefulLz(spark.readStream
+          .schema(org.apache.spark.sql.Encoders.product[SignTick].schema)
+          .json(in).as[SignTick])
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[LzOut], _: Long) =>
+          b.collect().foreach(got.add)
+        }
+        .start()
+      q.awaitTermination(120000)
+      got.toArray(Array.empty[LzOut]).toSeq
+    }
+    def drop(name: String, rows: Seq[SignTick]): Unit =
+      Files.writeString(java.nio.file.Paths.get(in, name), rows.map { t =>
+        s"""{"symbol": "${t.symbol}", "epochSec": ${t.epochSec}, "sign": ${t.sign.getOrElse("null")}}"""
+      }.mkString("\n"))
+    drop("b0.json", ticks.filter(_.epochSec < 1020))
+    val first = runOnce()
+    drop("b1.json", ticks.filter(_.epochSec >= 1020))
+    val second = runOnce()
+    assert(first.nonEmpty && second.nonEmpty)
+    assert((first ++ second).sortBy(t => (t.symbol, t.epochSec)) == whole,
+      "the restarted fold must continue from the checkpointed carry")
   }
 
   test("streaming: file-drop market stream builds features via foreachBatch (ST1)") {
