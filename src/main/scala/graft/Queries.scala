@@ -7315,11 +7315,14 @@ object Queries {
       FROM ag ORDER BY event_type"""))
 
   // Minimum spanning tree of the correlation network (Mantegna 1999):
-  // d = √(2(1−ρ)) on the LW-CC shrunk correlation, MST via Borůvka
-  // rounds — per round every component picks its minimum outgoing
-  // edge under the TOTAL (dq, a, b) order, merged labels flood by
-  // min-label jumps; both engines replay the identical fixed rounds
-  // (the kmeans doctrine), so the tree hash-matches edge for edge.
+  // d = √(2(1−ρ)) on the LW-CC shrunk correlation. Under the TOTAL
+  // (dq, a, b) edge order the minimum spanning forest is unique, so the
+  // engine's driver Kruskal and the oracle's Borůvka rounds (per round
+  // every component picks its minimum outgoing edge, merged labels
+  // flood by min-label jumps) hash-match edge for edge once the oracle
+  // fully merges: at the 5 event-type keys its 3 rounds cover
+  // ⌈log₂ 5⌉ = 3 and its 4 jumps cover the longest chain (≤ 4 hops).
+  // MstRounds/MstJumps size only the oracle SQL below.
   // The backbone HRP-style clustering walks, as a first-class query.
   private val MstRounds = 3
   private val MstJumps = 4
@@ -7329,8 +7332,7 @@ object Queries {
       val dist = corrPairs(s, dir).where(col("key_a") < col("key_b"))
         .select(col("key_a"), col("key_b"),
           sqrt(lit(2.0) * (lit(1.0) - col("corr"))).as("dist"))
-      Relational.minSpanningTree(dist, "dist",
-          rounds = MstRounds, jumps = MstJumps)
+      Relational.minSpanningTree(dist, "dist")
         .orderBy("key_a", "key_b")
     },
     Some({

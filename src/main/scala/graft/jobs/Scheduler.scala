@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 
 import graft.sources.{Connectors, LakeWriter}
 import graft.store.FeatureStore
@@ -27,7 +28,8 @@ object Scheduler {
 
   /** Run `body(tickEpoch)` every `intervalSec` under Spark's streaming
     * runtime. The body failing marks the tick failed without killing the
-    * query (`_run_with_metrics` semantics: log + count, keep scheduling).
+    * query (`_run_with_metrics` semantics: log + count, keep scheduling);
+    * a tick cut short by the query's stop counts as nothing.
     * Returns the live query; callers stop it. */
   def schedule(spark: SparkSession, jobId: String, intervalSec: Long)
               (body: Long => Unit): StreamingQuery =
@@ -43,17 +45,32 @@ object Scheduler {
           graft.metrics.Metrics.counter("job_runs_total",
             Map("job" -> jobId, "status" -> "ok")).increment()
           System.err.println(f"[job] $jobId tick=$tick ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          // e.toString, not getMessage: interruption during query stop
-          // surfaces as a null-message SparkException
-          graft.metrics.Metrics.counter("job_runs_total",
-            Map("job" -> jobId, "status" -> "error")).increment()
-          System.err.println(s"[job] $jobId tick=$tick FAILED: $e")
+        } catch {
+          // q.stop() interrupting the tick in flight is a stop, not a
+          // failed run: re-raised uncounted, so the streaming runtime
+          // ends the query as stopped and the interrupt is not swallowed
+          case e: Throwable if isStopInterrupt(e) => throw e
+          case NonFatal(e) =>
+            graft.metrics.Metrics.counter("job_runs_total",
+              Map("job" -> jobId, "status" -> "error")).increment()
+            System.err.println(s"[job] $jobId tick=$tick FAILED: $e")
         } finally graft.metrics.Metrics
           .histogram("job_duration_seconds", Map("job" -> jobId))
           .observe((System.nanoTime() - t0) / 1e9)
       }
       .start()
+
+  /** Whether a tick body's failure `e` is its query being stopped: the
+    * thread's interrupt flag, an interrupt anywhere in the cause chain
+    * (Spark wraps it), or Spark's null-message SparkException form. */
+  private def isStopInterrupt(e: Throwable): Boolean =
+    Thread.currentThread().isInterrupted ||
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case _: InterruptedException | _: java.io.InterruptedIOException |
+             _: java.nio.channels.ClosedByInterruptException => true
+        case s: org.apache.spark.SparkException => s.getMessage == null
+        case _ => false
+      }
 
   /** One backfill run — `run_market_backfill_job`
     * (`scheduler/main.py:208-219`): plan the missing grid, fill from the

@@ -561,30 +561,6 @@ object Backtest {
       .orderBy("key")
   }
 
-  /** Equal-risk-contribution (risk-parity) portfolio (Maillard, Roncalli
-    * & Teïletche 2010; solver: Spinu 2013's convex formulation): the
-    * weights where every asset contributes the SAME share of portfolio
-    * risk, `w_i·(Σw)_i = w_j·(Σw)_j` — the allocator between
-    * inverse-variance (ignores correlation) and minimum-variance
-    * (concentrates). Minimizes `F(x) = ½xᵀΣx − (1/k)Σln x_i` by
-    * cyclical coordinate descent — each coordinate update is the
-    * positive root of `σ_ii x_i² + c_i x_i − 1/k = 0` with
-    * `c_i = (Σx)_i − σ_ii x_i` — then normalizes. F is strictly convex
-    * on the positive orthant for PSD Σ, so the minimizer is unique and
-    * CCD converges monotonically; at the optimum `x_i(Σx)_i = 1/k`
-    * exactly — the ERC condition.
-    *
-    * DRIVER-SIDE like [[minVariancePortfolio]] (key-sized, the same
-    * probe-before-collect guard); deterministic: sorted-key coordinate
-    * order, inverse-vol start, fixed IEEE update tree, convergence on
-    * `max|Δx| ≤ tol·max|x|`; non-convergence raises loudly (a
-    * non-PSD pair frame — shrink harder upstream). Sequential
-    * coordinate sweeps are not SQL-expressible — rows-only oracle
-    * entry, the [[hrpPortfolio]] precedent; on a DIAGONAL Σ the
-    * optimum is inverse-vol EXACTLY, which is the hash-checked
-    * q_portfolio_ivp path (spec-pinned).
-    *
-    * Returns `(key, weight)`, weights ≥ 0 summing to 1, 6 dp. */
   /** Leading principal component ("market mode") of a covariance pair
     * frame via QUANTIZED power iteration — the hash-checkable
     * complement to the driver-side allocators: no collect, no solver.
@@ -696,6 +672,30 @@ object Backtest {
           .as("var_share"))
   }
 
+  /** Equal-risk-contribution (risk-parity) portfolio (Maillard, Roncalli
+    * & Teïletche 2010; solver: Spinu 2013's convex formulation): the
+    * weights where every asset contributes the SAME share of portfolio
+    * risk, `w_i·(Σw)_i = w_j·(Σw)_j` — the allocator between
+    * inverse-variance (ignores correlation) and minimum-variance
+    * (concentrates). Minimizes `F(x) = ½xᵀΣx − (1/k)Σln x_i` by
+    * cyclical coordinate descent — each coordinate update is the
+    * positive root of `σ_ii x_i² + c_i x_i − 1/k = 0` with
+    * `c_i = (Σx)_i − σ_ii x_i` — then normalizes. F is strictly convex
+    * on the positive orthant for PSD Σ, so the minimizer is unique and
+    * CCD converges monotonically; at the optimum `x_i(Σx)_i = 1/k`
+    * exactly — the ERC condition.
+    *
+    * DRIVER-SIDE like [[minVariancePortfolio]] (key-sized, the same
+    * probe-before-collect guard); deterministic: sorted-key coordinate
+    * order, inverse-vol start, fixed IEEE update tree, convergence on
+    * `max|Δx| ≤ tol·max|x|`; non-convergence raises loudly (a
+    * non-PSD pair frame — shrink harder upstream). Sequential
+    * coordinate sweeps are not SQL-expressible — rows-only oracle
+    * entry, the [[hrpPortfolio]] precedent; on a DIAGONAL Σ the
+    * optimum is inverse-vol EXACTLY, which is the hash-checked
+    * q_portfolio_ivp path (spec-pinned).
+    *
+    * Returns `(key, weight)`, weights ≥ 0 summing to 1, 6 dp. */
   def ercPortfolio(cov: DataFrame, covCol: String = "shrunk_cov",
                    maxKeys: Int = 256, maxSweeps: Int = 10000,
                    tol: Double = 1e-12): DataFrame = {

@@ -107,21 +107,16 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       nullif(size(array_union(a, b)), lit(0))
 
-  /** k-permutation MinHash signatures, one row per doc, as an
-    * explode + 64-way min aggregation. Plan shape: tokenize → explode
-    * shingles → project k hash columns (one universal-hash multiply-add
-    * per permutation, whole-stage codegen) → groupBy(id) with k `min` aggs (map-side
-    * partial aggregation → the shuffle carries one k·8-byte signature
-    * per doc, not the shingles). Nested-lambda HOF formulations of the
-    * same thing drop out of codegen and run ~100× slower. */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        shingleN: Int, k: Int): DataFrame =
-    minhashSignaturesFromRows(shingleRows(df, textCol, idCol, shingleN), k)
-
-  /** Signatures from an (id, s) shingle-row frame. Permutation i is the
-    * universal hash (aᵢ·h + bᵢ) mod 2³¹−1 over the portable base hash —
-    * plain codegen arithmetic (cheaper than k seeded hash calls) and
-    * reproducible by an external oracle. */
+  /** k-permutation MinHash signatures from an (id, s) shingle-row frame,
+    * one row per doc, as a 64-way min aggregation. Plan
+    * shape: project k hash columns (one universal-hash multiply-add per
+    * permutation, whole-stage codegen) → groupBy(id) with k `min` aggs
+    * (map-side partial aggregation → the shuffle carries one k·8-byte
+    * signature per doc, not the shingles). Nested-lambda HOF
+    * formulations of the same thing drop out of codegen and run ~100×
+    * slower. Permutation i is the universal hash (aᵢ·h + bᵢ) mod 2³¹−1
+    * over the portable base hash — plain codegen arithmetic (cheaper
+    * than k seeded hash calls) and reproducible by an external oracle. */
   def minhashSignaturesFromRows(sh: DataFrame, k: Int): DataFrame =
     minhashSignaturesFromHashRows(
       sh.select(col("id"), TextAnalysis.tokenHash48(col("s")).as("h")), k)
@@ -256,7 +251,7 @@ object Dedup {
   /** 64-bit SimHash per doc: bit j is the sign of
     * Σ_tokens (2·bit_j(h64(token)) − 1), with the PORTABLE md5-derived
     * [[TextAnalysis.tokenHash64]] (oracle-reproducible). Same explode +
-    * 64-sum aggregation shape as [[minhashSignatures]] (codegen +
+    * 64-sum aggregation shape as [[minhashSignaturesFromRows]] (codegen +
     * map-side combine); the final fold to one long is a projection. */
   def simhash64(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val tok = df.select(col(idCol).as("id"),

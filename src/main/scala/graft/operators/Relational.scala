@@ -624,7 +624,7 @@ object Relational {
     * equally the feature-redundancy screen for a training matrix.
     *
     * Input is long-form `(keyCol, tsCol, valueCol)` with ONE row per
-    * key per aligned bucket (resample first — [[Resample.resampleAgg]]
+    * key per aligned bucket (resample first — [[Resample.bars]]
     * produces exactly this shape). Every pair `key_a < key_b` is
     * correlated over the buckets BOTH series populate (inner join —
     * missing buckets drop pairwise, the pandas `corr` convention).
@@ -1005,7 +1005,7 @@ object Relational {
     * minimum-variance optimizer should consume.
     *
     * Input is long-form `(keyCol, tsCol, valueCol)`, one row per key
-    * per aligned bucket ([[Resample.resampleAgg]] shape). The matrix
+    * per aligned bucket ([[Resample.bars]] shape). The matrix
     * statistics need one common T, so the panel is COMPLETE-CASE:
     * only buckets where every series is present (and non-null) enter
     * — unlike [[correlationMatrix]]'s pairwise-complete convention.
@@ -2231,205 +2231,48 @@ object Relational {
     saltedBig.join(replicated, keys :+ "_salt", joinType).drop("_salt")
   }
 
-  /** Minimum spanning tree of a weighted pair frame via Borůvka rounds
-    * (Mantegna 1999's correlation-network backbone when fed
-    * `d = √(2(1−ρ))`). `dist` holds the UPPER triangle
-    * `(key_a < key_b, distCol)`; weights quantize to ·10⁶ BIGINTs and
-    * ties break on `(dq, key_a, key_b)` — a TOTAL order, so the tree
-    * is deterministic and any engine replaying the same rounds gets
-    * the identical edge set (the fixed-round doctrine: converged
-    * components simply stop picking).
+  /** Minimum spanning tree of a weighted pair frame (Mantegna 1999's
+    * correlation-network backbone when fed `d = √(2(1−ρ))`). `dist`
+    * holds the UPPER triangle `(key_a < key_b, distCol)`; weights
+    * quantize to ·10⁶ BIGINTs and ties break on `(dq, key_a, key_b)` —
+    * a TOTAL order, so the minimum spanning forest is unique and every
+    * correct MST algorithm (an oracle's fully merged Borůvka rounds
+    * included) returns the identical edge set.
     *
-    * Per round every component picks its minimum outgoing edge
-    * (classic Borůvka — halves the component count, so `rounds` ≥
-    * ⌈log₂ n⌉ spans any n-node graph; merged labels propagate by
-    * `jumps` min-label steps over the picked component edges, `jumps`
-    * ≥ the round's component-chain diameter, n−1 worst case for tiny
-    * n). All frames are key- or key²-sized; joins broadcast; lineage
-    * truncated per round.
-    *
-    * `rounds`/`jumps` ≤ 0 (the default) SELF-BUDGET: rounds derive
-    * from the node count (⌈log₂ n⌉ — one key-sized count) and label
-    * propagation iterates to a FIXPOINT (stop when no label changed,
-    * hard-capped at n−1 steps), so no caller-supplied constant can
-    * under-merge a component and let a later round re-pick an internal
-    * edge as "outgoing" (a cycle edge the cross-round dedup cannot
-    * remove). Oracle-replayed call sites that unroll a pinned budget
-    * (q_corr_mst: rounds=3, jumps=4 at 5 keys) keep passing explicit
-    * values — for them the budget is part of the cross-engine
-    * protocol and provably covers their key count.
+    * Kruskal on the driver: Spark sorts the edges in that order, one
+    * guarded collect ([[DriverLoop.collect]], ≤ 2^20 edges — a key²
+    * universe) brings them over, and a union-find walks them, keeping
+    * each edge that joins two components. The driver only decides which
+    * rows to keep, by string equality; the quantization, the sort and
+    * the `dq / 1e6` back-conversion stay Spark expressions. The edges
+    * gather into one partition (a sort within it is the total order)
+    * after an upstream that keeps its parallelism.
     *
     * Returns `(key_a, key_b, dist)` — the n−1 tree edges (fewer if
     * the graph is disconnected; null-weight edges are ignored). */
-  def minSpanningTree(dist: DataFrame, distCol: String = "dist",
-                      rounds: Int = 0, jumps: Int = 0): DataFrame = {
-    // derived rounds assume each round FULLY merges its picked
-    // components — only the fixpoint propagation guarantees that; a
-    // pinned jump budget under auto rounds reintroduces the
-    // under-merge hazard the self-budget exists to close
-    require(rounds > 0 || jumps <= 0,
-      s"minSpanningTree: auto rounds (rounds=$rounds) require fixpoint " +
-        s"label propagation — drop the jumps pin (got jumps=$jumps) or pin both")
-    // r13 optimization-round restructure (the Backtest.cgRoundLoop
-    // rationale — the wall was ~7 checkpoint/broadcast-build/count jobs
-    // per Borůvka round, pure driver-loop scheduling floor): every
-    // frame here is key-/key²-sized by the solver contract, so state
-    // rides the rounds as driver-collected LocalRelations. Broadcasts
-    // build driver-side with no job; the picked edges accumulate in a
-    // driver buffer and materialize ONCE at the end (the deferred
-    // chunk-union rationale); the fixpoint's change test compares the
-    // collected label rows instead of running a join+count job. Values
-    // are untouched — collect-and-reinject only; every min/least/
-    // row_number stays a Spark expression over the same rows.
-    val spark = dist.sparkSession
-    val edges = DriverLoop.localize(dist
+  def minSpanningTree(dist: DataFrame, distCol: String = "dist"): DataFrame = {
+    val edges = dist
       .select(col("key_a").cast("string").as("a"),
         col("key_b").cast("string").as("b"),
         round(col(distCol) * 1e6).cast("long").as("dq"))
-      .where(col("dq").isNotNull && col("a") < col("b")), "minSpanningTree").coalesce(1)
-    // component map rides the rounds as driver rows + a LocalRelation
-    // twin (r14 — the cgRoundLoop "pure row plumbing" pattern: the
-    // prologue frames each round derives from ALREADY-COLLECTED rows
-    // — ce, the identity label seed, the contracted comp — are row
-    // reshapes with no value computed, so building them on the driver
-    // removes one scheduled job each; every VALUE decision — the dq
-    // edge ordering, the row_number pick, the min-label propagation —
-    // stays a Spark expression)
-    val compSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("comp",
-        org.apache.spark.sql.types.StringType)))
-    var compRows: Seq[org.apache.spark.sql.Row] =
-      DriverLoop.collect(edges.select(col("a").as("node"))
-        .unionByName(edges.select(col("b").as("node"))).distinct()
-        .withColumn("comp", col("node")), "minSpanningTree").toSeq
-    def compFrame: DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(compRows: _*), compSchema)
-    val n: Long =
-      if (rounds > 0 && jumps > 0) -1L else compRows.size.toLong
-    val r: Int =
-      if (rounds > 0) rounds
-      else math.max(1, math.ceil(math.log(math.max(2L, n).toDouble) /
-        math.log(2.0)).toInt)
-    val mstRows = Seq.newBuilder[org.apache.spark.sql.Row]
-    val edgeSchema = edges.schema
-    val labSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("l",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lab",
-        org.apache.spark.sql.types.StringType)))
-    (1 to r).foreach { _ =>
-      val comp = compFrame
-      val oe = edges
-        .join(broadcast(comp.select(col("node").as("a"), col("comp").as("ca"))), Seq("a"))
-        .join(broadcast(comp.select(col("node").as("b"), col("comp").as("cb"))), Seq("b"))
-        .where(col("ca") =!= col("cb"))
-      val bi = oe.select(col("ca").as("c"), col("a"), col("b"), col("dq"),
-          col("ca"), col("cb"))
-        .unionByName(oe.select(col("cb").as("c"), col("a"), col("b"), col("dq"),
-          col("ca"), col("cb")))
-      val pickRows = bi
-        .coalesce(1) // SinglePartition satisfies the window's clustering
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("c")).orderBy(col("dq"), col("a"), col("b"))))
-        .where(col("_rn") === 1)
-        .collect().toSeq
-      mstRows ++= pickRows.map(r0 => org.apache.spark.sql.Row(
-        r0.getString(1), r0.getString(2), r0.getLong(3)))
-      // picked component edges + identity label seed: driver reshapes
-      // of the collected pick/comp rows (no scheduled job, no values)
-      val ceRows = pickRows.flatMap(r0 => Seq(
-        (r0.getString(4), r0.getString(5)), (r0.getString(5), r0.getString(4))))
-        .distinct
-        .map { case (x, y) => org.apache.spark.sql.Row(x, y) }
-      val ce = spark.createDataFrame(java.util.Arrays.asList(ceRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("x",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("y",
-            org.apache.spark.sql.types.StringType)))).coalesce(1)
-      var labRows: Seq[org.apache.spark.sql.Row] = compRows
-        .map(_.getString(1)).distinct
-        .map(l => org.apache.spark.sql.Row(l, l))
-      var lab = spark.createDataFrame(
-        java.util.Arrays.asList(labRows: _*), labSchema)
-      // single-partition shuffle-hash chain: one jump is ONE
-      // exchange-free single-task plan layer (the cgRoundLoop pattern).
-      // r14: the FIXPOINT path's layers also pointer-double — after
-      // the neighbor min, labels re-read through their own map (lab ←
-      // min(lab, lab∘lab), both already-computed labels; the fixpoint,
-      // min reachable label, is unchanged and idempotent under the
-      // lookup) — so a path of diameter d converges in O(log d)
-      // collected steps instead of O(d). The PINNED (rounds, jumps)
-      // path stays strictly one-hop: callers' oracles (q_corr_mst)
-      // unroll exactly `jumps` one-hop chains, so a doubled layer
-      // would compute a DIFFERENT (more converged) partial labeling
-      // there — per-jump semantics are part of that path's contract.
-      def jumpPlan(l0: DataFrame, doubled: Boolean): DataFrame = {
-        val nb = ce.join(l0.coalesce(1)
-            .select(col("l").as("y"), col("lab").as("nlab"))
-            .hint("shuffle_hash"), Seq("y"))
-          .coalesce(1)
-          .groupBy(col("x")).agg(min(col("nlab")).as("mn"))
-        val stepped = l0.coalesce(1)
-          .join(nb.select(col("x").as("l"), col("mn")).hint("shuffle_hash"),
-            Seq("l"), "left")
-          .select(col("l"), least(col("lab"), coalesce(col("mn"), col("lab"))).as("lab"))
-          .coalesce(1)
-        if (!doubled) stepped
-        else stepped
-          .join(stepped.select(col("l").as("lab"), col("lab").as("ll"))
-            .hint("shuffle_hash"), Seq("lab"), "left")
-          .select(col("l"), least(col("lab"), coalesce(col("ll"), col("lab"))).as("lab"))
-          .coalesce(1)
-      }
-      def jump(): Boolean = {
-        val nextRows = jumpPlan(lab, doubled = true).collect().toSeq
-        val prev = labRows.map(r0 => r0.getString(0) -> r0.getString(1)).toMap
-        val changed = nextRows.exists(r0 => !prev.get(r0.getString(0)).contains(r0.getString(1)))
-        labRows = nextRows
-        lab = spark.createDataFrame(java.util.Arrays.asList(nextRows: _*), lab.schema)
-        changed
-      }
-      if (jumps > 0) {
-        // pinned budget needs no per-jump change test — chain the
-        // `jumps` ONE-HOP layers lazily and collect ONCE per round
-        val rows = (1 to jumps).foldLeft(lab)((l0, _) => jumpPlan(l0, doubled = false))
-          .collect().toSeq
-        labRows = rows
-        lab = spark.createDataFrame(java.util.Arrays.asList(rows: _*), lab.schema)
-      } else {
-        // fixpoint: iterate until no label moves. With the in-plan
-        // pointer doubling a path-shaped component needs O(log
-        // diameter) collected steps; the n−1 cap is a safety bound,
-        // not the expected depth. Labels only ever decrease and the
-        // fixpoint (min reachable label) is unchanged by doubling.
-        var it = 0L
-        var changed = true
-        while (changed && it < math.max(1L, n - 1L)) {
-          changed = jump()
-          it += 1
-        }
-      }
-      // contract: comp ← lab(comp) — a driver hash-map lookup of the
-      // final collected labels (string-equality plumbing, the
-      // cgRoundLoop mv.getOrElse precedent; no value computed)
-      val labMap = labRows.map(r0 => r0.getString(0) -> r0.getString(1)).toMap
-      compRows = compRows.map { r0 =>
-        val c = r0.getString(1)
-        org.apache.spark.sql.Row(r0.getString(0), labMap.getOrElse(c, c))
-      }
+      .where(col("dq").isNotNull && col("a") < col("b"))
+      .repartition(1)
+      .sortWithinPartitions(col("dq"), col("a"), col("b"))
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x // path compression
+      while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
     }
-    // dedup ACROSS rounds too: with `jumps` below a merged component's
-    // chain diameter, two still-distinct sub-labels of one component can
-    // re-pick the edge already joining them in a later round — the edge
-    // set must stay a set (and must match an oracle that dedups globally)
-    spark.createDataFrame(java.util.Arrays.asList(mstRows.result(): _*),
-        edgeSchema)
+    val picked = DriverLoop.collect(edges, "minSpanningTree").filter { e =>
+      val (ra, rb) = (find(e.getString(0)), find(e.getString(1)))
+      ra != rb && { parent(ra) = rb; true }
+    }
+    DriverLoop.frame(dist.sparkSession, picked.toSeq, edges.schema)
       .select(col("a").as("key_a"), col("b").as("key_b"),
         (col("dq").cast("double") / lit(1e6)).as("dist"))
-      .distinct()
   }
 
   /** χ²(2) 95% critical value for [[jarqueBera]] — interpolated into

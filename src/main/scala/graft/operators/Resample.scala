@@ -18,14 +18,6 @@ object Resample {
   def bucket(ts: Column, interval: String): Column =
     window(ts, interval).getField("start")
 
-  /** Mean + count per tumbling bucket — `resample(tf).mean()` / `.count()`
-    * (`build_training_matrix.py:70-82`). */
-  def resampleAgg(df: DataFrame, tsCol: String, interval: String, keys: Seq[String],
-                  valueCol: String, idCol: String): DataFrame =
-    df.withColumn("bucket", bucket(col(tsCol), interval))
-      .groupBy((keys :+ "bucket").map(col): _*)
-      .agg(avg(col(valueCol)).as(s"${valueCol}_mean"), count(col(idCol)).as("count"))
-
   /** OHLCV bars from a tick/event stream: per (keys, bucket) —
     * open = value at min ts, close = value at max ts, high/low = max/min,
     * volume = sum. Deterministic even with duplicate timestamps via the

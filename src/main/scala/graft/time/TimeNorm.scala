@@ -36,23 +36,6 @@ object TimeNorm {
   /** Derived "YYYY-MM-DD" partition column (`time_norm.py:100-108`). */
   def dt(ts: Column): Column = date_format(ts, "yyyy-MM-dd")
 
-  def addDt(df: DataFrame, tsCol: String): DataFrame =
-    df.withColumn("dt", dt(col(tsCol)))
-
-  /** First present candidate time column → UTC timestamp renamed to dest
-    * (`time_norm.py:83-97`). */
-  def standardizeTimeColumn(df: DataFrame, candidates: Seq[String], dest: String): DataFrame = {
-    val present = candidates.filter(df.columns.contains)
-    require(present.nonEmpty, s"no time column among ${candidates.mkString(",")}")
-    val src = present.head
-    val c = df.schema(src).dataType match {
-      case org.apache.spark.sql.types.TimestampType => col(src)
-      case org.apache.spark.sql.types.StringType => to_timestamp(col(src))
-      case _ => epochToTimestamp(col(src))
-    }
-    df.withColumn(dest, c).drop(present.filter(_ != dest): _*)
-  }
-
   /** Timeframe string → seconds: "30s"/"5m"/"4h"/"1d"/"1w"
     * (`adi/app/features/jobs/backfill.py:19-33`). */
   def timeframeSeconds(tf: String): Long = {
@@ -71,10 +54,6 @@ object TimeNorm {
     * (`adi/app/features/backfill/runner.py:19-29`). */
   def floorEpoch(epochSec: Column, stepSec: Long): Column =
     epochSec.cast("long") - (epochSec.cast("long") % lit(stepSec))
-
-  /** Floor a timestamp column to a step boundary, staying a timestamp. */
-  def floorTimestamp(ts: Column, stepSec: Long): Column =
-    timestamp_seconds(floorEpoch(unix_timestamp(ts), stepSec))
 
   /** Canonical symbol form: `avax:usdt` → `AVAX-USDT`
     * (`redis_store.py:62-65`). */

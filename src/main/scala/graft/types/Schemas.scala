@@ -134,19 +134,4 @@ object Schemas {
       else Array.empty[org.apache.spark.sql.Column]
     df.select((schemaCols ++ extras).toIndexedSeq: _*)
   }
-
-  /** Strict validation: fail fast when a column exists with an
-    * un-castable/mismatched type (parity with `validate_schema(coerce=False)`,
-    * `adi/app/ingestion_service/utils.py:62-89`). */
-  def validate(df: DataFrame, schema: StructType): Unit = {
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val bad = schema.fields.flatMap { f =>
-      byName.get(f.name) match {
-        case Some(dt) if dt != f.dataType && !org.apache.spark.sql.catalyst.expressions.Cast
-          .canCast(dt, f.dataType) => Some(s"${f.name}: $dt !-> ${f.dataType}")
-        case _ => None
-      }
-    }
-    require(bad.isEmpty, s"schema validation failed: ${bad.mkString(", ")}")
-  }
 }

@@ -599,8 +599,6 @@ case class PqAssignCodes(vec: Expression, codebookExpr: Expression,
       s"codebook length ${flatBook.length} not divisible by m·ksub=${m * ksub}")
     flatBook.length / (m * ksub)
   }
-  def mPublic: Int = m
-  def ksubPublic: Int = ksub
 
   private def badDim(actual: Int): Nothing =
     throw new IllegalArgumentException(

@@ -4768,19 +4768,16 @@ class OpsSpec extends SparkSpec {
     assert(rootMsg(over).contains("BUCKETED sign tapes"), rootMsg(over))
   }
 
-  test("minSpanningTree: hand MST, chain merge within jump budget, tie-break, disconnected") {
+  test("minSpanningTree: hand MST, path chain, tie-break, disconnected") {
     import graft.operators.Relational
-    def mst(rows: Seq[(String, String, Double)], rounds: Int = 4, jumps: Int = 4) =
-      Relational.minSpanningTree(rows.toDF("key_a", "key_b", "dist"),
-          rounds = rounds, jumps = jumps)
+    def mst(rows: Seq[(String, String, Double)]) =
+      Relational.minSpanningTree(rows.toDF("key_a", "key_b", "dist"))
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
     // K4 with a unique MST: A-B(1), B-C(2), C-D(1) in; A-C(5), A-D(6), B-D(7) out
     val k4 = mst(Seq(("A", "B", 1.0), ("B", "C", 2.0), ("C", "D", 1.0),
       ("A", "C", 5.0), ("A", "D", 6.0), ("B", "D", 7.0)))
     assert(k4 == Set(("A", "B"), ("B", "C"), ("C", "D")), s"got $k4")
-    // path graph A-B-C-D-E with increasing weights: MST = the path
-    // itself; the round-1 merge chains all five components — label
-    // flood must close it within the jump budget
+    // path graph A-B-C-D-E with increasing weights: MST = the path itself
     val path = mst(Seq(("A", "B", 1.0), ("B", "C", 2.0), ("C", "D", 3.0),
       ("D", "E", 4.0)))
     assert(path == Set(("A", "B"), ("B", "C"), ("C", "D"), ("D", "E")))
@@ -4791,6 +4788,42 @@ class OpsSpec extends SparkSpec {
     // disconnected graph: one tree per component, no bridge invented
     val dis = mst(Seq(("A", "B", 1.0), ("C", "D", 2.0)))
     assert(dis == Set(("A", "B"), ("C", "D")))
+  }
+
+  test("minSpanningTree shape: one sorted collect; random and path graphs equal a local Kruskal") {
+    import graft.operators.Relational
+    def kruskal(edges: Seq[(String, String, Long)]): Seq[(String, String, Double)] = {
+      val parent = scala.collection.mutable.Map[String, String]()
+      def find(x: String): String = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.sortBy { case (a, b, d) => (d, a, b) }.flatMap { case (a, b, d) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra == rb) None else { parent(ra) = rb; Some((a, b, d.toDouble)) }
+      }.sorted
+    }
+    def mst(edges: Seq[(String, String, Long)]) =
+      jobsOf(Relational.minSpanningTree(
+          edges.map { case (a, b, d) => (a, b, d.toDouble) }.toDF("key_a", "key_b", "dist"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq.sorted)
+    // 64 nodes: a random spanning tree keeps the graph connected, random
+    // chords add cycles; weights 1..3 force ties the (dq, a, b) order breaks
+    val rnd = new scala.util.Random(7)
+    val tree = (1 until 64).map { i => (rnd.nextInt(i), i) }
+    val chords = for { i <- 0 until 64; j <- (i + 1) until 64 if rnd.nextInt(100) < 8 } yield (i, j)
+    val random = (tree ++ chords).distinct.map { case (i, j) =>
+      val Seq(a, b) = Seq("n" + i, "n" + j).sorted
+      (a, b, (rnd.nextInt(3) + 1).toLong)
+    }.distinctBy { case (a, b, _) => (a, b) }
+    val (got, jobs) = mst(random)
+    assert(got.size == 63 && got == kruskal(random),
+      s"random graph: ${got.size} edges, diff ${got.diff(kruskal(random)).take(5)}")
+    assert(jobs <= 2, s"minSpanningTree scheduled $jobs jobs on 64 nodes")
+    // a 300-node path: one component chain 299 hops deep
+    val path = (0 until 299).map(i => (f"p$i%03d", f"p${i + 1}%03d", (i % 3 + 1).toLong))
+    val (gotPath, _) = mst(path)
+    assert(gotPath == kruskal(path) && gotPath.size == 299)
   }
 
   test("leadingEigen: 2x2 closed form, diagonal selector, degenerate zero") {

@@ -283,8 +283,8 @@ class PropertySpec extends SparkSpec {
   test("minSpanningTree ≡ reference Kruskal on random graphs (unique under the total tie order)") {
     import org.apache.spark.sql.functions.col
     // with the total (dq, a, b) edge order the MST is UNIQUE, so the
-    // distributed Borůvka result must equal a sequential Kruskal
-    // edge-for-edge — on arbitrary graphs including disconnected ones
+    // operator's result must equal a sequential Kruskal edge-for-edge —
+    // on arbitrary graphs including disconnected ones
     def kruskal(edges: Seq[(String, String, Long)]): Set[(String, String)] = {
       val parent = scala.collection.mutable.Map[String, String]()
       def find(x: String): String = {
@@ -314,19 +314,11 @@ class PropertySpec extends SparkSpec {
     samples(edgeGen, 5).filter(_.nonEmpty).foreach { edges =>
       val df = edges.map { case (a, b, d) => (a, b, d.toDouble) }
         .toDF("key_a", "key_b", "dist")
-      val got = graft.operators.Relational
-        .minSpanningTree(df, rounds = 5, jumps = 8)
+      val got = graft.operators.Relational.minSpanningTree(df)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val want = kruskal(edges.map { case (a, b, d) => (a, b, d * 1000000L) })
       assert(got == want,
-        s"Borůvka ≠ Kruskal on ${edges.size} edges:\n got $got\nwant $want")
-      // the self-budgeted default (rounds from ⌈log₂ n⌉, label
-      // propagation to fixpoint) must reach the same tree with NO
-      // caller-supplied constants to under-budget
-      val auto = graft.operators.Relational.minSpanningTree(df)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(auto == want,
-        s"auto-budgeted Borůvka ≠ Kruskal on ${edges.size} edges:\n got $auto\nwant $want")
+        s"minSpanningTree ≠ Kruskal on ${edges.size} edges:\n got $got\nwant $want")
     }
   }
 

@@ -26,7 +26,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** After each suite, what the shared session still holds: persisted
     * RDDs (including localCheckpoint blocks), storage memory in use
-    * across block managers, and streaming queries still running (a spec
+    * across block managers, execution memory still acquired on the
+    * driver's memory manager, and streaming queries still running (a spec
     * that throws before `q.stop()` leaves its query behind) — the
     * evidence for order-dependent memory failures in the single test
     * JVM. */
@@ -38,6 +39,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val maxMb = mem.map(_._1).sum / (1 << 20)
       println(s"[spark-mem] ${suiteName}: ${sc.getPersistentRDDs.size} persistent RDDs, " +
         s"storage memory $usedMb of $maxMb MB used, " +
+        f"execution memory ${org.apache.spark.sql.graft.ExecutionMemory.used / 1048576.0}%.1f MB used, " +
         s"${s.streams.active.length} active streaming queries")
     } finally super.afterAll()
 

@@ -586,17 +586,27 @@ class SystemSpec extends SparkSpec {
     val full = ohlcvRamp(30)
     val base = java.time.Instant.parse("2025-08-01T00:00:00Z").getEpochSecond
     val ticks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = Scheduler.schedule(spark, "backfill:test:BTC-USDT:1m", intervalSec = 1) { _ =>
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobId = "backfill:test:BTC-USDT:1m"
+    val q = Scheduler.schedule(spark, jobId, intervalSec = 1) { _ =>
+      started.incrementAndGet()
       Scheduler.backfillOnce(spark, store, "BTC-USDT", "1m", lookbackMinutes = 29,
         fetch = (lo, hi) => full.filter(unix_timestamp(col("timestamp")).between(lo, hi)),
         nowEpochSec = base + 29 * 60)
       ticks.incrementAndGet(); ()
     }
-    try {
+    val errors = graft.metrics.Metrics.counter("job_runs_total",
+      Map("job" -> jobId, "status" -> "error"))
+    val errorsBeforeStop = try {
       val deadline = System.currentTimeMillis() + 90000
       while (ticks.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      // stop while a third tick is in flight: its interruption is a stop
+      while (started.get() <= ticks.get() && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      errors.sum()
     } finally q.stop()
     assert(ticks.get() >= 2, s"expected >=2 scheduler ticks, got ${ticks.get()}")
+    assert(errors.sum() == errorsBeforeStop,
+      s"q.stop() counted ${errors.sum() - errorsBeforeStop} interrupted tick(s) as failed runs")
     val stored = store.rangeRead("market", "BTC-USDT", "1m",
       base, base + 29 * 60, limit = Int.MaxValue)
     assert(stored.count() >= 25) // first tick fills; second is a no-op refill
