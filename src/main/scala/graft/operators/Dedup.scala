@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.store.CommitLog
 
@@ -537,19 +538,21 @@ object Dedup {
   // docs against a standing index and append them to it.
   // ------------------------------------------------------------------
 
-  /** Read one index table (`bands`/`postings`/`sizes`), restricted to
-    * committed batches. Pre-batch-layout indexes (no `batch` partition
-    * column, no commit log) read as-is. The committed filter references
-    * the `batch` partition column only → uncommitted batch directories
-    * are pruned at the listing, never scanned. */
-  private def readIndexTable(spark: org.apache.spark.sql.SparkSession,
-                             path: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$path/$table")
-    if (!df.columns.contains("batch")) df // legacy flat layout
-    else {
-      val committed = CommitLog(spark, path).read().committed
-      df.filter(col("batch").cast("string").isin(committed: _*)).drop("batch")
-    }
+  /** The declared columns of each MinHash and containment index table,
+    * after its `id` (typed as the writer's ids). */
+  val MinhashTables = Map("bands" -> "key long, band int", "postings" -> "h long", "sizes" -> "n int")
+  val ContainmentTables = Map("postings" -> "j int, h long, n int", "sizes" -> "n int")
+
+  /** The batches `ids` (default: the committed ones) of the index at
+    * `path`, one [[CommitLog.scan]] per table of `tables`, read with its
+    * declared schema and the id type the index was written with. */
+  private def indexReader(spark: SparkSession, path: String, tables: Map[String, String],
+                          ids: Option[Seq[String]] = None): String => DataFrame = {
+    val log = CommitLog(spark, path)
+    val batches = ids.getOrElse(log.read().committed)
+    val id = log.writtenType(spark, "sizes", "id", batches).getOrElse(LongType)
+    t => log.scan(t, spark.createDataFrame(java.util.List.of[Row](), StructType(
+      StructField("id", id) +: StructType.fromDDL(tables(t)).fields)), batches)
   }
 
   /** Persist the MinHash LSH index of a corpus at `path`:
@@ -565,7 +568,7 @@ object Dedup {
     * `batch=<batchId>` subdirectories of all three tables and becomes
     * visible only when its [[CommitLog]] marker is created (one atomic
     * file-create = the commit point). Readers (see
-    * [[nearDupAgainstIndex]]) filter to committed batches, so a crash
+    * [[nearDupAgainstIndex]]) scan only committed batches, so a crash
     * between the three table writes exposes nothing, and a RETRIED batch
     * (at-least-once `foreachBatch` delivery) is a no-op skip instead of a
     * double-append — duplicated sizes/postings rows would otherwise
@@ -616,20 +619,19 @@ object Dedup {
     * create, so probe results are row-identical before and after. Safe
     * alongside a live appender; one compactor at a time. Returns the
     * number of batches consolidated (0 = nothing to do). */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Int =
+  def compactMinhashIndex(spark: SparkSession, path: String): Int =
     CommitLog(spark, path).compact(Seq("bands", "postings", "sizes")) { (cid, committed) =>
-      val inScope = col("batch").cast("string").isin(committed: _*)
+      val index = indexReader(spark, path, MinhashTables, Some(committed))
       // bands keep their layout contract: band-partitioned directories,
       // (band, key) sort within files for row-group pruning at probe time
-      spark.read.parquet(s"$path/bands").filter(inScope).drop("batch")
+      index("bands")
         .repartition(col("band"))
         .sortWithinPartitions("band", "key")
         .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands/batch=$cid")
-      spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
+      index("postings")
         .repartition(col("id"))
         .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
-      spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
+      index("sizes")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
     }
@@ -642,7 +644,7 @@ object Dedup {
     * overlap verification joins only the candidates' postings. Returns
     * `(new_id, old_id, jaccard)`. Identical hashing/banding constants to
     * the batch operator, so index+probe ≡ one-shot pairs on the union. */
-  def nearDupAgainstIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  def nearDupAgainstIndex(spark: SparkSession, path: String,
                           newDf: DataFrame, textCol: String, idCol: String,
                           shingleN: Int = 3, k: Int = 64, bands: Int = 16,
                           threshold: Double = 0.8,
@@ -662,7 +664,8 @@ object Dedup {
         posexplode(lshBandKeys(col("sig"), bands, k / bands)).as(Seq("band", "key"))),
         cache),
       Seq("band", "key"), maxBucketSize, "nearDupAgainstIndex(batch side)")
-    val idxBands = readIndexTable(spark, path, "bands")
+    val index = indexReader(spark, path, MinhashTables)
+    val idxBands = index("bands")
       .select(col("id").as("old_id"), col("band"), col("key"))
     // cached: the candidate pairs are consumed twice below (the old_id
     // prune for array reconstruction + the verification join) — without
@@ -685,14 +688,14 @@ object Dedup {
     // dropping at the inner overlap join — identical output for any
     // threshold > 0 (every declared use is 0.8).
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val idxArrs = readIndexTable(spark, path, "postings")
+    val idxArrs = index("postings")
       .select(col("id").as("old_id"), col("h"))
       .join(cands.select("old_id"), Seq("old_id"), "left_semi") // semi-join: no distinct needed
       .groupBy("old_id")
       .agg(sort_array(collect_list(col("h"))).as("_hb"))
     val newSides = newArrs.select(col("id").as("new_id"),
       col("hs").as("_ha"), col("n").as("na"))
-    val idxSizes = readIndexTable(spark, path, "sizes")
+    val idxSizes = index("sizes")
       .select(col("id").as("old_id"), col("n").as("nb"))
     cands.join(newSides, "new_id").join(idxArrs, "old_id")
       .withColumn("overlap", call_function(
@@ -752,15 +755,14 @@ object Dedup {
     * the h-clustered/h-sorted probe layout, `sizes` stays one file. Probe
     * results are row-identical before and after. Returns the number of
     * batches consolidated (0 = nothing to do). */
-  def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Int =
+  def compactContainmentIndex(spark: SparkSession, path: String): Int =
     CommitLog(spark, path).compact(Seq("postings", "sizes")) { (cid, committed) =>
-      val inScope = col("batch").cast("string").isin(committed: _*)
-      spark.read.parquet(s"$path/postings").filter(inScope).drop("batch")
+      val index = indexReader(spark, path, ContainmentTables, Some(committed))
+      index("postings")
         .repartition(col("h"))
         .sortWithinPartitions("h")
         .write.mode("overwrite").parquet(s"$path/postings/batch=$cid")
-      spark.read.parquet(s"$path/sizes").filter(inScope).drop("batch")
+      index("sizes")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/sizes/batch=$cid")
     }
@@ -787,7 +789,7 @@ object Dedup {
     * disjoint from indexed ids. Returns the [[containmentJoin]] schema
     * `(id_a, id_b, overlap, n_a, n_b, containment)`, `id_a` the
     * contained side. */
-  def containmentAgainstIndex(spark: org.apache.spark.sql.SparkSession,
+  def containmentAgainstIndex(spark: SparkSession,
                               path: String, newDf: DataFrame,
                               textCol: String, idCol: String,
                               shingleN: Int = 3, threshold: Double = 0.9,
@@ -799,7 +801,8 @@ object Dedup {
     val newPos = newArrs.select(col("id"), col("n"),
         posexplode(col("hs")).as(Seq("j0", "h"))) // hs pre-sorted at source
       .select(col("id"), (col("j0") + 1).as("j"), col("h"), col("n"))
-    val idxPos = readIndexTable(spark, path, "postings")
+    val index = indexReader(spark, path, ContainmentTables)
+    val idxPos = index("postings")
       .select(col("id"), col("j"), col("h"), col("n"))
     def capped(pos: DataFrame): DataFrame =
       if (maxPostings <= 0) pos
@@ -850,7 +853,7 @@ object Dedup {
       .groupBy("id").agg(sort_array(collect_list(col("h"))).as("hs"))
     val allArrs = newArrs.select(col("id"), col("hs")).unionByName(idxArrs)
     val allSizes = newArrs.select(col("id"), col("n"))
-      .unionByName(readIndexTable(spark, path, "sizes"))
+      .unionByName(index("sizes"))
     allCands
       .join(allArrs.select(col("id").as("id_a"), col("hs").as("_ha")), "id_a")
       .join(allArrs.select(col("id").as("id_b"), col("hs").as("_hb")), "id_b")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -78,65 +78,61 @@ object DriftMonitor {
     * `batchId` (at-least-once delivery replays skip instead of
     * double-counting); keys absent from the reference drop (nothing to
     * measure against — surface them upstream, the [[Relational.psiDrift]]
-    * contract). Returns true if written, false on a replay skip or when
-    * another writer committed the id first. */
+    * contract). Ids starting with `c` are reserved ([[CommitLog.append]]).
+    * Returns true if written, false on a replay skip or when another
+    * writer committed the id first. */
   def driftBatch(batch: DataFrame, keys: Seq[String], valueCol: String,
                  path: String, batchId: String, bins: Int = 10): Boolean = {
     require(batchId.matches(CommitLog.IdPattern) && batchId != "ref",
       s"batchId must match ${CommitLog.IdPattern} and not be 'ref', got '$batchId'")
     val spark = batch.sparkSession
     val log = CommitLog(spark, path)
-    val committed = log.read().committed
-    require(committed.contains("ref"),
+    require(log.read().committed.contains("ref"),
       s"driftBatch: no committed reference at $path — " +
         "run writeDriftReference first")
-    if (committed.contains(batchId)) return false // replay no-op
-    val bounds = spark.read.parquet(s"$path/bounds")
-    val v = col(valueCol).cast("double")
-    val bucket = Relational.equiWidthBucket(v, col("_mn"), col("_mx"), bins)
-    batch.where(v.isNotNull)
-      .join(broadcast(bounds), keys)
-      .groupBy(keys.map(col) :+ bucket.as("bin"): _*)
-      .agg(count(lit(1)).as("c_cur"))
-      // overwrite: a torn earlier attempt of THIS batch (no marker yet)
-      // is invisible to readers and safe to rewrite
-      .write.mode("overwrite").parquet(s"$path/cur/batch=$batchId")
-    log.commit(batchId)
+    log.append(batchId, Seq("cur")) { id =>
+      val bounds = spark.read.parquet(s"$path/bounds")
+      val v = col(valueCol).cast("double")
+      val bucket = Relational.equiWidthBucket(v, col("_mn"), col("_mx"), bins)
+      batch.where(v.isNotNull)
+        .join(broadcast(bounds), keys)
+        .groupBy(keys.map(col) :+ bucket.as("bin"): _*)
+        .agg(count(lit(1)).as("c_cur"))
+        .write.mode("overwrite").parquet(s"$path/cur/batch=$id")
+    }
   }
+
+  /** A `cur/batch=<id>` count table's schema: `bounds`' keys, bin, c_cur. */
+  def driftCurSchema(bounds: StructType, keys: Seq[String]): StructType =
+    StructType(keys.map(bounds(_)) ++
+      Seq(StructField("bin", LongType), StructField("c_cur", LongType)))
 
   /** PSI per key of everything streamed so far against the reference —
     * `(keys…, n_ref, n_cur, psi)`, the [[Relational.psiDrift]] output
-    * shape. Reads ONLY the committed skinny count tables (uncommitted
-    * batch directories prune at the listing via the `batch` partition
-    * column); an empty monitor (no batches yet) reports the pure
+    * shape. Reads ONLY the committed skinny count tables (one
+    * [[CommitLog.scan]]: uncommitted batch directories are never
+    * listed); an empty monitor (no batches yet) reports the pure
     * smoothing floor with `n_cur = 0`. */
   def driftPsi(spark: SparkSession, path: String, keys: Seq[String],
                bins: Int = 10): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
-    val committed = CommitLog(spark, path).read().committed
+    val log = CommitLog(spark, path)
+    val committed = log.read().committed
     require(committed.contains("ref"),
       s"driftPsi: no committed reference at $path")
     val bounds = spark.read.parquet(s"$path/bounds")
     val ref = spark.read.parquet(s"$path/ref")
-    val batchIds = committed.filterNot(_ == "ref")
     val grid = bounds.select(keys.map(col) :+
       explode(sequence(lit(0L), lit(bins - 1L))).as("bin"): _*)
-    val withRef = grid.join(ref, keys :+ "bin", "left")
-    val cells =
-      if (batchIds.isEmpty)
-        withRef.select(keys.map(col) :+ col("bin") :+
-          coalesce(col("c_ref"), lit(0L)).as("c_ref") :+
-          lit(0L).as("c_cur"): _*)
-      else {
-        val cur = spark.read.parquet(s"$path/cur")
-          .filter(col("batch").cast("string").isin(batchIds: _*))
-          .groupBy(keys.map(col) :+ col("bin"): _*)
-          .agg(sum(col("c_cur")).as("c_cur"))
-        withRef.join(cur, keys :+ "bin", "left")
-          .select(keys.map(col) :+ col("bin") :+
-            coalesce(col("c_ref"), lit(0L)).as("c_ref") :+
-            coalesce(col("c_cur"), lit(0L)).as("c_cur"): _*)
-      }
+    val cur = log.scan("cur", spark.createDataFrame(java.util.List.of[Row](),
+        driftCurSchema(bounds.schema, keys)), committed.filterNot(_ == "ref"))
+      .groupBy(keys.map(col) :+ col("bin"): _*)
+      .agg(sum(col("c_cur")).as("c_cur"))
+    val cells = grid.join(ref, keys :+ "bin", "left")
+      .join(cur, keys :+ "bin", "left")
+      .select(keys.map(col) :+ col("bin") :+
+        coalesce(col("c_ref"), lit(0L)).as("c_ref") :+
+        coalesce(col("c_cur"), lit(0L)).as("c_cur"): _*)
     Relational.psiFromCells(cells, keys, bins)
   }
 
@@ -280,29 +276,21 @@ object DriftMonitor {
                  valueCol: String, tiebreakCol: String, target: Double,
                  slack: Double, threshold: Double,
                  scale: Double = 1e6): DataFrame =
-    CommitLog(spark, stateDir).fold(batchId) { v =>
-      val empty = emptyCusumCarry(spark, keys)
-      val carry = v.fold(empty)(v =>
-        spark.read.schema(empty.schema).parquet(s"$stateDir/v=$v/carry"))
-      val (scored, carry2) = cusumFold(carry, batch, keys, tsCol, valueCol,
-        tiebreakCol, target, slack, threshold, scale)
+    CommitLog(spark, stateDir).fold(batchId) { prev =>
+      val (scored, carry2) = cusumFold(prev("carry", emptyCusumCarry(spark, keys)),
+        batch, keys, tsCol, valueCol, tiebreakCol, target, slack, threshold, scale)
       scored.write.mode("overwrite").parquet(s"$stateDir/scores/batch=$batchId")
       carry2.write.mode("overwrite").parquet(s"$stateDir/v=$batchId/carry")
-    }(cusumScores(spark, stateDir, cusumScoresSchema(keys, tsCol, tiebreakCol), _))
+    }(done => CommitLog(spark, stateDir).scan("scores", spark.createDataFrame(
+      java.util.List.of[Row](), cusumScoresSchema(keys, tsCol, tiebreakCol)),
+      done.map(_.toString)))
 
   /** Every committed batch's CUSUM scores — the union of the committed
     * `scores/batch=<id>` logs, read with [[cusumScoresSchema]] (the
     * `keys`, `tsCol` and `tiebreakCol` the batches were folded with).
-    * Row shape = [[Relational.cusumDetect]]'s. */
+    * Row shape = [[Relational.cusumDetect]]'s; empty before the first commit. */
   def cusumScores(spark: SparkSession, stateDir: String, keys: Seq[String],
                   tsCol: String, tiebreakCol: String): DataFrame =
-    cusumScores(spark, stateDir, cusumScoresSchema(keys, tsCol, tiebreakCol),
-      CommitLog(spark, stateDir).read().versions)
-
-  private def cusumScores(spark: SparkSession, stateDir: String,
-                          schema: StructType, done: Seq[Long]): DataFrame = {
-    require(done.nonEmpty, s"cusumScores: nothing committed at $stateDir")
-    spark.read.schema(schema).parquet(
-      CommitLog(spark, stateDir).batchDirs("scores", done.map(_.toString)): _*)
-  }
+    CommitLog(spark, stateDir).scan("scores", spark.createDataFrame(
+      java.util.List.of[Row](), cusumScoresSchema(keys, tsCol, tiebreakCol)))
 }

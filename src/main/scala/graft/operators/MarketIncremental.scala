@@ -325,24 +325,8 @@ object MarketIncremental {
   // no-op, a torn write without its marker is invisible to readers).
   // ------------------------------------------------------------------
 
-  private def committed(spark: SparkSession, stateDir: String): Seq[Long] =
-    CommitLog(spark, stateDir).read().versions
-
-  /** Frontier part `name` of committed version `v`, read with the
-    * schema its `empty` frame declares; `empty` before the first commit. */
-  private def state(spark: SparkSession, stateDir: String, v: Option[Long],
-                    name: String, empty: DataFrame): DataFrame =
-    v.fold(empty)(v => spark.read.schema(empty.schema).parquet(s"$stateDir/v=$v/$name"))
-
-  /** Committed slices of an append-only log (`bars`/`labels`), empty
-    * frame when nothing committed yet. One multi-path scan (not a
-    * per-batch union — a long-running stream accumulates thousands of
-    * batch dirs and a thousand-way union plan would dwarf the data). */
-  private def readLog(spark: SparkSession, stateDir: String, log: String,
-                      empty: DataFrame, done: Seq[Long]): DataFrame = {
-    val dirs = CommitLog(spark, stateDir).batchDirs(log, done.map(_.toString))
-    if (dirs.isEmpty) empty else spark.read.schema(empty.schema).parquet(dirs: _*)
-  }
+  // A log is one multi-path `CommitLog.scan`, never a per-batch union: a
+  // long stream's thousand-way union plan would dwarf the data.
 
   private def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
@@ -351,9 +335,10 @@ object MarketIncremental {
     * column-identical to [[Resample.volumeBars]] over the history
     * (timestamps as epoch-µs). */
   def barsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame = {
-    val done = committed(spark, stateDir)
-    readLog(spark, stateDir, "bars", emptyBars(spark, cfg), done)
-      .unionByName(state(spark, stateDir, done.lastOption, "open_bars", emptyBars(spark, cfg)))
+    val log = CommitLog(spark, stateDir)
+    val done = log.read().versions
+    log.scan("bars", emptyBars(spark, cfg), done.map(_.toString))
+      .unionByName(log.state(done.lastOption, "open_bars", emptyBars(spark, cfg)))
       .drop("open_tb", "close_tb") // internal election state, not a bar column
   }
 
@@ -361,13 +346,13 @@ object MarketIncremental {
     * through the label rule — column-identical to
     * [[Labeling.tripleBarrier]] over the history. */
   def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg): DataFrame =
-    labelsView(spark, stateDir, cfg, committed(spark, stateDir))
+    labelsView(spark, stateDir, cfg, CommitLog(spark, stateDir).read().versions)
 
   private def labelsView(spark: SparkSession, stateDir: String, cfg: Cfg,
                          done: Seq[Long]): DataFrame = {
-    val empty = emptyEntries(spark, cfg)
-    labels(readLog(spark, stateDir, "labels", empty, done)
-      .unionByName(state(spark, stateDir, done.lastOption, "open_entries", empty)), cfg)
+    val (log, empty) = (CommitLog(spark, stateDir), emptyEntries(spark, cfg))
+    labels(log.scan("labels", empty, done.map(_.toString))
+      .unionByName(log.state(done.lastOption, "open_entries", empty)), cfg)
   }
 
   /** The foreachBatch body: fold `batch` into the state at `stateDir`
@@ -386,12 +371,12 @@ object MarketIncremental {
     * discipline, separate stateDir. */
   def marketTickBatch(spark: SparkSession, stateDir: String, batchId: Long,
                       batch: DataFrame, cfg: Cfg): DataFrame =
-    CommitLog(spark, stateDir).fold(batchId) { v =>
+    CommitLog(spark, stateDir).fold(batchId) { prev =>
       val (closed, open1, carry1) = volumeBarsFold(
-        state(spark, stateDir, v, "open_bars", emptyBars(spark, cfg)),
-        state(spark, stateDir, v, "carry", emptyCarry(spark, cfg)), batch, cfg)
+        prev("open_bars", emptyBars(spark, cfg)),
+        prev("carry", emptyCarry(spark, cfg)), batch, cfg)
       val (finals, entries1) = tripleBarrierFold(
-        state(spark, stateDir, v, "open_entries", emptyEntries(spark, cfg)),
+        prev("open_entries", emptyEntries(spark, cfg)),
         batch, carry1, cfg)
       write(closed, s"$stateDir/bars/batch=$batchId")
       write(finals, s"$stateDir/labels/batch=$batchId")
@@ -692,14 +677,16 @@ object MarketIncremental {
     * [[graft.features.OrderbookFeatures.bookSnapshots]] over the full
     * delta history. */
   def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg): DataFrame =
-    snapshotsView(spark, stateDir, cfg, committed(spark, stateDir))
+    snapshotsView(spark, stateDir, cfg, CommitLog(spark, stateDir).read().versions)
 
   private def snapshotsView(spark: SparkSession, stateDir: String, cfg: BookCfg,
-                            done: Seq[Long]): DataFrame =
-    readLog(spark, stateDir, "snapshots", emptySnapshots(spark, cfg), done)
+                            done: Seq[Long]): DataFrame = {
+    val log = CommitLog(spark, stateDir)
+    log.scan("snapshots", emptySnapshots(spark, cfg), done.map(_.toString))
       .unionByName(provisionalSnapshots(
-        state(spark, stateDir, done.lastOption, "book", emptyBook(spark, cfg)),
-        state(spark, stateDir, done.lastOption, "cursor", emptyBookCursor(spark, cfg)), cfg))
+        log.state(done.lastOption, "book", emptyBook(spark, cfg)),
+        log.state(done.lastOption, "cursor", emptyBookCursor(spark, cfg)), cfg))
+  }
 
   /** The foreachBatch body for a streamed L2 delta feed: fold `batch`
     * into the book state at `stateDir` under `batchId`
@@ -709,10 +696,10 @@ object MarketIncremental {
     * the log only grows. Returns the post-fold snapshot view. */
   def bookSnapshotBatch(spark: SparkSession, stateDir: String, batchId: Long,
                         batch: DataFrame, cfg: BookCfg): DataFrame =
-    CommitLog(spark, stateDir).fold(batchId) { v =>
+    CommitLog(spark, stateDir).fold(batchId) { prev =>
       val (snaps, book1, cursor1) = bookSnapshotFold(
-        state(spark, stateDir, v, "book", emptyBook(spark, cfg)),
-        state(spark, stateDir, v, "cursor", emptyBookCursor(spark, cfg)), batch, cfg)
+        prev("book", emptyBook(spark, cfg)),
+        prev("cursor", emptyBookCursor(spark, cfg)), batch, cfg)
       write(snaps, s"$stateDir/snapshots/batch=$batchId")
       write(book1, s"$stateDir/v=$batchId/book")
       write(cursor1, s"$stateDir/v=$batchId/cursor")
@@ -999,7 +986,7 @@ object MarketIncremental {
     * [[graft.features.MarketFeatures.build]] over the full history
     * (modulo the key/column order; every emitted row is final). */
   def featuresView(spark: SparkSession, stateDir: String, cfg: FeatCfg): DataFrame =
-    readLog(spark, stateDir, "features", emptyFeatures(spark, cfg), committed(spark, stateDir))
+    CommitLog(spark, stateDir).scan("features", emptyFeatures(spark, cfg))
 
   /** The foreachBatch body for a streamed OHLCV feed: fold `batch` into
     * the feature state at `stateDir` under `batchId` (replay-idempotent
@@ -1010,12 +997,13 @@ object MarketIncremental {
   def marketFeaturesBatch(spark: SparkSession, stateDir: String, batchId: Long,
                           batch: DataFrame, cfg: FeatCfg,
                           dropnaFinal: Boolean = true): DataFrame =
-    CommitLog(spark, stateDir).fold(batchId) { v =>
+    CommitLog(spark, stateDir).fold(batchId) { prev =>
       val (feat, carry1) = marketFeaturesFold(
-        state(spark, stateDir, v, "carry", emptyFeatCarry(spark, cfg)), batch, cfg, dropnaFinal)
+        prev("carry", emptyFeatCarry(spark, cfg)), batch, cfg, dropnaFinal)
       write(feat, s"$stateDir/features/batch=$batchId")
       write(carry1, s"$stateDir/v=$batchId/carry")
-    }(readLog(spark, stateDir, "features", emptyFeatures(spark, cfg), _))
+    }(done => CommitLog(spark, stateDir).scan("features", emptyFeatures(spark, cfg),
+      done.map(_.toString)))
 
   // ------------------------------------------------------------------
   // Streaming bet sizing (AFML ch. 10 §10.4): the average-active-bet
@@ -1142,7 +1130,7 @@ object MarketIncremental {
   /** All bet-size rows so far — column-identical to
     * [[graft.operators.Backtest.betSizing]] over the full bet history. */
   def sizesView(spark: SparkSession, stateDir: String, cfg: BetCfg): DataFrame =
-    readLog(spark, stateDir, "sizes", emptySizes(spark, cfg), committed(spark, stateDir))
+    CommitLog(spark, stateDir).scan("sizes", emptySizes(spark, cfg))
 
   /** The foreachBatch body for a streamed bet feed: fold `batch` into
     * the sizing state at `stateDir` under `batchId` (replay-idempotent
@@ -1151,10 +1139,11 @@ object MarketIncremental {
     * two carry versions survive for rollback, the log only grows. */
   def betSizingBatch(spark: SparkSession, stateDir: String, batchId: Long,
                      batch: DataFrame, cfg: BetCfg): DataFrame =
-    CommitLog(spark, stateDir).fold(batchId) { v =>
+    CommitLog(spark, stateDir).fold(batchId) { prev =>
       val (sizes, carry1) = betSizingFold(
-        state(spark, stateDir, v, "carry", emptyBetCarry(spark, cfg)), batch, cfg)
+        prev("carry", emptyBetCarry(spark, cfg)), batch, cfg)
       write(sizes, s"$stateDir/sizes/batch=$batchId")
       write(carry1, s"$stateDir/v=$batchId/carry")
-    }(readLog(spark, stateDir, "sizes", emptySizes(spark, cfg), _))
+    }(done => CommitLog(spark, stateDir).scan("sizes", emptySizes(spark, cfg),
+      done.map(_.toString)))
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.store.CommitLog
 
@@ -743,11 +744,11 @@ object Similarity {
 
   /** Build and persist the IVF-PQ index under `path`:
     *   - `vectors/batch=<id>/cell=<c>` — one table `(vec_id, codes, v)`
-    *     PARTITIONED BY append batch and coarse cell, so a probe's
-    *     `batch IN (committed) AND cell IN (…)` prunes directories; the
-    *     ADC scan reads only `(vec_id, codes)` and the re-rank fetch
-    *     only shortlist rows' `v` (parquet column pruning does both).
-    *     The build is `batch=0`; [[appendToIvfPqIndex]] adds more.
+    *     PARTITIONED BY append batch and coarse cell: a probe scans the
+    *     committed batch dirs ([[CommitLog.scan]]), `cell IN (…)` prunes
+    *     below them; the ADC scan reads only `(vec_id, codes)` and the
+    *     re-rank fetch only shortlist rows' `v` (parquet column pruning
+    *     does both). The build is `batch=0`; [[appendToIvfPqIndex]] adds more.
     *   - `centroids/` — `(cell, centroid)`, nCells rows (driver-scale).
     *   - `meta/` — one row `(m, ksub, book)`, the PQ codebook.
     *
@@ -832,6 +833,35 @@ object Similarity {
         element_at(centsLit, col("cell") + 1)))
   }
 
+  /** The declared columns of the IVF-PQ `vectors` table after its
+    * `vec_id` (typed as the writer's ids); `cell` partitions each batch. */
+  val IvfPqVectorColumns = "v array<double>, codes array<int>, cell int"
+
+  /** An opened IVF-PQ index — the one reader of its `meta` (the PQ
+    * codebook), its `centroids` (in cell order) and its `vectors` (the
+    * batches `ids`, default the committed ones) as one [[CommitLog.scan]]
+    * read with [[IvfPqVectorColumns]]. Each is read on first use. */
+  private final class IvfPq(spark: SparkSession, path: String,
+                            ids: Option[Seq[String]] = None) {
+    lazy val (m, ksub, book, residual) = {
+      val meta = spark.read.parquet(s"$path/meta").head()
+      (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"),
+        meta.getAs[scala.collection.Seq[Double]]("book").toArray, meta.getAs[Boolean]("residual"))
+    }
+    lazy val cents: IndexedSeq[Seq[Double]] = spark.read.parquet(s"$path/centroids")
+      .orderBy("cell").collect()
+      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq.toSeq)
+      .toIndexedSeq
+    lazy val vectors: DataFrame = {
+      val log = CommitLog(spark, path)
+      val batches = ids.getOrElse(log.read().committed)
+      require(batches.nonEmpty, s"no committed batches at $path")
+      val id = log.writtenType(spark, "vectors", "vec_id", batches).getOrElse(LongType)
+      log.scan("vectors", spark.createDataFrame(java.util.List.of[Row](), StructType(
+        StructField("vec_id", id) +: StructType.fromDDL(IvfPqVectorColumns).fields)), batches)
+    }
+  }
+
   /** Compact the batch-keyed IVF-PQ index: consolidate every committed
     * batch's `vectors/batch=<id>` directory into ONE new batch — the
     * [[Dedup.compactMinhashIndex]] lifecycle applied to the ANN index.
@@ -850,8 +880,7 @@ object Similarity {
     * nothing to do). */
   def compactIvfPqIndex(spark: SparkSession, path: String): Int =
     CommitLog(spark, path).compact(Seq("vectors")) { (cid, committed) =>
-      spark.read.parquet(s"$path/vectors")
-        .where(col("batch").cast("string").isin(committed: _*)).drop("batch")
+      new IvfPq(spark, path, Some(committed)).vectors
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/vectors/batch=$cid")
@@ -879,15 +908,8 @@ object Similarity {
     require(log.read().markers.nonEmpty,
       s"no committed IVF-PQ index at $indexPath — writeIvfPqIndex first")
     log.append(batchId, Seq("vectors")) { bid =>
-      val meta = spark.read.parquet(s"$indexPath/meta").head()
-      val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
-      val book = meta.getAs[scala.collection.Seq[Double]]("book").toArray
-      val residual = meta.getAs[Boolean]("residual")
-      val cents = spark.read.parquet(s"$indexPath/centroids")
-        .orderBy("cell").collect()
-        .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq.toSeq)
-        .toIndexedSeq
-      ivfEncode(df, vecCol, idCol, cents, book, m, ksub, residual)
+      val ix = new IvfPq(spark, indexPath)
+      ivfEncode(df, vecCol, idCol, ix.cents, ix.book, ix.m, ix.ksub, ix.residual)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexPath/vectors/batch=$bid")
@@ -897,10 +919,11 @@ object Similarity {
   /** Probe a persisted IVF-PQ index: rank the nCells centroids by cosine
     * to the query (driver-side, metadata-scale — ties break to the
     * lowest cell), then over ONLY the `nProbe` nearest cells' partitions
-    * run the ADC scan (m table lookups per row, codes column only) to a
-    * `rerank`-sized shortlist, and exact-L2²-re-rank just those rows'
-    * true vectors (broadcast semi-join inside the same pruned
-    * partitions). No wide shuffle anywhere: both rankings are top-k
+    * of the committed batch dirs (one [[CommitLog.scan]]; torn appends
+    * are never listed) run the ADC scan (m table lookups per row, codes
+    * column only) to a `rerank`-sized shortlist, and exact-L2²-re-rank
+    * just those rows' true vectors (broadcast semi-join inside the same
+    * pruned partitions). No wide shuffle anywhere: both rankings are top-k
     * heaps, the shortlist join is a broadcast. `nProbe = nCells`
     * degrades gracefully to [[pqSearch]]-over-everything; recall grows
     * with both knobs. Returns `(vec_id, dist)` (exact L2²), nearest
@@ -911,26 +934,20 @@ object Similarity {
     require(k > 0, s"need k > 0, got $k")
     require(nProbe > 0, s"need nProbe > 0, got $nProbe")
     require(rerank >= k, s"rerank must be >= k, got $rerank (k=$k)")
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
-    val book = meta.getAs[scala.collection.Seq[Double]]("book").toArray
-    val residual = meta.getAs[Boolean]("residual")
+    val ix = new IvfPq(spark, indexPath)
+    val (m, ksub, book, cents) = (ix.m, ix.ksub, ix.book, ix.cents)
     // centroid ranking replicates the oracle's strict left folds exactly
     // (sum starts at 0.0 — IEEE-identical to DuckDB's list_reduce)
     val qSq = queryVec.map(x => x * x).sum
     val qNorm = math.sqrt(qSq)
-    val cents = spark.read.parquet(s"$indexPath/centroids").collect()
-      .map(r => r.getAs[Int]("cell") ->
-        r.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq)
-      .toMap
     // dim check up front: the residual path's zips would otherwise
     // silently truncate a wrong-dimension query and return wrong
     // neighbors (the raw path fails loudly in adcTable)
-    val dim = cents.head._2.length
+    val dim = cents.head.length
     require(queryVec.length == dim,
       s"query dimension ${queryVec.length} != index dimension $dim")
-    val probed = cents.toArray
-      .map { case (cell, c) =>
+    val probed = cents.zipWithIndex
+      .map { case (c, cell) =>
         val d = c.iterator.zip(queryVec.iterator).map { case (a, b) => a * b }.sum
         val cos = d / (math.sqrt(c.map(x => x * x).sum) * qNorm)
         (cell, cos)
@@ -938,16 +955,10 @@ object Similarity {
       .sortBy { case (cell, cos) => (-cos, cell) }
       .take(nProbe).map(_._1)
     GraftFunctions.register(spark)
-    // `batch IN (committed)` and `cell IN (…)` reference only partition
-    // columns → directory pruning: torn appends (no commit marker) and
-    // unprobed cells are never opened
-    val committed = CommitLog(spark, indexPath).read().committed
-    require(committed.nonEmpty, s"no committed batches at $indexPath")
-    val committedPred =
-      col("batch").cast("string").isin(committed.toIndexedSeq: _*)
-    val part = spark.read.parquet(s"$indexPath/vectors")
-      .where(committedPred && col("cell").isin(probed.toIndexedSeq: _*) &&
-        col("vec_id") =!= queryId)
+    // the scan lists only committed batch dirs (torn appends are never
+    // opened) and `cell IN (…)` prunes the unprobed cell dirs below them
+    val probe = ix.vectors.where(col("vec_id") =!= queryId)
+    val part = probe.where(col("cell").isin(probed: _*))
     // ADC: residual indexes get one table per probed cell (the query's
     // residual against THAT cell) — nProbe driver-side tables, one
     // pruned scan each, unioned into the shortlist heap; raw indexes
@@ -956,14 +967,12 @@ object Similarity {
       call_function(GraftFunctions.PqAdcName, col("codes"), tbl, lit(ksub))
     }
     val scored =
-      if (!residual)
+      if (!ix.residual)
         part.select(col("vec_id"),
           adcOf(typedlit(adcTable(book, m, ksub, queryVec).toSeq)).as("adc"))
       else probed.map { cell =>
         val qRes = queryVec.zip(cents(cell)).map { case (a, b) => a - b }
-        spark.read.parquet(s"$indexPath/vectors")
-          .where(committedPred && col("cell") === cell &&
-            col("vec_id") =!= queryId)
+        probe.where(col("cell") === cell)
           .select(col("vec_id"),
             adcOf(typedlit(adcTable(book, m, ksub, qRes).toSeq)).as("adc"))
       }.reduce(_ unionByName _)
@@ -985,9 +994,9 @@ object Similarity {
     *   1. each query ranks the nCells centroids (broadcast
     *      centroid table, codegen cosine) and keeps its `nProbe`
     *      nearest cells — a skinny `(query_id, cell)` frame;
-    *   2. the vectors table, pruned to committed batches AND the union
-    *      of probed cells (partition-column `isin` — directory pruning),
-    *      joins the broadcast query-cell frame on `cell`;
+    *   2. the committed batch dirs' vectors, pruned to the union of
+    *      probed cells (partition-column `isin` — directory pruning),
+    *      join the broadcast query-cell frame on `cell`;
     *   3. the approximate distance is `‖qv − decode(codes)‖²` via the
     *      codegen [[org.apache.spark.sql.graft.PqDecode]] — bit-for-the-
     *      same-math as ADC (the subspaces partition the dims), computed
@@ -1008,14 +1017,8 @@ object Similarity {
     require(k > 0, s"need k > 0, got $k")
     require(nProbe > 0, s"need nProbe > 0, got $nProbe")
     require(rerank >= k, s"rerank must be >= k, got $rerank (k=$k)")
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (m, ksub) = (meta.getAs[Int]("m"), meta.getAs[Int]("ksub"))
-    val book = meta.getAs[scala.collection.Seq[Double]]("book").toArray
-    val residual = meta.getAs[Boolean]("residual")
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq.toSeq)
-      .toIndexedSeq
+    val ix = new IvfPq(spark, indexPath)
+    val (ksub, book, cents) = (ix.ksub, ix.book, ix.cents)
     GraftFunctions.register(spark)
     val centsLit = typedlit(cents.map(_.toIndexedSeq))
     val dim = cents.head.length
@@ -1049,15 +1052,11 @@ object Similarity {
       .select("query_id", "cell")
     val probedCells = qcells.select("cell").distinct()
       .collect().map(_.getInt(0)).toIndexedSeq
-    val committed = CommitLog(spark, indexPath).read().committed
-    require(committed.nonEmpty, s"no committed batches at $indexPath")
-    val part = spark.read.parquet(s"$indexPath/vectors")
-      .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*) &&
-        col("cell").isin(probedCells: _*))
+    val part = ix.vectors.where(col("cell").isin(probedCells: _*))
     // 2.+3. candidates = codes rows × the queries probing their cell;
     // approximate distance from the decoded (residual-shifted) vector
     val recon =
-      if (!residual)
+      if (!ix.residual)
         call_function(GraftFunctions.PqDecodeName, col("codes"),
           typedlit(book.toSeq), lit(ksub))
       else
@@ -1106,11 +1105,7 @@ object Similarity {
                        k: Int = 10, nProbe: Int = 2,
                        rerank: Int = 100): Double = {
     require(nQueries > 0, s"need nQueries > 0, got $nQueries")
-    val committed = CommitLog(spark, path).read().committed
-    require(committed.nonEmpty, s"no committed batches at $path")
-    val vecs = spark.read.parquet(s"$path/vectors")
-      .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
-      .select(col("vec_id"), col("v"))
+    val vecs = new IvfPq(spark, path).vectors.select(col("vec_id"), col("v"))
     val q = vecs.withColumn("_h", TextAnalysis.tokenHash48(
         concat(col("vec_id").cast("string"), lit(":recallprobe"))))
       .orderBy(col("_h"), col("vec_id")).limit(nQueries)
@@ -1152,18 +1147,13 @@ object Similarity {
       s"minRecall must be in [0,1], got $minRecall")
     val r = ivfPqRecallProbe(spark, path, nQueries, k, nProbe, rerank)
     if (r >= minRecall) return (r, false)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val cellsNow = spark.read.parquet(s"$path/centroids").count().toInt
-    val committed = CommitLog(spark, path).read().committed
-    val vecs = spark.read.parquet(s"$path/vectors")
-      .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
-      .select(col("vec_id"), col("v"))
+    val ix = new IvfPq(spark, path)
+    val vecs = ix.vectors.select(col("vec_id"), col("v"))
       .localCheckpoint(true) // MUST be eager: writeIvfPqIndex deletes these files
     writeIvfPqIndex(vecs, "v", "vec_id", path,
-      nCells = if (nCells > 0) nCells else cellsNow,
-      m = meta.getAs[Int]("m"), ksub = meta.getAs[Int]("ksub"),
-      iters = iters, trainFraction = trainFraction,
-      residual = meta.getAs[Boolean]("residual"))
+      nCells = if (nCells > 0) nCells else ix.cents.size,
+      m = ix.m, ksub = ix.ksub, iters = iters, trainFraction = trainFraction,
+      residual = ix.residual)
     (r, true)
   }
 
@@ -1188,10 +1178,7 @@ object Similarity {
                                   rerank: Int = 50): DataFrame = {
     val knn = knnIvfPqBatch(spark, indexPath, batch, idCol, vecCol,
       k = k, nProbe = nProbe, rerank = rerank, excludeSelf = true)
-    val committed = CommitLog(spark, indexPath).read().committed
-    val idxVecs = spark.read.parquet(s"$indexPath/vectors")
-      .where(col("batch").cast("string").isin(committed.toIndexedSeq: _*))
-      .select(col("vec_id"), col("v"))
+    val idxVecs = new IvfPq(spark, indexPath).vectors.select(col("vec_id"), col("v"))
     val q = batch.select(col(idCol).as("query_id"),
       toDoubleVec(col(vecCol)).as("qv"))
     // broadcast the (batch × k)-bounded knn side: the index scan must

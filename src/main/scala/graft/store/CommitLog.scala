@@ -1,11 +1,12 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.DataType
 
-/** The one commit point of every stateful path: the fold state dirs of
-  * [[graft.operators.MarketIncremental]] and the CUSUM fold, the drift
-  * reference, the MinHash/containment indexes and the IVF-PQ index.
+/** The one commit and read point of every stateful path: the fold state
+  * dirs of [[graft.operators.MarketIncremental]] and the CUSUM fold, the
+  * drift reference, the MinHash/containment indexes and the IVF-PQ index.
   * Modelled on the commit log of Structured Streaming and Spark's
   * `HDFSMetadataLog`.
   *
@@ -69,13 +70,40 @@ final class CommitLog(val fs: FileSystem, val root: String) {
 
   /** `root/<table>/batch=<id>` for each of `ids` present on disk, in
     * `ids` order — one listing of the table, whatever the batch count. */
-  def batchDirs(table: String, ids: Seq[String]): Seq[String] = {
+  private def batchDirs(table: String, ids: Seq[String]): Seq[String] = {
     val t = new Path(s"$root/$table")
     val present =
       if (!fs.exists(t)) Set.empty[String]
       else fs.listStatus(t).map(_.getPath.getName.stripPrefix("batch=")).toSet
     ids.filter(present).map(id => s"$root/$table/batch=$id")
   }
+
+  /** The batches `ids` of `table` (default: the committed ones) as one
+    * scan with `empty`'s schema; `empty` when none is on disk. Their dirs
+    * are its roots, so a torn or superseded dir is never listed; the
+    * table is its base path, so nested partitions (`band=`, `cell=`) of
+    * every batch resolve alike and stay prunable. */
+  def scan(table: String, empty: DataFrame, ids: Seq[String] = read().committed): DataFrame = {
+    val dirs = batchDirs(table, ids)
+    if (dirs.isEmpty) empty else batches(empty.sparkSession.read.schema(empty.schema), table, dirs)
+  }
+
+  private def batches(reader: DataFrameReader, table: String, dirs: Seq[String]): DataFrame =
+    reader.option("basePath", s"$root/$table").parquet(dirs: _*).drop("batch")
+
+  /** `column`'s type as written in the batches `ids` of `table` (one
+    * schema read; `None` when none is on disk): a declared id column
+    * takes the writer's type. */
+  def writtenType(spark: SparkSession, table: String, column: String,
+                  ids: Seq[String]): Option[DataType] =
+    Some(batchDirs(table, ids)).filter(_.nonEmpty)
+      .map(batches(spark.read, table, _).schema(column).dataType)
+
+  /** Part `part` of fold state version `v` (`v=<v>/<part>`), read with
+    * the schema `empty` declares; `empty` before the first commit. */
+  def state(v: Option[Long], part: String, empty: DataFrame): DataFrame =
+    v.fold(empty)(v =>
+      empty.sparkSession.read.schema(empty.schema).parquet(s"$root/v=$v/$part"))
 
   private def deleteBatch(tables: Seq[String], id: String): Unit =
     tables.foreach(t => fs.delete(new Path(s"$root/$t/batch=$id"), true))
@@ -92,7 +120,7 @@ final class CommitLog(val fs: FileSystem, val root: String) {
     require(!id.startsWith("c"),
       s"batch ids starting with 'c' are reserved for the compactor: $id")
     if (log.done(id)) {
-      System.err.println(s"[commitlog] batch $id already committed at $root — skipping (replay)")
+      graft.metrics.Metrics.counter("commitlog_replay_skips_total").increment()
       return false
     }
     deleteBatch(tables, id)
@@ -141,17 +169,17 @@ final class CommitLog(val fs: FileSystem, val root: String) {
   }
 
   /** The lifecycle of a versioned fold body, for batch `batchId`: replay
-    * check, `write(latest committed version)` of the fold's log slices
-    * and its `v=<batchId>/` state, commit, keep-two `v=<id>` GC, then
-    * `view(committed versions)`. A replayed id, or one another writer
-    * commits first, returns the committed view unchanged. Writers of one
-    * root serialize, so a second writer of the same id never overwrites
-    * state the first has committed. */
-  def fold(batchId: Long)(write: Option[Long] => Unit)(view: Seq[Long] => DataFrame)
-      : DataFrame = lock.synchronized {
+    * check, `write(prev)` of the fold's log slices and its `v=<batchId>/`
+    * state (`prev` reads the latest committed version's [[state]]),
+    * commit, keep-two `v=<id>` GC, then `view(committed versions)`. A
+    * replayed id, or one another writer commits first, returns the
+    * committed view unchanged. Writers of one root serialize, so a second
+    * writer of the same id never overwrites state the first committed. */
+  def fold(batchId: Long)(write: ((String, DataFrame) => DataFrame) => Unit)
+      (view: Seq[Long] => DataFrame): DataFrame = lock.synchronized {
     val done = read().versions
     if (done.contains(batchId)) return view(done)
-    write(done.lastOption)
+    write(state(done.lastOption, _, _))
     if (!commit(batchId.toString)) return view(read().versions)
     // the committed predecessor survives for rollback; logs are permanent
     done.dropRight(1).foreach(v => fs.delete(new Path(s"$root/v=$v"), true))
@@ -173,8 +201,10 @@ object CommitLog {
   /** One read of the log: every marker with the ids its body supersedes. */
   final case class Snapshot(markers: Map[String, Seq[String]]) {
     val superseded: Set[String] = markers.values.flatten.toSet
-    /** Visible ids: markers minus the ids they transitively supersede. */
-    val committed: Seq[String] = markers.keys.filterNot(superseded).toSeq.sorted
+    /** Visible ids: markers minus the ids they transitively supersede,
+      * numeric ids first in numeric order. */
+    val committed: Seq[String] = markers.keys.filterNot(superseded).toSeq
+      .sortBy(id => (id.toLongOption.getOrElse(Long.MaxValue), id))
     /** Versioned fold state: committed ids, numerically ordered. */
     def versions: Seq[Long] = committed.map(_.toLong).sorted
     /** A replay: committed, or committed then consolidated. */

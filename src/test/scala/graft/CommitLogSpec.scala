@@ -106,17 +106,15 @@ class CommitLogSpec extends SparkSpec {
       Seq((bid, 1)).toDF("id", "n").write.mode("overwrite")
         .parquet(s"${log.root}/t/batch=$bid")
     }
+  private def emptyT: DataFrame = Seq.empty[(String, Int)].toDF("id", "n")
   private def compact(log: CommitLog, crashData: Boolean = false): Int =
     log.compact(Seq("t")) { (cid, committed) =>
-      spark.read.parquet(s"${log.root}/t")
-        .where(col("batch").cast("string").isin(committed: _*)).drop("batch")
+      log.scan("t", emptyT, committed)
         .write.mode("overwrite").parquet(s"${log.root}/t/batch=$cid")
       if (crashData) throw new Crash
     }
-  private def indexView(log: CommitLog): (Seq[String], Seq[String]) = {
-    val committed = log.read().committed
-    (committed, rows(spark.read.parquet(log.batchDirs("t", committed): _*)))
-  }
+  private def indexView(log: CommitLog): (Seq[String], Seq[String]) =
+    (log.read().committed, rows(log.scan("t", emptyT)))
   private def isMarker(p: Path) = p.getParent.getName == "_commits"
 
   test("commit is exclusive: of two writers of one id exactly one commits", Stateful) {
@@ -154,12 +152,10 @@ class CommitLogSpec extends SparkSpec {
       def step(s: String, id: Long): Unit = if (s == crashAt && id == 2L) throw new Crash
       ids.foreach { id =>
         val batch = Seq(("a", id), ("b", 10 * id)).toDF("k", "x")
-        log.fold(id) { v =>
-          val prev = v.fold(Seq.empty[(String, Long)].toDF("k", "x"))(v =>
-            spark.read.parquet(s"$dir/v=$v/state"))
+        log.fold(id) { prev =>
           batch.write.mode("overwrite").parquet(s"$dir/log/batch=$id")
           step("slice", id)
-          prev.unionByName(batch).groupBy("k").agg(sum("x").as("x"))
+          prev("state", Seq.empty[(String, Long)].toDF("k", "x")).unionByName(batch).groupBy("k").agg(sum("x").as("x"))
             .write.mode("overwrite").parquet(s"$dir/v=$id/state")
           step("state", id)
         } { done => step("gc", id); spark.emptyDataFrame }
@@ -167,7 +163,7 @@ class CommitLogSpec extends SparkSpec {
     }
     def foldView(log: CommitLog): (Seq[String], Seq[String], Seq[String]) = {
       val done = log.read().versions
-      (rows(spark.read.parquet(log.batchDirs("log", done.map(_.toString)): _*)),
+      (rows(log.scan("log", Seq.empty[(String, Long)].toDF("k", "x"), done.map(_.toString))),
         rows(spark.read.parquet(s"${log.root}/v=${done.last}/state")),
         new java.io.File(log.root).list().filter(_.startsWith("v=")).sorted.toSeq)
     }
@@ -204,10 +200,42 @@ class CommitLogSpec extends SparkSpec {
       }
       intercept[Crash](compact(log, crashData = crashAt == "data"))
       compact(log) // resume
+      val skips = graft.metrics.Metrics.counter("commitlog_replay_skips_total")
+      val skipped = skips.sum()
       assert(!append(log, "1"), s"replay after a $crashAt crash must skip")
+      assert(skips.sum() == skipped + 1, "a replay skip is counted once")
       assert(append(log, "3"))
       assert(indexView(log) == wantIdx, s"crash after compaction $crashAt")
     }
+  }
+
+  test("scan lists only committed batches: a torn dir and a compacted-away dir stay unread",
+    Stateful) {
+    val fs = faultyFs()
+    val log = new CommitLog(fs, tmp())
+    Seq("0", "1").foreach(append(log, _))
+    // the compaction commits c0, then crashes before collecting 0 and 1
+    fs.armed = Some((isMarker, true))
+    intercept[Crash](compact(log))
+    assert(new java.io.File(s"${log.root}/t/batch=0").isDirectory)
+    // a torn append: data on disk, no marker
+    Seq(("5", 1)).toDF("id", "n").write.parquet(s"${log.root}/t/batch=5")
+    assert(log.read().committed == Seq("c0"))
+    assert(rows(log.scan("t", emptyT)) == Seq("0|1", "1|1"))
+    val roots = log.scan("t", emptyT).queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    assert(roots == Seq("batch=c0"), roots)
+  }
+
+  test("scan of a table with nothing committed is the declared empty frame", Stateful) {
+    val log = CommitLog(spark, tmp())
+    Seq(("0", 1)).toDF("id", "n").write.parquet(s"${log.root}/t/batch=0") // torn
+    val declared = Seq.empty[(String, Long)].toDF("id", "n")
+    val got = log.scan("t", declared)
+    assert(got.schema == declared.schema && got.isEmpty)
+    assert(log.state(None, "carry", declared).schema == declared.schema)
   }
 
   test("a crash writing a compaction marker's body commits nothing; the rerun compacts",
@@ -320,5 +348,40 @@ class CommitLogSpec extends SparkSpec {
     betSizingBatch(spark, bet, 0L, bets, betCfg)
     check(s"$bet/sizes/batch=0", emptySizes(spark, betCfg))
     check(s"$bet/v=0/carry", emptyBetCarry(spark, betCfg))
+  }
+
+  test("index and drift tables are written with the schema their scans declare", Stateful) {
+    import graft.operators.{Dedup, DriftMonitor, Similarity}
+    import org.apache.spark.sql.types.StructType
+    def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSeq
+    def check(dir: String, id: String, columns: String): Unit =
+      assert(fields(spark.read.parquet(dir).schema) ==
+        fields(StructType.fromDDL(s"$id long, $columns")), dir)
+
+    val docs = (0 until 12).map(i =>
+      (i.toLong, (0 until 20).map(j => s"w${(i * 3 + j) % 17}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val mh = tmp()
+    assert(Dedup.writeMinhashIndex(docs, "text", "doc_id", mh, batchId = "0"))
+    for ((t, cols) <- Dedup.MinhashTables) check(s"$mh/$t/batch=0", "id", cols)
+    val ct = tmp()
+    assert(Dedup.writeContainmentIndex(docs, "text", "doc_id", ct, batchId = "0"))
+    for ((t, cols) <- Dedup.ContainmentTables) check(s"$ct/$t/batch=0", "id", cols)
+
+    val emb = (0 until 32).map(i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * 2.0 + j).toFloat)))
+      .toDF("vec_id", "embedding")
+    val ivf = tmp()
+    Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", ivf,
+      nCells = 2, m = 2, ksub = 2, iters = 1)
+    check(s"$ivf/vectors/batch=0", "vec_id", Similarity.IvfPqVectorColumns)
+
+    val obs = (0 until 40).map(i => (if (i % 2 == 0) "a" else "b", i.toDouble))
+      .toDF("k", "x")
+    val drift = tmp()
+    DriftMonitor.writeDriftReference(obs, Seq("k"), "x", drift, bins = 4)
+    assert(DriftMonitor.driftBatch(obs, Seq("k"), "x", drift, "1", bins = 4))
+    assert(fields(spark.read.parquet(s"$drift/cur/batch=1").schema) ==
+      fields(DriftMonitor.driftCurSchema(spark.read.parquet(s"$drift/bounds").schema, Seq("k"))))
   }
 }

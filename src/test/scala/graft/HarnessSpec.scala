@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
 
-/** The mains around the engine: Bench's per-query harness, and the rule
-  * that every main is documented where users look for it. */
+/** The mains around the engine: Bench's per-query harness, the rule
+  * that every main is documented where users look for it, and the rule
+  * that one module reads committed batches. */
 class HarnessSpec extends SparkSpec {
 
   test("Bench.run records each query's layers; a failing query lands in failed_queries") {
@@ -40,5 +41,14 @@ class HarnessSpec extends SparkSpec {
     assert(mains.contains("graft.Bench"), mains)
     val orphans = mains.filterNot(m => table.contains(s"`$m`"))
     assert(orphans.isEmpty, s"mains missing from README's run table: $orphans")
+  }
+
+  test("only CommitLog reads a `_commits` table by its batch partition") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val readers = try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.endsWith(Paths.get("store/CommitLog.scala")))
+      .filter(p => Files.readString(p).contains("col(\"batch\")"))
+      .map(_.toString).toList finally walk.close()
+    assert(readers.isEmpty, s"filter committed batches through CommitLog.scan: $readers")
   }
 }

@@ -457,13 +457,30 @@ class PlanSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     graft.operators.Similarity.writeIvfPqIndex(df, "embedding", "vec_id",
       s"$dir/idx", nCells = 8, m = 4, ksub = 8, iters = 1)
+    assert(graft.operators.Similarity.appendToIvfPqIndex(df.limit(16), "embedding",
+      "vec_id", s"$dir/idx", batchId = "1"))
+    // an uncommitted append beside the committed ones: data, no marker
+    df.limit(16).write.parquet(s"$dir/idx/vectors/batch=2/cell=0")
     val out = graft.operators.Similarity.knnIvfPqBatch(spark, s"$dir/idx",
       df.limit(3), "vec_id", "embedding", k = 5, nProbe = 2, rerank = 20)
     val plan = planOf(out)
-    // corpus scans prune to probed cells (and committed batches)
+    // corpus scans prune to probed cells, and list only the committed
+    // batch dirs: the uncommitted one is never a root
     val pf = "PartitionFilters: \\[[^\\]]*".r.findAllIn(plan).toList
-    assert(pf.nonEmpty && pf.forall(p => p.contains("cell") && p.contains("batch")),
-      s"batch probe must prune cell+batch partitions: $pf")
+    assert(pf.nonEmpty && pf.forall(_.contains("cell")),
+      s"batch probe must prune cell partitions: $pf")
+    val scans = out.queryExecution.executedPlan.collect {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+    }.headOption.getOrElse(out.queryExecution.executedPlan).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.nonEmpty)
+    scans.foreach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "cell")),
+        s"every vectors scan carries a cell filter: ${s.partitionFilters}")
+      assert(s.relation.location.rootPaths.map(_.getName).toSet == Set("batch=0", "batch=1"),
+        s"vectors roots must be the committed batch dirs: ${s.relation.location.rootPaths}")
+    }
     // per-query rankings window on query_id — never a global sort
     val specs = "windowspecdefinition\\(([^,]+),".r
       .findAllIn(plan).matchData.map(_.group(1)).toList
