@@ -9473,7 +9473,6 @@ object Queries {
     (s, dir) => {
       val out = Similarity.removeTopComponent(t(s, dir, "embeddings"),
         "embedding", "vec_id", iters = 5)
-      GraftFunctions.register(s)
       out.select(col("vec_id"),
           round(col("top_score"), 6).as("top_score"),
           round(sqrt(call_function(GraftFunctions.DotName,

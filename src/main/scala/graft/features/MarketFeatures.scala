@@ -33,12 +33,6 @@ object MarketFeatures {
     * `dropnaFinal`, mirroring the factory's final mask
     * (`market_factory.py:151-155`). */
   def build(ohlcv: DataFrame, dropnaFinal: Boolean = true): DataFrame = {
-    // register on the FRAME's session, not SparkSession.active: inside a
-    // streaming foreachBatch the micro-batch frame belongs to the
-    // query's cloned session, whose registry is the one the analyzer
-    // consults — registering on the outer session leaves graft_ewm_mean
-    // unresolvable there
-    org.apache.spark.sql.graft.GraftFunctions.register(ohlcv.sparkSession)
     val w = W.series(seriesKeys, Seq("timestamp"))
     val close = col("close")
 

@@ -155,9 +155,11 @@ object windows {
   /** pandas `ewm(alpha=α, adjust=False).mean()` — custom Catalyst window
     * expression (W12), exact recurrence, O(1) state per series. Resolution
     * goes through the function registry (the same path as built-in window
-    * functions) so the analyzer sees ordinary unresolved children. */
+    * functions) so the analyzer sees ordinary unresolved children; every
+    * session's registry carries `graft_ewm_mean` from the start
+    * ([[org.apache.spark.sql.graft.GraftExtensions]]), so the column
+    * resolves in whichever session analyzes the frame. */
   def ewmMean(x: Column, alpha: Double, w: WindowSpec): Column = {
-    GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function(GraftFunctions.EwmMeanName, x, lit(alpha)).over(w)
   }
 
@@ -172,7 +174,6 @@ object windows {
     * same registry path as [[ewmMean]]. */
   def kalmanBeta(x: Column, y: Column, q: Double, r: Double, p0: Double,
                  w: WindowSpec): Column = {
-    GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function(GraftFunctions.KalmanBetaName, x, y,
       lit(q), lit(r), lit(p0)).over(w)
   }
@@ -184,7 +185,6 @@ object windows {
     * registry path as [[ewmMean]]. Null/zero signs carry the state. */
   def regimeProb(sign: Column, a01: Double, a10: Double,
                  u0: Double, u1: Double, w: WindowSpec): Column = {
-    GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function(GraftFunctions.RegimeProbName, sign,
       lit(a01), lit(a10), lit(u0), lit(u1)).over(w)
   }
@@ -199,7 +199,6 @@ object windows {
     * class `ln` skew dies before the recursion. Null squares carry. */
   def garchVariance(x2: Column, omega: Column, alpha: Double, beta: Double,
                     w: WindowSpec): Column = {
-    GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function(GraftFunctions.GarchVarianceName, x2, omega,
       lit(alpha), lit(beta)).over(w)
   }
@@ -215,7 +214,6 @@ object windows {
   def lzComplexity(sign: Column, w: WindowSpec,
       maxTape: Int = org.apache.spark.sql.graft.LzComplexity.DefaultMaxTape)
       : Column = {
-    GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function(GraftFunctions.LzComplexityName, sign, lit(maxTape)).over(w)
   }
 

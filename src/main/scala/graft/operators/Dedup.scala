@@ -47,8 +47,6 @@ object Dedup {
     * also re-evaluated inline tokenizers per element (round-1 thread-dump
     * finding), a hazard the expression form removes entirely. */
   def shingles(toks: Column, n: Int): Column = {
-    org.apache.spark.sql.graft.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     call_function(org.apache.spark.sql.graft.GraftFunctions.ShinglesName,
       toks, lit(n))
   }
@@ -95,7 +93,6 @@ object Dedup {
     * Collision odds at corpus scale: ~|shingles|²/2⁴⁹ — ~2·10⁻⁵ at 10⁵
     * distinct shingles, the same accepted-odds class as [[exactDedup]]. */
   def shingleHashArrays(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     shingleArrays(df, textCol, idCol, n)
       .select(col("id"), array_sort(call_function(
         org.apache.spark.sql.graft.GraftFunctions.Hash48ArrayName,
@@ -149,16 +146,19 @@ object Dedup {
     * identical docs (adversarial or just a boilerplate page crawled 10k
     * times) put ~5·10⁷ pairs on a single straggler — the one remaining
     * scale-killer in the dedup path at corpus scale. Buckets over
-    * `maxBucketSize` are dropped with a logged warning: their members
-    * are near-identical EN MASSE, which [[exactDedup]] already catches
-    * for the identical case, and genuinely-distinct docs still meet in
-    * their other (non-hot) bands/tables. Detection is one map-side-
-    * combined count over the bucket keys (16 B rows); the hot set is
-    * checkpointed (it is tiny by construction — ≤ rows/maxBucketSize
-    * keys) and broadcast-anti-joined away. `maxBucketSize <= 0`
-    * disables the cap. The detection count is an eager job — callers
-    * that loop should pass `cache = true` upstream so the scan it
-    * shares with the main query is materialized once. */
+    * `maxBucketSize` are dropped and counted in
+    * `dedup_hot_buckets_dropped_total{operator=what}`
+    * ([[graft.metrics.Metrics]]): their members are near-identical EN
+    * MASSE, which [[exactDedup]] already catches for the identical case,
+    * and genuinely-distinct docs still meet in their other (non-hot)
+    * bands/tables. Detection is one map-side-combined count over the
+    * bucket keys (16 B rows); the hot set is checkpointed (it is tiny by
+    * construction — ≤ rows/maxBucketSize keys) and broadcast-anti-joined
+    * away. `maxBucketSize <= 0` disables the cap. The detection count is
+    * an eager job that shares its input scan with the main query; with
+    * `cache = true` upstream that scan is materialized once, and callers
+    * that loop in a long-lived session pass `cache = false` (see
+    * [[cached]]) and recompute it instead of pinning blocks per call. */
   private def capHotBuckets(buckets: DataFrame, keyCols: Seq[String],
                             maxBucketSize: Int, what: String): DataFrame = {
     if (maxBucketSize <= 0) return buckets
@@ -170,9 +170,8 @@ object Dedup {
     val nHot = hot.count()
     if (nHot == 0) buckets
     else {
-      System.err.println(s"[dedup] $what: dropping $nHot hot bucket(s) over " +
-        s"$maxBucketSize rows — a self-join there would square into a " +
-        "straggler task; mass-identical members are caught by exactDedup")
+      graft.metrics.Metrics.counter("dedup_hot_buckets_dropped_total",
+        Map("operator" -> what)).add(nHot)
       buckets.join(broadcast(hot), keyCols, "left_anti")
     }
   }
@@ -234,7 +233,6 @@ object Dedup {
     * joins drop nothing the old inner joins kept. */
   private def verifyByOverlap(cands: DataFrame, arrs: DataFrame,
                               threshold: Double): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(arrs.sparkSession)
     cands
       .join(arrs.select(col("id").as("id_a"), col("hs").as("_ha"),
         col("n").as("na")), "id_a")
@@ -687,7 +685,6 @@ object Dedup {
     // now survives to the threshold filter with jaccard 0 instead of
     // dropping at the inner overlap join — identical output for any
     // threshold > 0 (every declared use is 0.8).
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val idxArrs = index("postings")
       .select(col("id").as("old_id"), col("h"))
       .join(cands.select("old_id"), Seq("old_id"), "left_semi") // semi-join: no distinct needed
@@ -845,7 +842,6 @@ object Dedup {
     // every candidate shares ≥1 non-hot hash with its mate by
     // construction (it met it in the prefix h-join), so the inner joins
     // drop nothing the old inner joins kept.
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val candIds = allCands.select(col("id_a").as("id"))
       .unionByName(allCands.select(col("id_b").as("id"))) // semi-join target: no distinct needed
     val idxArrs = idxPos.select(col("id"), col("h"))
@@ -1165,7 +1161,6 @@ object Dedup {
                               fpp: Double = 1e-4): DataFrame = {
     require(minSharedSpans >= 1 && fpp > 0 && fpp < 1,
       s"bad minSharedSpans=$minSharedSpans fpp=$fpp")
-    val spark = corpus.sparkSession
     val evalHashes = shingleRows(evalSet, textCol, idCol, n)
       .select(xxhash64(col("s")).as("h")).distinct()
     val nEval = math.max(1L, evalHashes.count())
@@ -1175,7 +1170,6 @@ object Dedup {
       bf.writeTo(bos)
       bos.toByteArray
     }
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     shingleRows(corpus, textCol, idCol, n)
       .select(col("id"), xxhash64(col("s")).as("h"))
       .where(call_function(

@@ -786,15 +786,6 @@ object MarketIncremental {
                          dropnaFinal: Boolean = true)
       : (DataFrame, DataFrame) = {
     import graft.functions.{windows => W, TaIndicators => TA}
-    // register the function pack on BOTH sessions in play: inside a
-    // streaming foreachBatch the batch belongs to the query's cloned
-    // session while the carry (read from state) belongs to the outer
-    // one — the union binds to the carry's session, whose analyzer is
-    // the one that must resolve graft_ewm_mean (SparkSession.active in
-    // the micro-batch thread is the CLONE, so the windows.ewmMean
-    // fallback registration alone misses the outer session)
-    org.apache.spark.sql.graft.GraftFunctions.register(batch.sparkSession)
-    org.apache.spark.sql.graft.GraftFunctions.register(carry.sparkSession)
     val spark = carry.sparkSession
     val K = cfg.keys
     // r14: the carry rides the fold as DRIVER ROWS ([[DriverLoop]]). It

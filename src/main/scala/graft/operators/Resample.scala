@@ -142,7 +142,6 @@ object Resample {
                     tiebreakCol: String, keys: Seq[String],
                     threshold: Long): DataFrame = {
     require(threshold > 0L, s"threshold must be positive, got $threshold")
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     val wRun = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tiebreakCol))
@@ -191,7 +190,6 @@ object Resample {
               tiebreakCol: String, keys: Seq[String],
               threshold: Long): DataFrame = {
     require(threshold > 0L, s"threshold must be positive, got $threshold")
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     val wRun = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tiebreakCol))

@@ -32,7 +32,6 @@ object Similarity {
     * array<float> or array<double>; elements are cast to double and summed
     * in index order — bit-identical to the DuckDB oracle's left fold. */
   def dot(a: Column, b: Column): Column = {
-    GraftFunctions.register(SparkSession.active)
     call_function(GraftFunctions.DotName, a, b)
   }
 
@@ -102,7 +101,6 @@ object Similarity {
     val flat = typedlit(for {
       t <- 0 until tables; p <- 0 until planes; d <- 0 until probed
     } yield planeWeight(t, p, d))
-    GraftFunctions.register(df.sparkSession)
     val sigs = call_function(GraftFunctions.LshSigsName,
       toDoubleVec(col(vecCol)), flat, lit(planes), lit(tables))
     df.select(col(idCol).as("id"),
@@ -304,7 +302,6 @@ object Similarity {
     // one fused codegen argmax over all centroids — k sibling DotProducts
     // would overflow Janino past k≈64 and drop to interpreted eval, and
     // semantic dedup wants k to grow with the corpus (cluster ≈ repCap)
-    GraftFunctions.register(df.sparkSession)
     val assigned = e.withColumn("cluster_id",
       call_function(GraftFunctions.NearestCentroidName, col("v"),
         typedlit(cents.flatten), lit(cents.size)).cast("long"))
@@ -366,7 +363,6 @@ object Similarity {
       .orderBy("vec_id").limit(k)
       .collect().toIndexedSeq.map(_.getSeq[Double](1))
     if (cents.isEmpty) return cents
-    GraftFunctions.register(df.sparkSession)
     for (_ <- 1 to iters) {
       val sums = e.withColumn("cluster_id",
           call_function(GraftFunctions.NearestCentroidName, col("v"),
@@ -426,7 +422,6 @@ object Similarity {
     val cents = kmeansCentroids(df, vecCol, idCol, k, iters, trainFraction)
     if (cents.isEmpty)
       return e.select(col("vec_id"), lit(null).cast("long").as("cluster_id"))
-    GraftFunctions.register(df.sparkSession)
     e.withColumn("cluster_id",
         call_function(GraftFunctions.NearestCentroidName, col("v"),
           typedlit(cents.flatten), lit(cents.size)).cast("long"))
@@ -566,8 +561,6 @@ object Similarity {
                          iters: Int = 5,
                          trainFraction: Double = 1.0): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
-    val spark = df.sparkSession
-    GraftFunctions.register(spark)
     val e = df.select(col(idCol).as("vec_id"), toDoubleVec(col(vecCol)).as("v"))
     val clean = lowestHashSample(
       e.where(col("v").isNotNull && forall(col("v"), x => x.isNotNull)),
@@ -675,7 +668,6 @@ object Similarity {
         d += 1
       }
     }
-    GraftFunctions.register(df.sparkSession)
     for (_ <- 1 to iters) {
       val sums = e
         .withColumn("codes", call_function(GraftFunctions.PqCodesName,
@@ -703,7 +695,6 @@ object Similarity {
     * get null codes. `m` ints per row replace the full vector. */
   def pqEncode(df: DataFrame, vecCol: String, idCol: String,
                book: Array[Double], m: Int, ksub: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("vec_id"),
       call_function(GraftFunctions.PqCodesName, toDoubleVec(col(vecCol)),
         typedlit(book.toSeq), lit(m), lit(ksub)).as("codes"))
@@ -776,7 +767,6 @@ object Similarity {
     val spark = df.sparkSession
     val cents = kmeansCentroids(df, vecCol, idCol, nCells, iters, trainFraction)
     require(cents.nonEmpty, "writeIvfPqIndex: no non-null vectors to index")
-    GraftFunctions.register(spark)
     val centsLit = typedlit(cents.map(_.toIndexedSeq))
     def cellOf(v: Column): Column =
       call_function(GraftFunctions.NearestCentroidName, v,
@@ -816,7 +806,6 @@ object Similarity {
   private def ivfEncode(df: DataFrame, vecCol: String, idCol: String,
                         cents: IndexedSeq[Seq[Double]], book: Array[Double],
                         m: Int, ksub: Int, residual: Boolean): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val centsLit = typedlit(cents.map(_.toIndexedSeq))
     val encoded = df
       .select(col(idCol).as("vec_id"), toDoubleVec(col(vecCol)).as("v"))
@@ -954,7 +943,6 @@ object Similarity {
       }
       .sortBy { case (cell, cos) => (-cos, cell) }
       .take(nProbe).map(_._1)
-    GraftFunctions.register(spark)
     // the scan lists only committed batch dirs (torn appends are never
     // opened) and `cell IN (…)` prunes the unprobed cell dirs below them
     val probe = ix.vectors.where(col("vec_id") =!= queryId)
@@ -1019,7 +1007,6 @@ object Similarity {
     require(rerank >= k, s"rerank must be >= k, got $rerank (k=$k)")
     val ix = new IvfPq(spark, indexPath)
     val (ksub, book, cents) = (ix.ksub, ix.book, ix.cents)
-    GraftFunctions.register(spark)
     val centsLit = typedlit(cents.map(_.toIndexedSeq))
     val dim = cents.head.length
     // materialize the query frame ONCE: the pipeline below consumes it
@@ -1293,7 +1280,6 @@ object Similarity {
     require(vectors.forall(f => f.columns.contains("vec_id") && f.columns.contains("v")),
       s"vectors must be a (vec_id, v) frame, got (${vectors.map(_.columns.mkString(", ")).getOrElse("")})")
     val table = adcTable(book, m, ksub, queryVec)
-    GraftFunctions.register(encoded.sparkSession)
     val adc = encoded
       .where(col("vec_id") =!= queryId && col("codes").isNotNull)
       .select(col("vec_id"),

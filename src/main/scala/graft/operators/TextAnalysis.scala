@@ -1055,8 +1055,6 @@ object TextAnalysis {
     * Documents never contain U+0001 (it is a C0 control; scrub upstream
     * if yours do). */
   def cdcSegments(toks: Column, divisor: Int): Column = {
-    org.apache.spark.sql.graft.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     call_function(org.apache.spark.sql.graft.GraftFunctions.CdcSegmentsName,
       toks, lit(divisor))
   }
@@ -1143,7 +1141,6 @@ object TextAnalysis {
                      minTokens: Int = 8): DataFrame = {
     require(minTokens >= 2,
       s"minTokens must be >= 2 (1 would dedup the vocabulary), got $minTokens")
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     val L = minTokens
     // spread single-file scans AND pre-partition on doc_id in the same
     // exchange: the rebuild join below reuses this partitioning, so the
@@ -1218,7 +1215,6 @@ object TextAnalysis {
   def dupNgramRate(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 8): DataFrame = {
     require(n >= 2, s"n must be >= 2 (1 would score the vocabulary), got $n")
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
     val occ = base.select(col("doc_id"),
       explode(call_function(
@@ -1262,7 +1258,6 @@ object TextAnalysis {
   def ngramNovelty(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 8): DataFrame = {
     require(n >= 2, s"n must be >= 2 (1 would score the vocabulary), got $n")
-    org.apache.spark.sql.graft.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("doc_id"),
       split3(col(idCol)).as("split"), tokens(col(textCol)).as("toks"))
     val occ = base.select(col("doc_id"), col("split"),

@@ -328,7 +328,6 @@ object ScaleRehearsal {
         // labels while scoring the same objective — the claim under test
         // is "sampled training loses no quality", which IS the objective.
         def objective(cents: IndexedSeq[Seq[Double]]): Double = {
-          org.apache.spark.sql.graft.GraftFunctions.register(spark)
           val cl = typedlit(cents)
           vecs.select(Similarity.toDoubleVec(col("embedding")).as("v"))
             .withColumn("cid", call_function(

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSessionExtensions, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -451,7 +452,8 @@ object LzComplexity {
   * NOTE: `expression(col)` yields a *lazy* `ColumnNodeExpression` wrapper
   * that reports `resolved = true` before analysis — embedding it as the
   * child of a custom Expression breaks CheckAnalysis. Custom expressions
-  * must instead go through [[GraftFunctions.register]] +
+  * are instead named in [[GraftFunctions.builders]] (which every session
+  * carries through [[GraftExtensions]]) and called with
   * `functions.call_function`, which hands the analyzer ordinary unresolved
   * children (the same path Spark's own window functions take). */
 object CatalystBridge {
@@ -459,9 +461,10 @@ object CatalystBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Registers graft's custom Catalyst expressions in a session's function
-  * registry so they are callable from both the Column API
-  * (`functions.call_function("graft_ewm_mean", x, lit(a))`) and plain SQL. */
+/** Names and builders of graft's custom Catalyst expressions, callable
+  * from both the Column API
+  * (`functions.call_function("graft_ewm_mean", x, lit(a))`) and plain SQL
+  * in every session (see [[GraftExtensions]]). */
 object GraftFunctions {
   val EwmMeanName = "graft_ewm_mean"
   val ThresholdBarIdName = "graft_threshold_bar_id"
@@ -505,88 +508,71 @@ object GraftFunctions {
       throw new IllegalArgumentException(s"ewm alpha must be a literal, got $other")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(EwmMeanName,
-      exprs => EwmMean(exprs.head, evalAlpha(exprs(1))), "built-in")
-    registry.createOrReplaceTempFunction(ThresholdBarIdName,
-      exprs => ThresholdBarId(exprs.head, exprs(1) match {
-        case Literal(v: Long, _) => v
-        case Literal(v: Int, _) => v.toLong
-        case other if other.foldable => other.eval() match {
-          case l: Long => l
-          case i: Int => i.toLong
-          case v => throw new IllegalArgumentException(
-            s"threshold must be an integer literal, got $v")
-        }
-        case other => throw new IllegalArgumentException(
-          s"threshold must be a literal, got $other")
-      }), "built-in")
-    registry.createOrReplaceTempFunction(RunBarIdName,
-      exprs => RunBarId(exprs.head, exprs(1) match {
-        case Literal(v: Long, _) => v
-        case Literal(v: Int, _) => v.toLong
-        case other if other.foldable => other.eval() match {
-          case l: Long => l
-          case i: Int => i.toLong
-          case v => throw new IllegalArgumentException(
-            s"threshold must be an integer literal, got $v")
-        }
-        case other => throw new IllegalArgumentException(
-          s"threshold must be a literal, got $other")
-      }), "built-in")
-    registry.createOrReplaceTempFunction(KalmanBetaName,
-      exprs => KalmanBeta(exprs.head, exprs(1), evalAlpha(exprs(2)),
-        evalAlpha(exprs(3)), evalAlpha(exprs(4))), "built-in")
-    registry.createOrReplaceTempFunction(RegimeProbName,
-      exprs => RegimeProb(exprs.head, evalAlpha(exprs(1)),
-        evalAlpha(exprs(2)), evalAlpha(exprs(3)), evalAlpha(exprs(4))), "built-in")
-    registry.createOrReplaceTempFunction(GarchVarianceName,
-      exprs => GarchVariance(exprs.head, exprs(1), evalAlpha(exprs(2)),
-        evalAlpha(exprs(3))), "built-in")
-    registry.createOrReplaceTempFunction(LzComplexityName,
-      exprs => LzComplexity(exprs.head,
-        if (exprs.length > 1) exprs(1) match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) => v.toInt
-          case other if other.foldable => other.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case v => throw new IllegalArgumentException(
-              s"lz_complexity maxTape must be an integer literal, got $v")
-          }
-          case other => throw new IllegalArgumentException(
-            s"lz_complexity maxTape must be a literal, got $other")
-        } else LzComplexity.DefaultMaxTape), "built-in")
-    registry.createOrReplaceTempFunction(DotName,
-      exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(LshSigsName,
-      exprs => LshSignatures(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
-    registry.createOrReplaceTempFunction(ShinglesName,
-      exprs => Shingles(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(WindowHashesName,
-      exprs => WindowHashes(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(Hash48ArrayName,
-      exprs => Hash48Array(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(SortedOverlapName,
-      exprs => SortedOverlap(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(CdcSegmentsName,
-      exprs => CdcSegments(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(NearestCentroidName,
-      exprs => NearestCentroid(exprs.head, exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(PqCodesName,
-      exprs => PqAssignCodes(exprs.head, exprs(1), exprs(2), exprs(3),
-        exprs.lift(4)), "built-in")
-    registry.createOrReplaceTempFunction(PqAdcName,
-      exprs => PqAdcDistance(exprs.head, exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(PqDecodeName,
-      exprs => PqDecode(exprs.head, exprs(1), exprs(2), exprs.lift(3)), "built-in")
-    registry.createOrReplaceTempFunction(GramUpperName,
-      exprs => GramUpper(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(RemoveComponentName,
-      exprs => RemoveComponent(exprs.head, exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(MightContainName,
-      exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
+  private def evalThreshold(e: Expression): Long = e match {
+    case Literal(v: Long, _) => v
+    case Literal(v: Int, _) => v.toLong
+    case other if other.foldable => other.eval() match {
+      case l: Long => l
+      case i: Int => i.toLong
+      case v => throw new IllegalArgumentException(
+        s"threshold must be an integer literal, got $v")
+    }
+    case other => throw new IllegalArgumentException(
+      s"threshold must be a literal, got $other")
   }
+
+  /** Every graft function: its name and the builder the analyzer calls
+    * with the call's argument expressions. */
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    EwmMeanName -> (exprs => EwmMean(exprs.head, evalAlpha(exprs(1)))),
+    ThresholdBarIdName -> (exprs => ThresholdBarId(exprs.head, evalThreshold(exprs(1)))),
+    RunBarIdName -> (exprs => RunBarId(exprs.head, evalThreshold(exprs(1)))),
+    KalmanBetaName -> (exprs => KalmanBeta(exprs.head, exprs(1), evalAlpha(exprs(2)),
+      evalAlpha(exprs(3)), evalAlpha(exprs(4)))),
+    RegimeProbName -> (exprs => RegimeProb(exprs.head, evalAlpha(exprs(1)),
+      evalAlpha(exprs(2)), evalAlpha(exprs(3)), evalAlpha(exprs(4)))),
+    GarchVarianceName -> (exprs => GarchVariance(exprs.head, exprs(1),
+      evalAlpha(exprs(2)), evalAlpha(exprs(3)))),
+    LzComplexityName -> (exprs => LzComplexity(exprs.head,
+      if (exprs.length > 1) exprs(1) match {
+        case Literal(v: Int, _) => v
+        case Literal(v: Long, _) => v.toInt
+        case other if other.foldable => other.eval() match {
+          case i: Int => i
+          case l: Long => l.toInt
+          case v => throw new IllegalArgumentException(
+            s"lz_complexity maxTape must be an integer literal, got $v")
+        }
+        case other => throw new IllegalArgumentException(
+          s"lz_complexity maxTape must be a literal, got $other")
+      } else LzComplexity.DefaultMaxTape)),
+    DotName -> (exprs => DotProduct(exprs.head, exprs(1))),
+    LshSigsName -> (exprs => LshSignatures(exprs.head, exprs(1), exprs(2), exprs(3))),
+    ShinglesName -> (exprs => Shingles(exprs.head, exprs(1))),
+    WindowHashesName -> (exprs => WindowHashes(exprs.head, exprs(1))),
+    Hash48ArrayName -> (exprs => Hash48Array(exprs.head)),
+    SortedOverlapName -> (exprs => SortedOverlap(exprs.head, exprs(1))),
+    CdcSegmentsName -> (exprs => CdcSegments(exprs.head, exprs(1))),
+    NearestCentroidName -> (exprs => NearestCentroid(exprs.head, exprs(1), exprs(2))),
+    PqCodesName -> (exprs => PqAssignCodes(exprs.head, exprs(1), exprs(2), exprs(3),
+      exprs.lift(4))),
+    PqAdcName -> (exprs => PqAdcDistance(exprs.head, exprs(1), exprs(2))),
+    PqDecodeName -> (exprs => PqDecode(exprs.head, exprs(1), exprs(2), exprs.lift(3))),
+    GramUpperName -> (exprs => GramUpper(exprs.head)),
+    RemoveComponentName -> (exprs => RemoveComponent(exprs.head, exprs(1))),
+    MightContainName -> (exprs => BloomFilterMightContain(exprs.head, exprs(1))))
+}
+
+/** Puts [[GraftFunctions.builders]] in the function registry of every
+  * session. Named in `META-INF/services/
+  * org.apache.spark.sql.SparkSessionExtensionsProvider`, so Spark's
+  * `ServiceLoader` applies it when it builds a session, with no config
+  * key; `newSession()` and the clones foreachBatch hands out inherit it. */
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(
+        classOf[GraftExtensions].getName, null, name, null,
+        "", "", "", "", "", "", "built-in"), builder))
+    }
 }

@@ -63,6 +63,23 @@ class CoreSpec extends SparkSpec {
     assert(vals.sorted.zip(expected.sorted).forall { case (a, b) => approx(a, b) })
   }
 
+  test("graft functions resolve in every session") {
+    // a fresh session on which no graft operator has run
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT graft_dot(array(1d, 2d), array(3d, 4d))")
+      .head().getDouble(0) == 11.0)
+    // the Column API resolves in the frame's session, not the active one
+    assert(org.apache.spark.sql.SparkSession.active eq spark)
+    val w = W.series(Seq("symbol"), Seq("timestamp"))
+    val ramp = ohlcvRamp(10)
+    val other = fresh.createDataFrame(
+      java.util.Arrays.asList(ramp.collect(): _*), ramp.schema)
+    def ewm(df: org.apache.spark.sql.DataFrame): Seq[Double] =
+      df.select(col("timestamp"), W.ewmMean(col("close"), 0.5, w).as("e"))
+        .orderBy("timestamp").collect().map(_.getDouble(1)).toSeq
+    assert(ewm(other) == ewm(ramp))
+  }
+
   test("rolling warm-up nulls match pandas min_periods semantics") {
     val w = W.series(Seq("symbol"), Seq("timestamp"))
     val out = hlcRamp(10)

@@ -5,11 +5,14 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSessionExtensionsProvider
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftExtensions
 
 /** The mains around the engine: Bench's per-query harness, the rule
-  * that every main is documented where users look for it, and the rule
-  * that one module reads committed batches. */
+  * that every main is documented where users look for it, the rule
+  * that one module reads committed batches, and the rule that graft's
+  * functions reach every session through one registration point. */
 class HarnessSpec extends SparkSpec {
 
   test("Bench.run records each query's layers; a failing query lands in failed_queries") {
@@ -50,5 +53,19 @@ class HarnessSpec extends SparkSpec {
       .filter(p => Files.readString(p).contains("col(\"batch\")"))
       .map(_.toString).toList finally walk.close()
     assert(readers.isEmpty, s"filter committed batches through CommitLog.scan: $readers")
+  }
+
+  test("graft functions are registered once, by the session extension Spark loads") {
+    val providers = java.util.ServiceLoader.load(classOf[SparkSessionExtensionsProvider])
+      .iterator.asScala.map(_.getClass).toList
+    assert(providers.contains(classOf[GraftExtensions]),
+      s"META-INF/services names no GraftExtensions: $providers")
+    val registration = "(createOrReplaceTemp|inject)Function".r
+    val walk = Files.walk(Paths.get("src"))
+    val registrars = try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.endsWith(Paths.get("graft/EwmMean.scala")))
+      .filter(p => registration.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.toString).toList finally walk.close()
+    assert(registrars.isEmpty, s"register functions through GraftExtensions: $registrars")
   }
 }

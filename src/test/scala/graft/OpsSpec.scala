@@ -734,9 +734,13 @@ class OpsSpec extends SparkSpec {
     val mass = (0 until 300).map(i => (i.toLong, boiler))
     val near = Seq((9000L, doc(5)), (9001L, doc(5) + " tiny tail"))
     val df = (mass ++ near).toDF("doc_id", "text")
+    val dropped = graft.metrics.Metrics.counter("dedup_hot_buckets_dropped_total",
+      Map("operator" -> "minhashNearDupPairs"))
+    val droppedBefore = dropped.sum()
     val pairs = Dedup.minhashNearDupPairs(df, "text", "doc_id",
         maxBucketSize = 50)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(dropped.sum() > droppedBefore, "the cap must count the buckets it drops")
     assert(pairs.contains((9000L, 9001L)), "cold-bucket near-dups must survive the cap")
     assert(!pairs.exists { case (a, b) => a < 300 && b < 300 },
       "hot buckets must be dropped from the band join")
@@ -1072,7 +1076,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("custom expressions are callable from SQL text (registry surface)") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val dot = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head.getDouble(0)
     assert(dot == 11.0)
@@ -1188,7 +1191,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graft_window_hashes: per-position hashes equal the built-in xxhash64 spelling; empty below L") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val docs = Seq((1L, "a b c d e"), (2L, "x y"), (3L, "p q r")).toDF("doc_id", "text")
     val toks = split(trim(col("text")), "\\s+")
     val out = docs.select(col("doc_id"),
@@ -1206,7 +1208,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graft_hash48_array: per-element hashes equal the md5 Column spelling; nulls ride through") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, Seq[String]("alpha", "beta", "", "alpha")),
       (2L, Seq[String]()),
@@ -1231,7 +1232,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graft_sorted_overlap: merge count equals the posting-explode equi-join count") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val pairs = Seq(
       (1L, Seq(1L, 2L, 2L, 3L, 5L), Seq(2L, 2L, 3L, 3L, 7L)), // runs: 2·2 + 1·2 = 6
       (2L, Seq(1L, 4L, 9L), Seq(2L, 3L, 10L)),                // disjoint: 0
@@ -1257,7 +1257,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graft_cdc_segments: segments equal the sentinel-split Column spelling on every edge") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val divisor = 4
     // probe tokens so every branch fires: boundaries mid-array and at the
     // tail, empty-string tokens, a null token, a doc with no boundary
@@ -2236,7 +2235,6 @@ class OpsSpec extends SparkSpec {
       s"residual IVF-PQ recall@10 at rerank=50 too low (got=$got exact=$exact)")
     // unit contract of the offset argument: codes(v, offset=o) must equal
     // codes(v − o) with no offset
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     import org.apache.spark.sql.graft.GraftFunctions.PqCodesName
     val book = Similarity.pqTrain(emb, "embedding", "vec_id", m = 16, ksub = 16, iters = 1)
     val off = (0 until 64).map(d => 0.125 * ((d % 4) - 1.5))
